@@ -295,9 +295,17 @@ object QueriesTemporal {
       diff.filter(pmod(col("o_orderkey"), lit(3)) =!= 0)
         .coalesce(1).write.mode("append").parquet(feed)
       val ckpt = GraftSession.freshGatePath("cdcckpt", dir)
-      val q = EventsStream.streamCdcApply(
-        s, snap, feed, diff.schema, ckpt, Seq("o_orderkey"), Seq("status", "cents"))
-      q.awaitTermination()
+      EventsStream.foreachIncrement(s, feed, diff.schema, ckpt, maxFilesPerTrigger = Some(1)) {
+        (b, _) =>
+          // EAGER checkpoint, deliberately (r20 lazy sweep skipped
+          // this one): the fold below OVERWRITES snap — base's blocks
+          // must be fully materialized BEFORE the write deletes the
+          // files they came from, or the job would scan a directory
+          // it is truncating
+          val base = s.read.parquet(snap).localCheckpoint()
+          graft.ops.ChangeCapture.applyChanges(base, b, Seq("o_orderkey"), Seq("status", "cents"))
+            .write.mode("overwrite").parquet(snap)
+      }.awaitTermination()
       s.read.parquet(snap)
         .groupBy(col("status"))
         .agg(count(lit(1)).as("n"),
@@ -422,7 +430,6 @@ object QueriesTemporal {
     // the oracle semantics, so one SQL gates both flavors.
     "s9_stream_bloom" -> ((s, dir) => {
       import graft.ops.Sketches
-      import graft.streaming.EventsStream
       val (m, kh) = (32768, 3)
       val orders = table(s, dir, "orders")
       val sketchPath = GraftSession.freshGatePath("bloomidx", dir)
@@ -431,14 +438,12 @@ object QueriesTemporal {
       val probe = table(s, dir, "customer").select(col("c_custkey"), col("c_mktsegment"))
       val probeDir = GraftSession.freshGatePath("bloomstream", dir)
       probe.coalesce(2).write.mode("overwrite").parquet(probeDir)
-      val outDir = GraftSession.freshGatePath("bloomout", dir)
-      val ckpt   = GraftSession.freshGatePath("bloomckpt", dir)
-      val q = EventsStream.streamBloomProbe(s, sketchPath, probeDir, probe.schema,
-        "c_custkey", outDir, ckpt, m, kh)
-      q.awaitTermination()
+      val probed = QueriesScale.streamTwin(s, dir, "bloom", probeDir, probe.schema) { (b, _) =>
+        Sketches.bloomMaybeContains(s.read.parquet(sketchPath), b, "c_custkey", m, kh)
+      }
       val buyers = orders.select(col("o_custkey").as("c_custkey")).distinct()
         .withColumn("has_order", lit(true))
-      s.read.parquet(outDir).join(buyers, Seq("c_custkey"), "left")
+      probed.join(buyers, Seq("c_custkey"), "left")
         .groupBy(col("c_mktsegment"))
         .agg(count(lit(1)).as("n_probed"),
           count(when(col("maybe"), 1)).as("n_maybe"),
@@ -594,11 +599,11 @@ object QueriesTemporal {
     // ---- the same rollup maintenance ONLINE: the increment arrives
     // as a STREAM in two mtime-separate files and each micro-batch
     // folds into the persistent stats table
-    // ([[graft.streaming.EventsStream.streamStatsAppend]],
-    // maxFilesPerTrigger=1 → the fold runs once PER FILE). The fold is
-    // the semilattice merge, so maintained ≡ recomputed regardless of
-    // batch order — batch x_stats_incremental is the oracle semantics
-    // and the same SQL gates both.
+    // ([[graft.streaming.EventsStream.foreachIncrement]] over
+    // StatsTable.append, maxFilesPerTrigger=1 → the fold runs once PER
+    // FILE). The fold is the semilattice merge, so maintained ≡
+    // recomputed regardless of batch order — batch x_stats_incremental
+    // is the oracle semantics and the same SQL gates both.
     "s9_stream_stats" -> ((s, dir) => {
       import graft.ops.StatsTable
       import graft.streaming.EventsStream
@@ -615,9 +620,9 @@ object QueriesTemporal {
       inc.filter(pmod(col("l_orderkey"), lit(8)) =!= 0)
         .coalesce(1).write.mode("append").parquet(incDir)
       val ckpt = GraftSession.freshGatePath("sstatsckpt", dir)
-      val q = EventsStream.streamStatsAppend(
-        s, path, incDir, inc.schema, ckpt, "l_returnflag", "cents")
-      q.awaitTermination()
+      EventsStream.foreachIncrement(s, incDir, inc.schema, ckpt, maxFilesPerTrigger = Some(1)) {
+        (b, _) => StatsTable.append(b, "l_returnflag", "cents", path)
+      }.awaitTermination()
       StatsTable.read(s, path)
         .select(col("key").as("l_returnflag"), col("n"), col("s").as("sum_cents"),
           col("mn").as("min_cents"), col("mx").as("max_cents"), col("p50_est"))

@@ -465,15 +465,6 @@ object Dedup {
     }
   }
 
-  /** MinHash signature: for each of `numHashes` seeded hash functions,
-    * the min of xxhash64(seed, shingle) over the doc's shingle set.
-    * Pure column algebra — the signature matrix never leaves codegen.
-    */
-  def minhashSignature(shingleArr: Column, numHashes: Int): Column =
-    array((0 until numHashes).map { seed =>
-      array_min(transform(shingleArr, s => xxhash64(lit(seed), s)))
-    }: _*)
-
   /** Rotate-left on a long column (ANSI-safe bit algebra). */
   private def rotl(h: Column, k: Int): Column =
     shiftleft(h, k).bitwiseOR(shiftrightunsigned(h, 64 - k))
@@ -1880,7 +1871,7 @@ object Dedup {
     // stream-static caller must restart within the compaction grace
     // window (the engine's own streaming twin instead runs THIS
     // batch probe per micro-batch inside foreachBatch —
-    // EventsStream.streamSemanticDedup — re-resolving the listing
+    // EventsStream.ingest — re-resolving the listing
     // every batch, the shape to copy for long-lived streams).
     if (newEmb.isStreaming)
       probeSignPlaneIndexPlan(spark, path, newEmb, idCol, vecCol, threshold, planes)

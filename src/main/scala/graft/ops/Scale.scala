@@ -328,8 +328,8 @@ object Scale {
     * listing's age exceeds `graceMs`, the stream fails LOUDLY with a
     * named STALE_PINNED_LISTING error carrying the remedy (restart
     * the stream, or move to the foreachBatch shape that re-resolves
-    * the listing per micro-batch — EventsStream.streamSemanticDedup
-    * is the template). The check is a no-arg nondeterministic UDF
+    * the listing per micro-batch — EventsStream.ingest is the
+    * template). The check is a no-arg nondeterministic UDF
     * (nondeterminism is what stops Catalyst constant-folding it away
     * at plan time): one clock read + compare per index row, paid
     * only on the explicitly-discouraged stream-static branch — the
@@ -354,7 +354,7 @@ object Scale {
           s"${age} ms ago, past the ${graceMs} ms compaction grace — a compaction pass may " +
           s"have reclaimed listed files. Restart the stream (re-resolving the listing), or " +
           s"run the batch probe per micro-batch inside foreachBatch " +
-          s"(EventsStream.streamSemanticDedup is the template) for unbounded stream lifetimes.")
+          s"(EventsStream.ingest is the template) for unbounded stream lifetimes.")
       true
     }.asNondeterministic()
     static.filter(check())

@@ -31,10 +31,6 @@ object TextAnalysis {
   def stopwordHitsOf(ts: Column, words: Seq[String]): Column =
     size(filter(ts, t => t.isInCollection(words)))
 
-  /** Stopword hits for one language. */
-  def stopwordHits(c: Column, words: Seq[String]): Column =
-    stopwordHitsOf(toks(c), words)
-
   /** Heuristic language ID over a materialized token array: argmax of
     * stopword hits, ties broken by list order, "und" when nothing
     * matches.
@@ -51,9 +47,6 @@ object TextAnalysis {
     * wide projections).
     */
   def langId(c: Column): Column = langIdOf(toks(c))
-
-  /** Whitespace token count. */
-  def tokenCountWs(c: Column): Column = size(toks(c))
 
   /** BPE-ish token count: runs of letters, runs of digits, or single
     * non-alphanumeric non-space chars.

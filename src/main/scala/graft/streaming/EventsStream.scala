@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
@@ -106,845 +106,87 @@ object EventsStream {
       .start()
   }
 
-  /** STREAMING incremental dedup: each arriving micro-batch of
-    * documents runs the BATCH index probe
-    * ([[graft.ops.Dedup.probeMinhashIndexMd5]]) inside `foreachBatch`
-    * — signature/banding on the batch, candidates from the (band,
-    * bucket) equi-join, estimated-Jaccard verify on stored
-    * signatures — so a crawl increment dedups against the full
-    * corpus without re-reading it, and the batch operator's oracle
-    * SQL gates the stream surface too (ONE implementation, no
-    * drift). foreachBatch is also what makes the stream
-    * compaction-proof for ANY stream lifetime (r17 advice): the
-    * probe re-resolves its grace-aware file listing
-    * ([[graft.ops.Scale.readLive]]) and materializes under the
-    * missing-file retry PER MICRO-BATCH, where the old stream-static
-    * join pinned one listing at stream definition and a stream
-    * outliving the grace window could hit reclaimed files.
-    * Exactly-once via the `inc=b<batchId>` dynamic-overwrite
-    * partition (the streamBm25Probe pattern).
+  /** THE increment stream: graft's one Structured Streaming form of
+    * the reference pipeline's incremental contract, "skip the files
+    * already processed". A parquet file source over `dir` records in
+    * `checkpointDir` which files it has delivered; `AvailableNow`
+    * drains what is pending and stops. Every micro-batch reaches
+    * `fold` as a static frame with its batch id.
+    *
+    * Oracle argument. `fold` runs the BATCH operator on the
+    * increment, so one implementation serves batch and stream and the
+    * batch operator's oracle SQL gates the stream surface too. Stream
+    * ≡ batch holds when the operator is batch-local (per-row probes,
+    * scores and assignments: a row's whole result lives in its
+    * batch), or when the staged increment is one file and therefore
+    * one micro-batch (the folds whose oracle is the union-batch rule).
+    * Because the batch operator runs per micro-batch, an operator
+    * that reads a persisted index re-resolves its grace-aware listing
+    * ([[graft.ops.Scale.readLive]]) and materializes under its
+    * missing-file retry on every batch: the stream is compaction-safe
+    * for any lifetime, unlike a stream-static join, which pins one
+    * listing at definition (r17).
+    *
+    * Exactly-once argument. Delivery is at-least-once: a crash
+    * between the fold's write and the checkpoint commit, or a wiped
+    * checkpoint, replays the batch under the same batch id (a wiped
+    * checkpoint restarts the ids at 0). Exactly-once therefore comes
+    * from the fold being idempotent per increment: either the
+    * [[ingest]] sink, or a fold whose own ledger is keyed by an id
+    * derived from the batch id (the drift-reference and shard-manifest
+    * partitions, the BM25 index's applied ledger, versioned k-means
+    * models), or an idempotent upsert (the CDC merge). A fold that is
+    * none of these, like the stats-table merge, is at-least-once.
+    *
+    * `maxFilesPerTrigger = Some(1)` makes each arriving file its own
+    * micro-batch, for folds whose gate must exercise repeated folding;
+    * `None` takes every pending file in one batch.
     */
-  def streamIncrementalDedup(
+  def foreachIncrement(
       spark: SparkSession,
-      indexPath: String,
-      newDocsDir: String,
+      dir: String,
       schema: StructType,
-      outDir: String,
       checkpointDir: String,
-      threshold: Double = 0.5
-  ): StreamingQuery =
-    spark.readStream.schema(schema).parquet(newDocsDir)
+      maxFilesPerTrigger: Option[Int] = None
+  )(fold: (DataFrame, Long) => Unit): StreamingQuery = {
+    val reader = spark.readStream.schema(schema)
+    maxFilesPerTrigger.fold(reader)(n => reader.option("maxFilesPerTrigger", n.toLong))
+      .parquet(dir)
       .writeStream
       .outputMode("append")
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        graft.ops.Dedup
-          .probeMinhashIndexMd5(spark, indexPath, batch, "id", "text",
-            threshold = threshold)
-          .withColumn("inc", lit(s"b$bid"))
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("inc").parquet(outDir)
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-
-  /** STREAMING semantic dedup: each arriving micro-batch of
-    * embeddings runs the BATCH sign-plane probe
-    * ([[graft.ops.Dedup.probeSignPlaneIndex]]) inside `foreachBatch`
-    * — (vector, norm, sign-bucket) keying on the batch, the index
-    * side partition-pruned to the batch's buckets (the batch probe's
-    * collect-isin pruning, which the old stream-static shape could
-    * not use), cosine verify on stored vectors. Per-micro-batch
-    * re-resolution of the grace-aware listing makes compaction safe
-    * for any stream lifetime (r17 advice), and the batch operator's
-    * oracle gates the stream. Exactly-once via the batch-id sink.
-    */
-  def streamSemanticDedup(
-      spark: SparkSession,
-      indexPath: String,
-      newEmbDir: String,
-      schema: StructType,
-      outDir: String,
-      checkpointDir: String,
-      threshold: Double = 0.99,
-      planes: Int = 4
-  ): StreamingQuery =
-    spark.readStream.schema(schema).parquet(newEmbDir)
-      .writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        graft.ops.Dedup
-          .probeSignPlaneIndex(spark, indexPath, batch, "vec_id", "embedding",
-            threshold, planes)
-          .withColumn("inc", lit(s"b$bid"))
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("inc").parquet(outDir)
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-
-  /** STREAMING exact-substring dedup-at-ingest: each arriving
-    * micro-batch of documents probes the persistent substring index
-    * ([[graft.ops.CorpusOps.writeSubstringIndex]]) and lands its CUT
-    * form as parquet. The probe aggregates covered positions per doc,
-    * so it runs as the BATCH probe inside `foreachBatch` (documents
-    * are whole within their batch — no cross-batch state needed; the
-    * index carries the corpus history). One implementation serves
-    * batch and stream, so the twins can't drift.
-    */
-  def streamSubstringDedup(
-      spark: SparkSession,
-      indexPath: String,
-      newDocsDir: String,
-      schema: StructType,
-      outDir: String,
-      checkpointDir: String,
-      window: Int
-  ): StreamingQuery =
-    spark.readStream.schema(schema).parquet(newDocsDir)
-      .writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-        graft.ops.CorpusOps
-          .probeSubstringIndex(spark, indexPath, batch, "id", "text", window)
-          .write.mode("append").parquet(outDir)
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-
-  /** STREAMING retrieval: a QUERY stream probes the persistent BM25
-    * postings index ([[graft.ops.TextAnalysis.writeBm25Index]]) —
-    * each micro-batch runs the batch probe inside `foreachBatch`
-    * (the probe's bucket-pruning list is a driver collect over the
-    * batch's query vocabulary, legal on the materialized batch frame)
-    * and appends ranked results. The index carries the corpus; the
-    * stream never re-reads it. Batch `bm25TopK` is the oracle
-    * semantics, so the same SQL gates index probe and stream probe.
-    */
-  def streamBm25Probe(
-      spark: SparkSession,
-      indexPath: String,
-      queriesDir: String,
-      schema: StructType,
-      outDir: String,
-      checkpointDir: String,
-      k: Int
-  ): StreamingQuery =
-    spark.readStream.schema(schema).parquet(queriesDir)
-      .writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        // keyed by batch id + dynamic overwrite (the streamShardAppend
-        // pattern): a checkpoint-recovered replay rewrites its OWN
-        // partition instead of appending duplicate probe rows —
-        // exactly-once, which is what lets the batch oracle gate the
-        // stream surface on the replay path too
-        graft.ops.TextAnalysis
-          .probeBm25Index(spark, indexPath, batch, "query_id", "qtext", k)
-          .withColumn("inc", lit(s"b$bid"))
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("inc").parquet(outDir)
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-
-  /** STREAMING hybrid-fusion retrieval: a QUERY stream probes BOTH
-    * persisted indexes — the BM25 postings index for the lexical
-    * top-20 and the IVF index for the dense top-20 (each arriving
-    * query's embedding looked up from the persisted embedding
-    * snapshot by id — the "query encoder output" at serve time) —
-    * then runs the SHARED fusion tail
-    * ([[graft.ops.Retrieval.rrfFuseRerank]], the same code path as
-    * the batch and serving-path rows) inside `foreachBatch`. The
-    * batch serving-path operator is the oracle semantics; exactly-
-    * once via the `inc=b<batchId>` dynamic-overwrite partition (the
-    * streamBm25Probe pattern). The reranker comes through the
-    * [[graft.scorer.RelevanceScorer]] seam like the batch tail (r16
-    * advice — a hardcoded mock made every deployment silently rerank
-    * by a key hash); the default stays the deterministic mock so the
-    * gate row and oracle are unchanged, a deployment passes its
-    * cross-encoder.
-    */
-  def streamFusionProbe(
-      spark: SparkSession,
-      bm25Path: String,
-      ivfPath: String,
-      queriesDir: String,
-      schema: StructType,
-      embeddings: DataFrame,
-      docs: DataFrame,
-      outDir: String,
-      checkpointDir: String,
-      legK: Int = 20,
-      nProbe: Int = 4,
-      scorer: graft.scorer.RelevanceScorer = new graft.scorer.MockRelevanceScorer
-  ): StreamingQuery =
-    spark.readStream.schema(schema).parquet(queriesDir)
-      .writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        val lex = graft.ops.TextAnalysis
-          .probeBm25Index(spark, bm25Path, batch, "query_id", "qtext", legK)
-          .select(col("query_id"), col("doc_id"), col("rank").as("lex_rank"))
-        val qe = embeddings.join(
-          batch.select(col("query_id").cast("long").as("__qid")),
-          col("vec_id") === col("__qid"), "left_semi")
-        val dense = graft.ops.Similarity
-          .probeIvfIndex(spark, ivfPath, qe, "vec_id", "embedding", legK, nProbe)
-          .select(col("query_id"), col("neighbor_id").as("doc_id"), col("rank").as("dense_rank"))
-        graft.ops.Retrieval.rrfFuseRerank(lex, dense,
-            batch, "query_id", "qtext", docs, "doc_id", "text", scorer)
-          .withColumn("inc", lit(s"b$bid"))
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("inc").parquet(outDir)
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-
-  /** STREAMING decontamination: arriving documents probe the
-    * persisted benchmark shingle set
-    * ([[graft.ops.CorpusOps.writeContaminationIndex]]) inside
-    * `foreachBatch` — the eval-leakage filter every training-data
-    * pipeline runs at ingest, with the benchmark suite shingled once
-    * offline. Per-doc contamination is batch-local, so stream ≡
-    * batch and the one-shot oracle gates both. Exactly-once via the
-    * batch-id sink.
-    */
-  def streamContaminationCheck(
-      spark: SparkSession,
-      indexPath: String,
-      newDocsDir: String,
-      schema: StructType,
-      outDir: String,
-      checkpointDir: String,
-      minShared: Int = 8
-  ): StreamingQuery =
-    spark.readStream.schema(schema).parquet(newDocsDir)
-      .writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        graft.ops.CorpusOps
-          .contaminationProbe(spark, indexPath, batch, "doc_id", "text", minShared)
-          .withColumn("inc", lit(s"b$bid"))
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("inc").parquet(outDir)
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-
-  /** STREAMING large-to-large ANN join: vector increments stream in
-    * and each micro-batch [[graft.ops.Similarity.annJoinAuto]]s
-    * against the static base corpus — cross-crawl alignment at
-    * ingest. Per-left-row top-k is BATCH-LOCAL by construction (a
-    * left row's whole candidate set lives in its batch), so
-    * stream ≡ batch and the batch join's oracle gates this surface
-    * verbatim. Exactly-once via the batch-id sink.
-    */
-  def streamAnnJoin(
-      spark: SparkSession,
-      base: DataFrame,
-      newVecsDir: String,
-      schema: StructType,
-      outDir: String,
-      checkpointDir: String,
-      k: Int,
-      nProbe: Int = 2
-  ): StreamingQuery = {
-    // the base side is STATIC across every micro-batch: size it once
-    // at stream setup and hand annJoinAuto the hint — without this
-    // every batch paid a full base-corpus count just to re-derive the
-    // same nCells (round-10 verdict task 5)
-    val baseSize = base.count()
-    spark.readStream.schema(schema).parquet(newVecsDir)
-      .writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        graft.ops.Similarity
-          .annJoinAuto(batch, base, "vec_id", "embedding", k,
-            nProbe = nProbe, baseSize = Some(baseSize))
-          .withColumn("inc", lit(s"b$bid"))
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("inc").parquet(outDir)
-        ()
-      }
+      .foreachBatch(fold)
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.AvailableNow())
       .start()
   }
 
-  /** STREAMING cluster assignment: arriving vectors assign against
-    * the PERSISTED k-means centroids
-    * ([[graft.ops.Similarity.writeKmeansCentroids]]) inside
-    * `foreachBatch` — routing fresh corpus into a fixed clustering at
-    * ingest (the SemDeDup/cluster-sampling steady state: train
-    * offline, assign online). Per-vector assignment is batch-local (a
-    * k-row broadcast fold), so stream ≡ batch and the batch probe's
-    * oracle gates this surface verbatim. Exactly-once via the
-    * batch-id sink.
+  /** [[foreachIncrement]] plus the one increment sink: `op`'s rows for
+    * batch `bid` land under `outDir/inc=b<bid>` by dynamic partition
+    * overwrite, so a replayed batch rewrites its own partition instead
+    * of appending duplicate rows. Readers drop `inc`. A batch whose op
+    * emits zero rows writes no partition; a reader that must survive
+    * an all-empty run reads with an explicit schema (r18).
     */
-  def streamClusterAssign(
+  def ingest(
       spark: SparkSession,
-      centroidsPath: String,
-      newVecsDir: String,
+      dir: String,
       schema: StructType,
       outDir: String,
       checkpointDir: String
-  ): StreamingQuery =
-    spark.readStream.schema(schema).parquet(newVecsDir)
-      .writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        graft.ops.Similarity
-          .assignWithCentroids(spark, centroidsPath, batch, "vec_id", "embedding")
-          .withColumn("inc", lit(s"b$bid"))
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("inc").parquet(outDir)
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
+  )(op: (DataFrame, Long) => DataFrame): StreamingQuery =
+    foreachIncrement(spark, dir, schema, checkpointDir) { (batch, bid) =>
+      op(batch, bid)
+        .withColumn("inc", lit(s"b$bid"))
+        .write.mode(SaveMode.Overwrite)
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("inc").parquet(outDir)
+    }
 
-  /** STREAMING model-drift monitor: each arriving micro-batch is
-    * folded (virtually) into the PERSISTED k-means model
-    * ([[graft.ops.Similarity.writeKmeansModel]]) and the per-cluster
-    * `(n_inc, drift)` report lands keyed by batch id — the at-ingest
-    * answer to "is this clustering going stale?": drift sliding away
-    * from 1.0 on live traffic is the retrain trigger, long before any
-    * downstream quality metric moves. Each batch's fold is
-    * independent against the same persisted sums (a monitor, not a
-    * writer — republishing the model stays a deliberate batch act),
-    * so stream ≡ batch per increment and the batch gate's oracle
-    * gates this surface verbatim. Exactly-once via the batch-id sink.
-    */
-  def streamRecenter(
-      spark: SparkSession,
-      modelPath: String,
-      newVecsDir: String,
-      schema: StructType,
-      outDir: String,
-      checkpointDir: String
-  ): StreamingQuery =
-    spark.readStream.schema(schema).parquet(newVecsDir)
-      .writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        graft.ops.Similarity
-          .recenterWithIncrement(spark, modelPath, batch, "vec_id", "embedding")
-          .withColumn("inc", lit(s"b$bid"))
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("inc").parquet(outDir)
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-
-  /** STREAMING drift-triggered retrain: each arriving vector batch
-    * folds against the persisted k-means model inside `foreachBatch`
-    * ([[graft.ops.Similarity.retrainWhenDrifted]]) and, when any
-    * cluster's drift cosine falls below the threshold, REPUBLISHES
-    * the model from `corpus` ∪ batch before the next batch folds —
-    * the full closed loop (monitor → trigger → retrain → newer
-    * batches score against the newer model) the drift monitor
-    * ([[streamRecenter]]) only reports half of. The batch operator
-    * is the oracle semantics. Exactly-once END TO END (r14): the
-    * report rides the batch-id sink, and the republish goes through
-    * [[graft.ops.Similarity.retrainWhenDriftedVersioned]] — the
-    * model is versioned by batch id with a commit-marker-last
-    * publish, so a crash-replayed micro-batch folds against the
-    * exact model state it saw the first time and rewrites only its
-    * own version directory (the in-place overwrite of the batch
-    * operator would have made the replayed report diverge:
-    * retrained=0, drift recomputed against the newer model).
-    */
-  def streamRetrain(
-      spark: SparkSession,
-      modelPath: String,
-      newVecsDir: String,
-      schema: StructType,
-      outDir: String,
-      checkpointDir: String,
-      corpus: DataFrame,
-      k: Int,
-      iters: Int,
-      driftThreshold: Double
-  ): StreamingQuery =
-    spark.readStream.schema(schema).parquet(newVecsDir)
-      .writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        graft.ops.Similarity
-          .retrainWhenDriftedVersioned(spark, modelPath, bid,
-            batch, "vec_id", "embedding",
-            corpus, k, iters, driftThreshold)
-          .withColumn("inc", lit(s"b$bid"))
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("inc").parquet(outDir)
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-
-  /** STREAMING pseudo-relevance feedback: arriving query batches run
-    * the full two-pass PRF chain against the persistent BM25 index
-    * ([[graft.ops.TextAnalysis.probeBm25IndexPrf]]) inside
-    * `foreachBatch` — query expansion at ingest with zero
-    * corpus-postings scans (bucket-pruned passes; candidate mining
-    * touches only the feedback docs). The batch inline operator is
-    * the oracle semantics; exactly-once via the batch-id sink.
-    */
-  def streamPrfProbe(
-      spark: SparkSession,
-      indexPath: String,
-      queriesDir: String,
-      schema: StructType,
-      corpus: DataFrame,
-      outDir: String,
-      checkpointDir: String,
-      k: Int
-  ): StreamingQuery =
-    spark.readStream.schema(schema).parquet(queriesDir)
-      .writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        graft.ops.TextAnalysis
-          .probeBm25IndexPrf(spark, indexPath, batch, "query_id", "qtext",
-            corpus, "doc_id", "text", k)
-          .withColumn("inc", lit(s"b$bid"))
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("inc").parquet(outDir)
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-
-  /** STREAMING retrieval EVALUATION: each arriving query batch probes
-    * the persistent BM25 index (top-10) and is immediately judged
-    * against the deterministic shared-term labels
-    * ([[graft.ops.TextAnalysis.retrievalMetrics]]) inside
-    * `foreachBatch` — metrics at ingest. Per-query metrics are
-    * batch-local by construction (a query is one row, so its whole
-    * ranked list and label set live in its batch), which is what
-    * makes stream ≡ batch and lets the one metrics oracle gate both
-    * surfaces. The static corpus frame supplies the labels; the
-    * index carries the postings — neither is re-derived per batch
-    * beyond the label tokenize, which a production deployment would
-    * persist alongside the index.
-    */
-  def streamRetrievalEval(
-      spark: SparkSession,
-      indexPath: String,
-      queriesDir: String,
-      schema: StructType,
-      corpus: DataFrame,
-      outDir: String,
-      checkpointDir: String
-  ): StreamingQuery =
-    spark.readStream.schema(schema).parquet(queriesDir)
-      .writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        val top = graft.ops.TextAnalysis
-          .probeBm25Index(spark, indexPath, batch, "query_id", "qtext", k = 10)
-          .select(col("query_id"), col("doc_id"), col("rank"))
-        // exactly-once metrics: keyed by batch id + dynamic overwrite
-        // (the streamShardAppend pattern) so a checkpoint-recovered
-        // replayed micro-batch rewrites its own partition instead of
-        // duplicating metric rows — without this, the docstring's
-        // stream ≡ batch claim fails exactly on the replay path
-        graft.ops.TextAnalysis
-          .retrievalMetrics(top, corpus, "doc_id", "text", batch, "query_id", "qtext")
-          .withColumn("inc", lit(s"b$bid"))
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("inc").parquet(outDir)
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-
-  /** STREAMING dense retrieval: a query-VECTOR stream probes the
-    * persistent quantized IVF index
-    * ([[graft.ops.Similarity.writeIvfIndexQuantized]]) — each
-    * micro-batch runs the batch probe inside `foreachBatch` (the
-    * probe's top-k window is legal on the materialized batch frame;
-    * the cell-partitioned index is read only at the probed cells) and
-    * appends ranked neighbors. With [[streamBm25Probe]] this closes
-    * the retrieval-at-ingest story for BOTH legs the fusion operator
-    * serves: lexical and dense queries can each arrive online against
-    * indexes built offline. Batch `probeIvfIndexQuantized` is the
-    * oracle semantics, so the same SQL gates index probe and stream.
-    */
-  def streamAnnProbe(
-      spark: SparkSession,
-      indexPath: String,
-      queriesDir: String,
-      schema: StructType,
-      outDir: String,
-      checkpointDir: String,
-      k: Int,
-      nProbe: Int = 4
-  ): StreamingQuery =
-    spark.readStream.schema(schema).parquet(queriesDir)
-      .writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        // batch-id-keyed dynamic overwrite: replayed micro-batches
-        // rewrite their own partition — exactly-once (streamShardAppend
-        // pattern, uniform across every probe/score stream sink)
-        graft.ops.Similarity
-          .probeIvfIndexQuantized(spark, indexPath, batch, "vec_id", "embedding", k, nProbe)
-          .withColumn("inc", lit(s"b$bid"))
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("inc").parquet(outDir)
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-
-  /** STREAMING membership screen at ingest: arriving rows probe a
-    * PERSISTED Bloom filter ([[graft.ops.Sketches.bloomBuild]] word
-    * rows as parquet) inside `foreachBatch` — each micro-batch pays
-    * one broadcast-map lookup per row, zero stream state, and lands
-    * with a `maybe` column. The at-ingest form of the Bloom prune: a
-    * crawler checks "seen before?" against a filter built offline
-    * over the historical corpus, and only `maybe` rows proceed to the
-    * exact (expensive) membership join. Batch `bloomMaybeContains` is
-    * the oracle semantics; the same SQL gates both flavors.
-    */
-  def streamBloomProbe(
-      spark: SparkSession,
-      sketchPath: String,
-      probeDir: String,
-      schema: StructType,
-      valueCol: String,
-      outDir: String,
-      checkpointDir: String,
-      mBits: Int,
-      kHash: Int
-  ): StreamingQuery =
-    spark.readStream.schema(schema).parquet(probeDir)
-      .writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        graft.ops.Sketches
-          .bloomMaybeContains(spark.read.parquet(sketchPath), batch, valueCol, mBits, kHash)
-          .withColumn("inc", lit(s"b$bid"))
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("inc").parquet(outDir)
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-
-  /** STREAMING quality scoring at ingest: arriving documents score
-    * against the persisted Zipf reference ranks
-    * ([[graft.ops.TextAnalysis.writeZipfRanks]]) inside `foreachBatch`
-    * — each micro-batch pays one token explode over itself plus a
-    * broadcast join against the topV-row rank table, the deployment
-    * shape of a perplexity-style quality filter (fit the reference
-    * once, stream the raw pool through the scorer). Batch
-    * [[graft.ops.TextAnalysis.scoreWithZipfRanks]] is the oracle
-    * semantics; the same SQL gates all three surfaces. Exactly-once
-    * via the batch-id-keyed dynamic overwrite, like every other
-    * probe/score sink here.
-    */
-  def streamZipfScore(
-      spark: SparkSession,
-      ranksPath: String,
-      newDocsDir: String,
-      schema: StructType,
-      outDir: String,
-      checkpointDir: String
-  ): StreamingQuery =
-    spark.readStream.schema(schema).parquet(newDocsDir)
-      .writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        graft.ops.TextAnalysis
-          .scoreWithZipfRanks(spark, ranksPath, batch, "doc_id", "text")
-          .withColumn("inc", lit(s"b$bid"))
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("inc").parquet(outDir)
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-
-  /** STREAMING bigram-LM quality scoring at ingest: arriving
-    * documents score against the persisted bigram count table
-    * ([[graft.ops.TextAnalysis.writeBigramCounts]]) inside
-    * `foreachBatch` — each micro-batch pays one bigram explode over
-    * itself plus a join against the pruned reference counts, the
-    * deployment shape of an n-gram-LM quality gate (fit the
-    * reference once, stream the raw pool through the scorer). Batch
-    * [[graft.ops.TextAnalysis.scoreWithBigramCounts]] is the oracle
-    * semantics; the same SQL gates all three surfaces. Exactly-once
-    * via the batch-id-keyed dynamic overwrite, like every other
-    * probe/score sink here.
-    */
-  def streamBigramScore(
-      spark: SparkSession,
-      countsPath: String,
-      newDocsDir: String,
-      schema: StructType,
-      outDir: String,
-      checkpointDir: String
-  ): StreamingQuery =
-    spark.readStream.schema(schema).parquet(newDocsDir)
-      .writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        graft.ops.TextAnalysis
-          .scoreWithBigramCounts(spark, countsPath, batch, "doc_id", "text")
-          .withColumn("inc", lit(s"b$bid"))
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("inc").parquet(outDir)
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-
-  /** STREAMING stupid-backoff quality scoring at ingest: arriving
-    * documents score against the persisted three-rung backoff model
-    * ([[graft.ops.TextAnalysis.writeBackoffModel]]) inside
-    * `foreachBatch` — the deployed shape of a KenLM-style quality
-    * gate (fit the reference once, stream the raw pool through the
-    * scorer). Batch [[graft.ops.TextAnalysis.scoreWithBackoffModel]]
-    * is the oracle semantics; exactly-once via the batch-id-keyed
-    * dynamic overwrite, like every other probe/score sink here.
-    */
-  def streamBackoffScore(
-      spark: SparkSession,
-      modelPath: String,
-      newDocsDir: String,
-      schema: StructType,
-      outDir: String,
-      checkpointDir: String
-  ): StreamingQuery =
-    spark.readStream.schema(schema).parquet(newDocsDir)
-      .writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        graft.ops.TextAnalysis
-          .scoreWithBackoffModel(spark, modelPath, batch, "doc_id", "text")
-          .withColumn("inc", lit(s"b$bid"))
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("inc").parquet(outDir)
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-
-  /** STREAMING supervised quality classification at ingest: arriving
-    * documents score their NB log-odds against the persisted
-    * classifier ([[graft.ops.TextAnalysis.writeNbModel]]) inside
-    * `foreachBatch` — the deployed shape of the CCNet/GPT-3 quality
-    * classifier (fit on labeled reference once, stream the raw pool
-    * through the keep/drop gate). Batch
-    * [[graft.ops.TextAnalysis.scoreWithNbModel]] is the oracle
-    * semantics; exactly-once via the batch-id-keyed dynamic
-    * overwrite, like every other probe/score sink here.
-    */
-  def streamNbScore(
-      spark: SparkSession,
-      modelPath: String,
-      newDocsDir: String,
-      schema: StructType,
-      outDir: String,
-      checkpointDir: String
-  ): StreamingQuery =
-    spark.readStream.schema(schema).parquet(newDocsDir)
-      .writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        graft.ops.TextAnalysis
-          .scoreWithNbModel(spark, modelPath, batch, "doc_id", "text")
-          .withColumn("inc", lit(s"b$bid"))
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("inc").parquet(outDir)
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-
-  /** STREAMING winnow-overlap detection at ingest: each arriving
-    * batch fingerprints itself and equi-joins the persisted corpus
-    * print index ([[graft.ops.TextAnalysis.writeWinnowIndex]]) inside
-    * `foreachBatch` — "which corpus documents does this new document
-    * copy from", answered the batch it lands. Batch
-    * [[graft.ops.TextAnalysis.winnowOverlapWithIndex]] is the oracle
-    * semantics; exactly-once via the batch-id-keyed dynamic
-    * overwrite, like every other probe/score sink here.
-    */
-  def streamWinnowOverlap(
-      spark: SparkSession,
-      indexPath: String,
-      newDocsDir: String,
-      schema: StructType,
-      outDir: String,
-      checkpointDir: String
-  ): StreamingQuery =
-    spark.readStream.schema(schema).parquet(newDocsDir)
-      .writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        graft.ops.TextAnalysis
-          .winnowOverlapWithIndex(spark, indexPath, batch, "doc_id", "text")
-          .withColumn("inc", lit(s"b$bid"))
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("inc").parquet(outDir)
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-
-  /** STREAMING curation pipeline at ingest — the deployed shape of
-    * the whole round: each arriving batch runs span cut → NB keep
-    * gate → KN annotate against the three persisted models inside
-    * one `foreachBatch`
-    * ([[graft.ops.TextAnalysis.qualityPipelineWithModels]]). Batch
-    * semantics are the oracle; exactly-once via the batch-id-keyed
-    * dynamic overwrite, like every other probe/score sink here.
-    */
-  def streamQualityPipeline(
-      spark: SparkSession,
-      modelsPath: String,
-      newDocsDir: String,
-      schema: StructType,
-      outDir: String,
-      checkpointDir: String
-  ): StreamingQuery =
-    spark.readStream.schema(schema).parquet(newDocsDir)
-      .writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        graft.ops.TextAnalysis
-          .qualityPipelineWithModels(spark,
-            s"$modelsPath/span", s"$modelsPath/nb", s"$modelsPath/kn",
-            batch, "doc_id", "text")
-          .withColumn("inc", lit(s"b$bid"))
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("inc").parquet(outDir)
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-
-  /** STREAMING C4 span dedup at ingest: each arriving batch cuts the
-    * boilerplate sentence runs the persisted span index
-    * ([[graft.ops.Dedup.writeSpanIndex]]) has already seen (and its
-    * own intra-batch repeats) inside `foreachBatch` — the
-    * at-ingest shape of the C4 §2.2 pass. Batch
-    * [[graft.ops.Dedup.spanDedupWithIndex]] is the oracle semantics
-    * (= the one-batch rule on the union corpus, restricted to the
-    * increment); exactly-once via the batch-id-keyed dynamic
-    * overwrite, like every other probe/score sink here.
-    */
-  def streamSpanDedup(
-      spark: SparkSession,
-      indexPath: String,
-      newDocsDir: String,
-      schema: StructType,
-      outDir: String,
-      checkpointDir: String
-  ): StreamingQuery =
-    spark.readStream.schema(schema).parquet(newDocsDir)
-      .writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        graft.ops.Dedup
-          .spanDedupWithIndex(spark, indexPath, batch, "doc_id", "text")
-          .withColumn("inc", lit(s"b$bid"))
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("inc").parquet(outDir)
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-
-  /** STREAMING drift-reference maintenance: each arriving doc batch
-    * folds its term counts into the persisted drift reference as its
-    * own `inc=b<batchId>` ledger partition
-    * ([[graft.ops.TextAnalysis.appendToDriftRef]]) — the ledger IS
-    * the sink, so exactly-once comes straight from the partition
-    * overwrite (a replayed batch rewrites only its own partition).
-    * The batch fold + [[graft.ops.TextAnalysis.driftWithRefFolded]]
-    * is the oracle semantics.
-    */
-  def streamDriftRefFold(
-      spark: SparkSession,
-      refPath: String,
-      newDocsDir: String,
-      schema: StructType,
-      checkpointDir: String
-  ): StreamingQuery =
-    spark.readStream.schema(schema).parquet(newDocsDir)
-      .writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        graft.ops.TextAnalysis
-          .appendToDriftRef(spark, refPath, batch, "text", s"b$bid")
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-
-  /** STREAMING ingest-gate capstone: each arriving micro-batch runs
-    * the WHOLE deployed admission chain
-    * ([[graft.ops.CorpusOps.ingestGateWithState]]: canon-index probe
-    * -> span-index cut -> Gopher gate -> contamination probe ->
-    * curriculum fold) against the persisted
-    * [[graft.ops.CorpusOps.writeIngestGateState]] state inside
-    * `foreachBatch`, with the batch id as the curriculum fold's
-    * idempotency key — the at-ingest shape of the full pipeline. The
-    * batch increment operator is the oracle semantics; exactly-once
-    * via the `inc=b<batchId>` sink partition + the fold's own
-    * replay-reads-the-committed-tail contract.
+  /** The whole deployed admission chain
+    * ([[graft.ops.CorpusOps.ingestGateWithState]]) as an [[ingest]]
+    * stream over the persisted
+    * [[graft.ops.CorpusOps.writeIngestGateState]] state, with the
+    * batch id as the curriculum fold's idempotency key.
     */
   def streamIngestGate(
       spark: SparkSession,
@@ -954,441 +196,10 @@ object EventsStream {
       outDir: String,
       checkpointDir: String
   ): StreamingQuery =
-    spark.readStream.schema(schema).parquet(newDocsDir)
-      .writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        graft.ops.CorpusOps
-          .ingestGateWithState(spark, statePath, batch, "doc_id", "text", s"b$bid")
-          .withColumn("inc", lit(s"b$bid"))
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("inc").parquet(outDir)
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-
-  /** STREAMING curriculum fold at ingest: each arriving doc batch
-    * buckets by the manifest's FROZEN quartile cutpoints and takes
-    * its (bucket, shard) positions after the committed tail inside
-    * `foreachBatch`, batchId as the increment id
-    * ([[graft.ops.CorpusOps.appendToCurriculum]]) — the
-    * length-curriculum layout maintained as data lands. The batch
-    * append is the oracle semantics; the manifest's per-increment
-    * ledger makes a checkpoint-recovered replay exactly-once (a
-    * replayed batch excludes its own partition from the tail and
-    * overwrites it).
-    */
-  def streamCurriculumAppend(
-      spark: SparkSession,
-      manifestPath: String,
-      newDocsDir: String,
-      schema: StructType,
-      outDir: String,
-      checkpointDir: String
-  ): StreamingQuery =
-    spark.readStream.schema(schema).parquet(newDocsDir)
-      .writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        graft.ops.CorpusOps
-          .appendToCurriculum(spark, manifestPath, batch, "doc_id", "text", s"b$bid")
-          .withColumn("inc", lit(s"b$bid"))
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("inc").parquet(outDir)
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-
-  /** STREAMING canonical-key dedup gate at ingest: each arriving doc
-    * batch is keyed by canonical content (lowercase, zero-width
-    * strip, NFC — [[graft.ops.Dedup.canonText]]) and checked against
-    * the persisted [[graft.ops.Dedup.writeCanonIndex]] inside
-    * `foreachBatch` — the evasion-proof "have we already got this
-    * document?" answer as data lands. The batch increment operator
-    * ([[graft.ops.Dedup.canonDedupWithIndex]], union-law gated) is
-    * the oracle semantics; exactly-once via the batch-id sink.
-    */
-  def streamCanonDedup(
-      spark: SparkSession,
-      indexPath: String,
-      newDocsDir: String,
-      schema: StructType,
-      outDir: String,
-      checkpointDir: String
-  ): StreamingQuery =
-    spark.readStream.schema(schema).parquet(newDocsDir)
-      .writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        graft.ops.Dedup
-          .canonDedupWithIndex(spark, indexPath, batch, "doc_id", "text")
-          .withColumn("inc", lit(s"b$bid"))
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("inc").parquet(outDir)
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-
-  /** STREAMING corpus-drift monitoring at ingest: each arriving batch
-    * measures its total-variation distance against the persisted
-    * reference term counts ([[graft.ops.TextAnalysis.writeDriftRef]])
-    * inside `foreachBatch` — one drift row per micro-batch, the
-    * crawl-snapshot alarm run as data lands rather than at the next
-    * offline audit. Batch [[graft.ops.TextAnalysis.driftWithRef]] is
-    * the oracle semantics; exactly-once via the batch-id-keyed
-    * dynamic overwrite, like every other probe/score sink here.
-    */
-  def streamDrift(
-      spark: SparkSession,
-      refPath: String,
-      newDocsDir: String,
-      schema: StructType,
-      outDir: String,
-      checkpointDir: String
-  ): StreamingQuery =
-    spark.readStream.schema(schema).parquet(newDocsDir)
-      .writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        graft.ops.TextAnalysis
-          .driftWithRef(spark, refPath, batch, "text")
-          .withColumn("inc", lit(s"b$bid"))
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("inc").parquet(outDir)
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-
-  /** STREAMING PCA projection at ingest: arriving vectors project
-    * onto the persisted integer top direction
-    * ([[graft.ops.Similarity.writePcaModel]]) inside `foreachBatch` —
-    * the dimensionality-reduce-before-index stage of an embedding
-    * pipeline, run as vectors land. Batch
-    * [[graft.ops.Similarity.projectWithPcaModel]] is the oracle
-    * semantics; exactly-once via the batch-id-keyed dynamic
-    * overwrite, like every other probe/score sink here.
-    */
-  def streamPcaProject(
-      spark: SparkSession,
-      modelPath: String,
-      newVecsDir: String,
-      schema: StructType,
-      outDir: String,
-      checkpointDir: String
-  ): StreamingQuery =
-    spark.readStream.schema(schema).parquet(newVecsDir)
-      .writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        graft.ops.Similarity
-          .projectWithPcaModel(spark, modelPath, batch, "vec_id", "embedding")
-          .withColumn("inc", lit(s"b$bid"))
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("inc").parquet(outDir)
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-
-  /** STREAMING classifier MONITORING at ingest: each arriving batch
-    * scores against the persisted NB model and judges the scores
-    * against the batch's own labels
-    * ([[graft.ops.TextAnalysis.evalWithNbModel]]) — one AUC/confusion
-    * row per micro-batch, so drift in the deployed keep/drop gate is
-    * visible the batch it happens. Batch `evalWithNbModel` is the
-    * oracle semantics; exactly-once via the batch-id-keyed dynamic
-    * overwrite, like every other probe/score sink here.
-    */
-  def streamNbEval(
-      spark: SparkSession,
-      modelPath: String,
-      newDocsDir: String,
-      schema: StructType,
-      posCol: String,
-      outDir: String,
-      checkpointDir: String
-  ): StreamingQuery =
-    spark.readStream.schema(schema).parquet(newDocsDir)
-      .writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        graft.ops.TextAnalysis
-          .evalWithNbModel(spark, modelPath, batch, "doc_id", "text", posCol)
-          .withColumn("inc", lit(s"b$bid"))
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("inc").parquet(outDir)
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-
-  /** STREAMING Kneser-Ney quality scoring at ingest: arriving
-    * documents score their interpolated-KN surprisal against the
-    * persisted model ([[graft.ops.TextAnalysis.writeKnModel]]) inside
-    * `foreachBatch` — the deployed shape of the CCNet quality-LM
-    * stage (fit KenLM-style model on the trusted corpus once, stream
-    * the crawl through the perplexity gate). Batch
-    * [[graft.ops.TextAnalysis.scoreWithKnModel]] is the oracle
-    * semantics; exactly-once via the batch-id-keyed dynamic
-    * overwrite, like every other probe/score sink here.
-    */
-  def streamKnScore(
-      spark: SparkSession,
-      modelPath: String,
-      newDocsDir: String,
-      schema: StructType,
-      outDir: String,
-      checkpointDir: String
-  ): StreamingQuery =
-    spark.readStream.schema(schema).parquet(newDocsDir)
-      .writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        graft.ops.TextAnalysis
-          .scoreWithKnModel(spark, modelPath, batch, "doc_id", "text")
-          .withColumn("inc", lit(s"b$bid"))
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("inc").parquet(outDir)
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-
-  /** STREAMING tokenizer application at ingest: arriving documents
-    * encode against the persisted BPE merge table
-    * ([[graft.ops.TextAnalysis.writeBpeMerges]]) inside
-    * `foreachBatch` — the tokenize-at-ingest step of a training-data
-    * pipeline (count words/BPE symbols as docs land, before packing).
-    * Batch [[graft.ops.TextAnalysis.encodeWithBpeMerges]] is the
-    * oracle semantics; exactly-once via the batch-id-keyed dynamic
-    * overwrite like every probe/score sink here.
-    */
-  def streamBpeEncode(
-      spark: SparkSession,
-      mergesPath: String,
-      newDocsDir: String,
-      schema: StructType,
-      outDir: String,
-      checkpointDir: String
-  ): StreamingQuery =
-    spark.readStream.schema(schema).parquet(newDocsDir)
-      .writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        graft.ops.TextAnalysis
-          .encodeWithBpeMerges(spark, mergesPath, batch, "doc_id", "text")
-          .withColumn("inc", lit(s"b$bid"))
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("inc").parquet(outDir)
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-
-  /** STREAMING data selection at ingest: arriving documents score
-    * against the persisted DSIR-style affinity-weight dim
-    * ([[graft.ops.TextAnalysis.writeAffinityWeights]]) inside
-    * `foreachBatch` — each micro-batch pays one feature explode over
-    * itself plus a broadcast join against the buckets-sized dim, the
-    * exact deployment shape of hashed importance resampling (fit
-    * offline, stream the raw pool through the estimator). Batch
-    * [[graft.ops.TextAnalysis.scoreWithAffinityWeights]] is the
-    * oracle semantics; the same SQL gates both flavors.
-    */
-  def streamAffinityScore(
-      spark: SparkSession,
-      weightsPath: String,
-      newDocsDir: String,
-      schema: StructType,
-      outDir: String,
-      checkpointDir: String
-  ): StreamingQuery =
-    spark.readStream.schema(schema).parquet(newDocsDir)
-      .writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        graft.ops.TextAnalysis
-          .scoreWithAffinityWeights(spark, weightsPath, batch, "doc_id", "text")
-          .withColumn("inc", lit(s"b$bid"))
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("inc").parquet(outDir)
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-
-  /** STREAMING shard assignment at ingest — arriving docs fold into
-    * the persisted shard layout inside `foreachBatch` via
-    * [[graft.ops.CorpusOps.appendToShards]], keyed by the streaming
-    * batchId. Both sides of the fold are replay-idempotent per-
-    * increment partition overwrites (the manifest's `parts/inc=` and
-    * the assignment rows under `outDir/inc=`), so a checkpoint-
-    * recovered micro-batch rewrites exactly its own output and reads
-    * the same committed tail it saw first — end-to-end exactly-once
-    * with no sink-side dedup, the same at-least-once ∘ idempotent
-    * composition as [[streamCdcIndexMaintenance]]. Batch
-    * [[graft.ops.CorpusOps.appendToShards]] semantics are the oracle
-    * (same SQL as `x_shard_append`).
-    */
-  def streamShardAppend(
-      spark: SparkSession,
-      manifestPath: String,
-      newDocsDir: String,
-      schema: StructType,
-      outDir: String,
-      checkpointDir: String
-  ): StreamingQuery =
-    spark.readStream.schema(schema).parquet(newDocsDir)
-      .writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        graft.ops.CorpusOps
-          .appendToShards(spark, manifestPath, batch, "doc_id", "text",
-            incrementId = s"sb$bid")
-          .withColumn("inc", lit(s"sb$bid"))
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("inc").parquet(outDir)
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-
-  /** STREAMING CDC index maintenance — the online form of the
-    * nightly-crawl loop: a change-set stream
-    * ([[graft.ops.ChangeCapture.snapshotDiff]] rows) folds into the
-    * persistent BM25 index inside `foreachBatch` via
-    * [[graft.ops.TextAnalysis.applyCdcToBm25Index]], keyed by the
-    * streaming batchId. Structured Streaming replays a
-    * checkpoint-recovered micro-batch with the SAME batchId, and the
-    * index's applied ledger short-circuits committed legs — so the
-    * pipeline is end-to-end exactly-once with no sink-side dedup: the
-    * stream's at-least-once delivery composes with the index's
-    * replay-idempotent maintenance ops. Batch probe semantics are the
-    * oracle (same SQL as `x_bm25_cdc`).
-    */
-  def streamCdcIndexMaintenance(
-      spark: SparkSession,
-      indexPath: String,
-      changesDir: String,
-      schema: StructType,
-      checkpointDir: String
-  ): StreamingQuery =
-    spark.readStream.schema(schema).parquet(changesDir)
-      .writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, bid: Long) =>
-        graft.ops.TextAnalysis.applyCdcToBm25Index(
-          batch, "doc_id", "text", indexPath, batchId = s"sb$bid")
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-
-  /** STREAMING rollup maintenance — the stats-table twin of the three
-    * dedup-at-ingest streams: each arriving micro-batch FOLDS into the
-    * persistent per-group stats table
-    * ([[graft.ops.StatsTable.append]]) inside `foreachBatch`. The fold
-    * is the table's own semilattice merge (counts/sums add, min/max
-    * lattice, synopsis entries count-sum + k-min trim), so maintained
-    * ≡ recomputed holds after EVERY batch and in ANY batch order —
-    * which is why the same oracle that gates the batch append gates
-    * this stream. `maxFilesPerTrigger=1` forces one fold per arriving
-    * file so the gate exercises repeated folding, not one big batch.
-    */
-  def streamStatsAppend(
-      spark: SparkSession,
-      statsPath: String,
-      incDir: String,
-      schema: StructType,
-      checkpointDir: String,
-      keyCol: String,
-      valCol: String,
-      k: Int = 64
-  ): StreamingQuery =
-    spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(incDir)
-      .writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.ops.StatsTable.append(batch, keyCol, valCol, statsPath, k)
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-
-  /** CDC change feed folded into a persistent keyed snapshot: each
-    * arriving change file MERGEs via [[graft.ops.ChangeCapture
-    * .applyChanges]] (one left-anti join + union, change set
-    * broadcast at increment size) and overwrites the snapshot — the
-    * streaming half of the warehouse MERGE pipeline whose batch law
-    * `apply(old, diff(old, new)) ≡ new` gates `x_cdc_apply`. A
-    * snapshotDiff change set has exactly one row per key, so any
-    * key-disjoint chunking of the feed folds to the same snapshot in
-    * any arrival order — which is why the batch oracle gates this
-    * stream too. `maxFilesPerTrigger=1` forces one merge per arriving
-    * file so the gate exercises repeated folding. The snapshot read
-    * is localCheckpoint'd to sever lineage from the files the
-    * overwrite replaces (same protocol as StatsTable.append). Retry
-    * safety: applyChanges is an idempotent upsert (ALL change keys
-    * anti-joined before the union), so an at-least-once replay of a
-    * batch whose overwrite committed but whose checkpoint didn't
-    * re-produces the same snapshot rather than duplicating inserts.
-    */
-  def streamCdcApply(
-      spark: SparkSession,
-      snapshotPath: String,
-      changesDir: String,
-      changesSchema: StructType,
-      checkpointDir: String,
-      keys: Seq[String],
-      compare: Seq[String]
-  ): StreamingQuery =
-    spark.readStream.schema(changesSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(changesDir)
-      .writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // EAGER checkpoint, deliberately (r20 lazy sweep skipped
-        // this one): the fold below OVERWRITES snapshotPath — base's
-        // blocks must be fully materialized BEFORE the write deletes
-        // the files they came from, or the job would scan a directory
-        // it is truncating
-        val base = spark.read.parquet(snapshotPath).localCheckpoint()
-        graft.ops.ChangeCapture.applyChanges(base, batch, keys, compare)
-          .write.mode("overwrite").parquet(snapshotPath)
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    ingest(spark, newDocsDir, schema, outDir, checkpointDir) { (batch, bid) =>
+      graft.ops.CorpusOps
+        .ingestGateWithState(spark, statePath, batch, "doc_id", "text", s"b$bid")
+    }
 
   /** Stream-stream time-bounded join: every view event pairs with the
     * same user's purchases in the trailing hour. Both sides carry

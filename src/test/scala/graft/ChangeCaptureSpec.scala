@@ -86,8 +86,13 @@ class ChangeCaptureSpec extends SparkSpecBase {
     changes.filter(col("k") % 2 === 0).coalesce(1).write.mode("append").parquet(feed)
     changes.filter(col("k") % 2 =!= 0).coalesce(1).write.mode("append").parquet(feed)
     def runStream(): Unit =
-      EventsStream.streamCdcApply(spark, snap, feed, changes.schema, ckpt,
-        Seq("k"), Seq("attr", "v")).awaitTermination()
+      EventsStream.foreachIncrement(spark, feed, changes.schema, ckpt,
+          maxFilesPerTrigger = Some(1)) { (b, _) =>
+        // eager: the write below overwrites the files `base` reads
+        val base = spark.read.parquet(snap).localCheckpoint()
+        ChangeCapture.applyChanges(base, b, Seq("k"), Seq("attr", "v"))
+          .write.mode("overwrite").parquet(snap)
+      }.awaitTermination()
     runStream()
     val once = spark.read.parquet(snap).orderBy("k").collect().map(_.toSeq).toSeq
     assert(once === newSnap.orderBy("k").collect().map(_.toSeq).toSeq,

@@ -564,8 +564,9 @@ class CorpusOpsSpec extends SparkSpecBase {
     CorpusOps.writeShardManifest(base, "doc_id", "text", shards = 8, s"$tmp/man")
     inc.coalesce(1).write.mode("overwrite").parquet(s"$tmp/in")
     def stream(): Unit =
-      EventsStream.streamShardAppend(spark, s"$tmp/man", s"$tmp/in",
-        inc.schema, s"$tmp/out", s"$tmp/ckpt").awaitTermination()
+      EventsStream.ingest(spark, s"$tmp/in", inc.schema, s"$tmp/out", s"$tmp/ckpt") {
+        (b, bid) => CorpusOps.appendToShards(spark, s"$tmp/man", b, "doc_id", "text", s"sb$bid")
+      }.awaitTermination()
     def state() = (
       spark.read.parquet(s"$tmp/out").orderBy("shard", "position")
         .collect().map(_.toSeq).toSeq,

@@ -268,30 +268,74 @@ class StreamSessionSpec extends SparkSpecBase {
       "(batch-id keyed dynamic overwrite)") {
     // the round-9 advice bug: plain mode("append") in foreachBatch
     // duplicates rows when a checkpoint-recovered micro-batch
-    // replays. All probe/score/eval sinks now key their output by
-    // inc=batchId and dynamic-overwrite — a replay rewrites its own
-    // partition. Proven here on the metrics sink (the advised site):
-    // wipe the checkpoint, rerun, output must be byte-identical.
-    import graft.ops.TextAnalysis
+    // replays. EventsStream.ingest keys every op's output by
+    // inc=b<batchId> and dynamic-overwrites, so a replay rewrites its
+    // own partition. Proven per op: wipe the checkpoint, rerun, the
+    // output must be identical. The substring probe was the last sink
+    // on plain append.
+    import graft.ops.{CorpusOps, TextAnalysis}
+    import org.apache.spark.sql.DataFrame
     import spark.implicits._
     val docs = GraftSession.table(spark, sf, "documents")
       .select(col("doc_id"), col("text"))
     val tmp = Files.createTempDirectory("evalreplay").toString
-    TextAnalysis.writeBm25Index(docs, "doc_id", "text", s"$tmp/idx", buckets = 8)
+    TextAnalysis.writeBm25Index(docs, "doc_id", "text", s"$tmp/bm25", buckets = 8)
+    CorpusOps.writeSubstringIndex(docs, "doc_id", "text", s"$tmp/sub", window = 8)
     val qs = Seq((1L, "spark window agg"), (2L, "customer query data"))
       .toDF("query_id", "qtext")
-    qs.coalesce(1).write.mode("overwrite").parquet(s"$tmp/q")
-    def run(): Unit =
-      EventsStream.streamRetrievalEval(spark, s"$tmp/idx", s"$tmp/q", qs.schema,
-        docs, s"$tmp/out", s"$tmp/ckpt").awaitTermination()
-    def state() = spark.read.parquet(s"$tmp/out")
-      .orderBy("query_id").collect().map(_.toSeq).toSeq
-    run()
-    val once = state()
-    assert(once.nonEmpty)
-    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(s"$tmp/ckpt"))
-    run()
-    assert(state() === once,
-      "checkpoint-wipe replay duplicated metric rows — sink not exactly-once")
+    val fresh = docs.filter(col("doc_id") < 10)
+      .select((col("doc_id") + 30000).as("doc_id"), col("text"))
+    val cases: Seq[(String, DataFrame, (DataFrame, Long) => DataFrame)] = Seq(
+      ("retrieval metrics", qs, { (b, _) =>
+        val top = TextAnalysis.probeBm25Index(spark, s"$tmp/bm25", b, "query_id", "qtext", k = 10)
+          .select(col("query_id"), col("doc_id"), col("rank"))
+        TextAnalysis.retrievalMetrics(top, docs, "doc_id", "text", b, "query_id", "qtext")
+      }),
+      ("substring dedup", fresh, { (b, _) =>
+        CorpusOps.probeSubstringIndex(spark, s"$tmp/sub", b, "doc_id", "text", window = 8)
+      }))
+    for ((name, input, op) <- cases) {
+      val dir = s"$tmp/${name.replace(' ', '_')}"
+      input.coalesce(1).write.mode("overwrite").parquet(s"$dir/in")
+      def run(): Unit =
+        EventsStream.ingest(spark, s"$dir/in", input.schema, s"$dir/out", s"$dir/ckpt")(op)
+          .awaitTermination()
+      def state() = spark.read.parquet(s"$dir/out")
+        .orderBy(input.columns.head).collect().map(_.toSeq).toSeq
+      run()
+      val once = state()
+      assert(once.nonEmpty, name)
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(s"$dir/ckpt"))
+      run()
+      assert(state() === once,
+        s"$name: checkpoint-wipe replay duplicated rows — sink not exactly-once")
+    }
+  }
+
+  test("ingest: an op that emits zero rows terminates, writes no inc= partition, " +
+      "and a schema'd read-back is empty") {
+    // the r18 read-back lesson: a probe whose every batch matches
+    // nothing leaves the partitioned sink without parquet files, so
+    // only a read with an explicit schema yields the empty frame the
+    // oracle can fail cleanly on
+    import org.apache.spark.sql.types.StructType
+    import spark.implicits._
+    val tmp = Files.createTempDirectory("emptyinc").toString
+    val input = (1L to 50L).toDF("event_id")
+    input.coalesce(1).write.parquet(s"$tmp/in")
+    val q = EventsStream.ingest(spark, s"$tmp/in", input.schema, s"$tmp/out", s"$tmp/ckpt") {
+      (b, _) => b.filter(col("event_id") < 0)
+    }
+    q.awaitTermination()
+    assert(q.exception.isEmpty && !q.isActive)
+    assert(q.recentProgress.map(_.numInputRows).sum === 50L,
+      "the stream must still consume its input")
+    val parts = Option(new java.io.File(s"$tmp/out").listFiles()).getOrElse(Array.empty)
+      .filter(_.getName.startsWith("inc="))
+    assert(parts.isEmpty, s"empty op wrote partitions: ${parts.map(_.getName).mkString(",")}")
+    val back = spark.read.schema(new StructType().add("event_id", "long"))
+      .parquet(s"$tmp/out").drop("inc")
+    assert(back.columns.toSeq === Seq("event_id"))
+    assert(back.count() === 0L)
   }
 }
