@@ -106,9 +106,9 @@ object QueriesMl {
         lit(Question).as("text"),
         col("text").as("text_b"),
         when(array_contains(toks, "vector"), 1L).otherwise(0L).as("gold"))
-      val top1 = KpiPost.explodeRanks(KpiPost.scoreQa(pairs, qa, "key"))
-        .filter(col("rank_num") === 1)
-        .select(col("key"), col("answer"))
+      val top1 = KpiPost.scoreQa(pairs, qa, "key")
+        .select(col("key"),
+          explode(transform(filter(col("candidates"), _("rank") === 1), _("answer"))).as("answer"))
       // populations count over ALL docs (left join): a doc the span
       // generator yields no candidates for (e.g. empty text) would
       // otherwise VANISH from the Spark side while the oracle counts

@@ -2,8 +2,7 @@ package graft.ops
 
 import graft.scorer.QaScorer
 
-import org.apache.spark.sql.{DataFrame, Encoders, Row}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -13,9 +12,10 @@ import org.apache.spark.sql.types._
   * → split tuple column → no-answer aggregation → top-k per
   * (pdf, question) → reverse kpi_id map → column order.
   *
-  * The Spark form fuses the rank-attach/melt/split dance (W4/R4/R5)
-  * into one posexplode over the candidate array — same rows out, one
-  * narrow pass, no wide intermediate.
+  * The Spark form gathers each (pdf, question) group's candidates into
+  * one array and derives the melt (W4/R4/R5), the no-answer row (A4)
+  * and the top-k (A5) from it with array expressions — one exchange,
+  * and the scorer's output has exactly one consumer.
   */
 object KpiPost {
 
@@ -35,73 +35,29 @@ object KpiPost {
       questionCol: String = "text",
       contextCol: String = "text_b",
       chunkSize: Int = 1000
-  ): DataFrame = {
-    val outSchema = StructType(df.schema.fields :+ StructField("candidates", candType, nullable = true))
-    val kIdx = df.schema.fieldIndex(keyCol)
-    val qIdx = df.schema.fieldIndex(questionCol)
-    val cIdx = df.schema.fieldIndex(contextCol)
-    df.mapPartitions { rows =>
-      rows.grouped(chunkSize).flatMap { chunk =>
-        val preds = scorer
-          .scoreBatch(chunk.iterator.map(r => (r.getLong(kIdx), r.getString(qIdx), r.getString(cIdx))))
-          .toArray
-        chunk.iterator.zip(preds.iterator).map { case (r, (_, cands)) =>
-          Row.fromSeq(r.toSeq :+ cands.map(c =>
-            Row(c.rank, c.answer, c.score, c.noAnsScore, c.noAnswerScorePlusBoost)))
-        }
-      }
-    }(Encoders.row(outSchema))
-  }
+  ): DataFrame =
+    Relevance.appendScores(df, StructField("candidates", candType, nullable = true),
+        keyCol, questionCol, contextCol, chunkSize)(scorer.scoreBatch) { cands =>
+      cands.map(c => Row(c.rank, c.answer, c.score, c.noAnsScore, c.noAnswerScorePlusBoost))
+    }
 
-  /** W4+R4+R5: one row per (input row, rank) with the reference's
-    * melted column names (`rank` = "rank_i").
-    */
-  def explodeRanks(scored: DataFrame): DataFrame =
-    scored
-      .select(col("*"), explode(col("candidates")).as("c"))
-      .drop("candidates")
-      .withColumn("rank", concat(lit("rank_"), col("c.rank")))
-      // numeric rank kept for tie-breaks: the string form sorts
-      // "rank_10" before "rank_2"
-      .withColumn("rank_num", col("c.rank"))
-      .withColumn("answer", col("c.answer"))
-      .withColumn("score", col("c.score"))
-      .withColumn("no_ans_score", col("c.noAnsScore"))
-      .withColumn("no_answer_score_plus_boost", col("c.noAnswerScorePlusBoost"))
-      .drop("c")
+  /** One melted row: a candidate with its input row's columns. */
+  private def entry(rank: Column, answer: Column, score: Column, noAns: Column, noAnsPlus: Column,
+      page: Column, paragraph: Column, source: Column, key: Column): Column =
+    struct(rank.as("rank"), answer.as("answer"), score.as("score"), noAns.as("no_ans_score"),
+      noAnsPlus.as("no_answer_score_plus_boost"), page.as("page"), paragraph.as("paragraph"),
+      source.as("source"), key.as("key"))
 
-  /** A4: per (pdf_name, question-text) group where every rank_1 answer
-    * is "no_answer", emit one no_answer row carrying the max rank_1
-    * score (text_kpi_infer.py:17-29, 251-265).
-    */
-  def noAnswerRows(melted: DataFrame): DataFrame =
-    melted
-      .filter(col("rank") === "rank_1")
-      .groupBy(col("pdf_name"), col("text"))
-      .agg(
-        every(col("answer") === "no_answer").as("all_no_answer"),
-        max(col("score")).as("score")
-      )
-      .filter(col("all_no_answer"))
-      .drop("all_no_answer")
-      .withColumn("answer", lit("no_answer"))
-      .withColumn("source", lit("Text"))
+  /** Ascending with nulls first, as an `array_sort` comparator term. */
+  private def ascNullsFirst(l: Column, r: Column): Column =
+    when(l.isNull && r.isNull, 0).when(l.isNull, -1).when(r.isNull, 1)
+      .when(l < r, -1).when(l > r, 1).otherwise(0)
 
-  /** A5: keep the `topK` highest-score rows per (pdf_name, text).
-    * `nlargest` tie order is pandas-positional; engine semantics are a
-    * total order (score desc, rank asc, key asc) so results are
-    * deterministic under any partitioning.
-    */
-  def topKPerGroup(df: DataFrame, topK: Int, tieBreak: Seq[String]): DataFrame = {
-    val order = col("score").desc +: tieBreak.map(col(_).asc)
-    val w     = Window.partitionBy(col("pdf_name"), col("text")).orderBy(order: _*)
-    df.withColumn("__rn", row_number().over(w)).filter(col("__rn") <= topK).drop("__rn")
-  }
-
-  /** Full chain: QA scoring → melt → span/no-answer union → top-k →
-    * kpi_id reverse lookup → reference column order
-    * (text_kpi_infer.py:251-297). `questions` is the kpi_mapping dim
-    * (question, kpi_id) — broadcast for the reverse map.
+  /** Full chain: QA scoring → per-(pdf_name, text) candidate array →
+    * spans + A4 no-answer row → A5 top-k → kpi_id reverse lookup →
+    * reference column order (text_kpi_infer.py:251-297). `questions`
+    * is the kpi_mapping dim (question, kpi_id) — broadcast for the
+    * reverse map.
     */
   def kpiChain(
       relevant: DataFrame,
@@ -110,45 +66,41 @@ object KpiPost {
       keyCol: String,
       topK: Int = 4
   ): DataFrame = {
-    // materialize ONE scored stage on the group keys: the span branch
-    // and the no-answer aggregation both consume `melted`, and without
-    // materialization each re-runs the scorer over every partition —
-    // 2× model inference, the dominant cost with a real model.
-    // r19: the repartition alone never materialized (and the scorer's
-    // mapPartitions closure canonicalizes per-instance, so exchange
-    // reuse cannot dedup the two copies either). r20 (verdict task
-    // 3): the eager localCheckpoint paid a dedicated materialization
-    // job that the bench's mock scorer turned into a measured net
-    // LOSS (m2 0.853 → 0.941 s) — a lazy persist gives the same
-    // single-inference guarantee (both consumers resolve to ONE
-    // InMemoryRelation; per-partition block locks mean one compute,
-    // every other reader waits then reads the cached block —
-    // spec-pinned by the counting scorer in OpsSpec) with zero extra
-    // action: the scorer runs inside the first consuming job.
-    // noAnswerRows' groupBy still needs no further exchange: the
-    // InMemoryRelation preserves the repartition's group-key
-    // partitioning. Not unpersisted here by design — the caller
-    // consumes the result lazily (an unpersist in a finally would
-    // empty the cache before it ever filled); the frame is
-    // |relevant|·nBest rows, and session hygiene / unpersist at the
-    // caller reclaims it.
-    val melted =
-      explodeRanks(scoreQa(relevant, scorer, keyCol))
-        .repartition(col("pdf_name"), col("text"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val spans  = melted.filter(col("answer") =!= "no_answer")
-    val unioned = spans.unionByName(noAnswerRows(melted), allowMissingColumns = true)
-    val top = topKPerGroup(unioned, topK, Seq("rank_num", keyCol)).drop("rank", "rank_num")
+    val scored = scoreQa(relevant, scorer, keyCol)
+    def nullOf(c: String) = lit(null).cast(scored.schema(c).dataType)
+    val melted = transform(col("candidates"), c => entry(c("rank"), c("answer"), c("score"),
+      c("noAnsScore"), c("noAnswerScorePlusBoost"),
+      col("page"), col("text_b"), col("source"), col(keyCol)))
+    val groups = scored.groupBy(col("pdf_name"), col("text"))
+      .agg(flatten(collect_list(melted)).as("e"))
+    val spans = filter(col("e"), _("answer") =!= "no_answer")
+    // A4 (text_kpi_infer.py:17-29, 251-265): the group's non-null
+    // rank-1 answers exist and are all no_answer → one no_answer row
+    // carrying the max rank-1 score
+    val rank1 = filter(col("e"), _("rank") === 1)
+    val allNoAnswer = exists(rank1, _("answer").isNotNull) &&
+      forall(rank1, c => c("answer").isNull || c("answer") === "no_answer")
+    val noAnswer = entry(lit(null).cast(IntegerType), lit("no_answer"),
+      array_max(transform(rank1, _("score"))), lit(null).cast(DoubleType), lit(null).cast(DoubleType),
+      nullOf("page"), nullOf("text_b"), lit("Text"), nullOf(keyCol))
+    // A5: `nlargest` tie order is pandas-positional; engine semantics
+    // are a total order (score desc, then rank and key asc with nulls
+    // first) so results are deterministic under any partitioning
+    val byScoreRankKey = (l: Column, r: Column) =>
+      Seq(ascNullsFirst(r("score"), l("score")), ascNullsFirst(l("rank"), r("rank")),
+        ascNullsFirst(l("key"), r("key")))
+        .reduceRight((c, rest) => when(c =!= 0, c).otherwise(rest))
+    // the spans, plus the no-answer entry when the group qualifies
+    val kept = concat(spans, filter(array(noAnswer), _ => allNoAnswer))
+    val top = groups.select(col("pdf_name"), col("text").as("kpi"),
+      explode(slice(array_sort(kept, byScoreRankKey), 1, topK)).as("r"))
     top
       .join(broadcast(questions.select(col("question"), col("kpi_id"))),
-        top("text") === col("question"), "left")
-      .drop("question")
-      .withColumnRenamed("text", "kpi")
-      .withColumnRenamed("text_b", "paragraph")
+        top("kpi") === col("question"), "left")
       .select(
-        Seq("pdf_name", "kpi", "kpi_id", "answer", "page").map(col) ++
-          Seq(col("paragraph"), col("source"), col("score"),
-            col("no_ans_score"), col("no_answer_score_plus_boost")): _*
+        Seq(col("pdf_name"), col("kpi"), col("kpi_id")) ++
+          Seq("answer", "page", "paragraph", "source", "score", "no_ans_score",
+            "no_answer_score_plus_boost").map(f => col(s"r.$f").as(f)): _*
       )
   }
 }

@@ -193,39 +193,22 @@ object Pipeline {
   /** §3.3 warehouse publish: write a DataFrame as parquet at `path`
     * and register an external table over it (S7: demo1-create-tables
     * parquet + external DDL), with snakified column names.
+    *
+    * With `partitionCols` it is the fact-table layout for 100 TB: one
+    * directory per partition value (the S3 prefix layout of the
+    * reference's external Trino tables, demo1-create-tables.ipynb cells
+    * 14-19), so downstream dim-filtered joins scan only the matching
+    * partitions (dynamic partition pruning — proven live in
+    * PlanAssertSpec j10). The external DDL infers data+partition schema
+    * from the written layout; MSCK keeps the catalog's partition list
+    * in sync on re-publish.
     */
   def publishParquetExternal(
       spark: SparkSession,
       df: DataFrame,
       path: String,
-      table: String
-  ): DataFrame = {
-    import graft.functions.TextFns
-    val renamed = TextFns.snakifyColumns(df.columns).foldLeft(df) {
-      case (d, (from, to)) => if (from == to) d else d.withColumnRenamed(from, to)
-    }
-    renamed.write.mode("overwrite").parquet(path)
-    spark.sql(s"DROP TABLE IF EXISTS $table")
-    spark.sql(s"CREATE TABLE $table USING PARQUET LOCATION '$path'")
-    spark.sql(s"SELECT * FROM $table LIMIT 5") // smoke readback, reference cells 20-21
-  }
-
-  /** §3.3 warehouse publish, PARTITIONED: the fact-table layout for
-    * 100 TB — [[publishParquetExternal]] plus a partition spec, so the
-    * published table is one directory per partition value (the S3
-    * prefix layout of the reference's external Trino tables,
-    * demo1-create-tables.ipynb cells 14-19) and downstream dim-filtered
-    * joins scan only the matching partitions (dynamic partition
-    * pruning — proven live in PlanAssertSpec j10). The external DDL
-    * infers data+partition schema from the written layout; MSCK keeps
-    * the catalog's partition list in sync on re-publish.
-    */
-  def publishParquetPartitionedExternal(
-      spark: SparkSession,
-      df: DataFrame,
-      path: String,
       table: String,
-      partitionCols: Seq[String]
+      partitionCols: Seq[String] = Nil
   ): DataFrame = {
     import graft.functions.TextFns
     val renamed = TextFns.snakifyColumns(df.columns).foldLeft(df) {
@@ -234,8 +217,8 @@ object Pipeline {
     renamed.write.mode("overwrite").partitionBy(partitionCols: _*).parquet(path)
     spark.sql(s"DROP TABLE IF EXISTS $table")
     spark.sql(s"CREATE TABLE $table USING PARQUET LOCATION '$path'")
-    spark.sql(s"MSCK REPAIR TABLE $table")
-    spark.sql(s"SELECT * FROM $table LIMIT 5")
+    if (partitionCols.nonEmpty) spark.sql(s"MSCK REPAIR TABLE $table")
+    spark.sql(s"SELECT * FROM $table LIMIT 5") // smoke readback, reference cells 20-21
   }
 
   /** Idempotent skip-processed memoization (the reference's

@@ -4,7 +4,7 @@ import graft.scorer.RelevanceScorer
 
 import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, StructType}
+import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
 
 /** Relevance stage: question × paragraph pairing plus pluggable
   * classifier inference (SURVEY §2.3 J3, §2.8 M1).
@@ -44,20 +44,34 @@ object Relevance {
       textCol: String = "text",
       textBCol: String = "text_b",
       chunkSize: Int = 1000
-  ): DataFrame = {
-    val outSchema = StructType(pairs.schema.fields :+
-      org.apache.spark.sql.types.StructField("prob", DoubleType, nullable = false))
-    val kIdx  = pairs.schema.fieldIndex(keyCol)
-    val tIdx  = pairs.schema.fieldIndex(textCol)
-    val tbIdx = pairs.schema.fieldIndex(textBCol)
-    pairs.mapPartitions { rows =>
+  ): DataFrame =
+    appendScores(pairs, StructField("prob", DoubleType, nullable = false),
+      keyCol, textCol, textBCol, chunkSize)(scorer.scoreBatch)(identity)
+
+  /** The scorer seam shared by M1 and M2: `chunkSize`-row batches of
+    * (key, a, b) per partition go to `scoreBatch`, and each input row
+    * comes out with one appended `out` column holding `toCell` of its
+    * score.
+    */
+  private[ops] def appendScores[S](
+      df: DataFrame,
+      out: StructField,
+      keyCol: String,
+      aCol: String,
+      bCol: String,
+      chunkSize: Int
+  )(
+      scoreBatch: Iterator[(Long, String, String)] => Iterator[(Long, S)]
+  )(toCell: S => Any): DataFrame = {
+    val outSchema = StructType(df.schema.fields :+ out)
+    val kIdx = df.schema.fieldIndex(keyCol)
+    val aIdx = df.schema.fieldIndex(aCol)
+    val bIdx = df.schema.fieldIndex(bCol)
+    df.mapPartitions { rows =>
       rows.grouped(chunkSize).flatMap { chunk =>
-        val scores = scorer
-          .scoreBatch(chunk.iterator.map(r => (r.getLong(kIdx), r.getString(tIdx), r.getString(tbIdx))))
-          .toArray
-        chunk.iterator.zip(scores.iterator).map { case (r, (_, p)) =>
-          Row.fromSeq(r.toSeq :+ p)
-        }
+        val batch  = chunk.iterator.map(r => (r.getLong(kIdx), r.getString(aIdx), r.getString(bIdx)))
+        val scores = scoreBatch(batch).toArray
+        chunk.iterator.zip(scores.iterator).map { case (r, (_, s)) => Row.fromSeq(r.toSeq :+ toCell(s)) }
       }
     }(Encoders.row(outSchema))
   }

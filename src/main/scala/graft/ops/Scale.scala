@@ -60,11 +60,7 @@ object Scale {
     */
   def shared(df: DataFrame): DataFrame =
     if (df.isStreaming) df
-    else df.localCheckpoint(
-      // -Dgraft.shared.eager=1: measurement escape hatch for A/B'ing
-      // the lazy default against the r19 eager shape in one JVM
-      eager = sys.props.get("graft.shared.eager").contains("1"),
-      storageLevel = sharedLevel(df))
+    else df.localCheckpoint(eager = false, storageLevel = sharedLevel(df))
 
   /** Default byte threshold above which [[shared]] checkpoints
     * DISK_ONLY. Overridden per session by

@@ -26,10 +26,11 @@ import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
   * driver-side table scan. Decoding covers exactly the types the
   * engine's meta writers emit (int32/int64/float/double/boolean/
   * binary-UTF8, and LIST of strings for the BM25 applied ledger);
-  * anything else fails loudly so a schema change cannot be silently
-  * misread. Readers keep identical VALUES to the old
-  * `spark.read.parquet(...).collect()` — every converted call site
-  * stays gated by the oracle rows that consume it.
+  * anything else, a date or decimal stored as an int included, fails
+  * loudly so a schema change cannot be silently misread. Readers keep
+  * identical VALUES to the old `spark.read.parquet(...).collect()` —
+  * every converted call site stays gated by the oracle rows that
+  * consume it.
   */
 object TinyParquet {
 
@@ -67,7 +68,7 @@ object TinyParquet {
   }
 
   /** All rows of the tiny layout at `dir` (non-recursive; `_`/`.`
-    * control files skipped), in file order. Fails loudly on an
+    * control files skipped), files in name order. Fails loudly on an
     * oversized layout or an undecodable type.
     */
   def rows(spark: org.apache.spark.sql.SparkSession, dir: String): Seq[TinyRow] = {
@@ -76,6 +77,7 @@ object TinyParquet {
     val files = fs.listStatus(p).toSeq
       .filter(s => s.isFile && !s.getPath.getName.startsWith("_") &&
         !s.getPath.getName.startsWith("."))
+      .sortBy(_.getPath.getName)
     val bytes = files.map(_.getLen).sum
     require(bytes <= MaxBytes,
       s"TinyParquet.rows($dir): ${bytes} bytes exceeds the $MaxBytes-byte tiny-layout bound — " +
@@ -111,17 +113,23 @@ object TinyParquet {
   }
 
   private def prim(g: Group, i: Int): Any = {
-    val pt = g.getType.getType(i).asPrimitiveType()
+    val pt  = g.getType.getType(i).asPrimitiveType()
+    val ann = pt.getLogicalTypeAnnotation
+    // integers carry no annotation or a plain signed int one: a DATE,
+    // DECIMAL or TIMESTAMP int must not decode as its raw number
+    val plainInt = ann == null || (ann match {
+      case a: LogicalTypeAnnotation.IntLogicalTypeAnnotation => a.isSigned
+      case _                                                 => false
+    })
     pt.getPrimitiveTypeName match {
-      case INT32   => g.getInteger(i, 0)
-      case INT64   => g.getLong(i, 0)
-      case FLOAT   => g.getFloat(i, 0)
-      case DOUBLE  => g.getDouble(i, 0)
-      case BOOLEAN => g.getBoolean(i, 0)
-      case BINARY if pt.getLogicalTypeAnnotation ==
-        LogicalTypeAnnotation.stringType() => g.getString(i, 0)
+      case INT32 if plainInt => g.getInteger(i, 0)
+      case INT64 if plainInt => g.getLong(i, 0)
+      case FLOAT             => g.getFloat(i, 0)
+      case DOUBLE            => g.getDouble(i, 0)
+      case BOOLEAN           => g.getBoolean(i, 0)
+      case BINARY if ann == LogicalTypeAnnotation.stringType() => g.getString(i, 0)
       case other => throw new IllegalStateException(
-        s"TinyParquet: unsupported primitive ${other} for field ${pt.getName} — " +
+        s"TinyParquet: unsupported primitive ${other} (annotation $ann) for field ${pt.getName} — " +
           "extend the decoder rather than letting a meta field be misread")
     }
   }

@@ -1,7 +1,7 @@
 package graft
 
 import graft.ops.{Dedup, KpiPost, Multimodal, Relevance, Similarity, TextAnalysis}
-import graft.scorer.{MockQaScorer, MockRelevanceScorer}
+import graft.scorer.{MockQaScorer, MockRelevanceScorer, QaCandidate}
 
 import org.apache.spark.sql.functions._
 
@@ -1635,14 +1635,91 @@ class ScorerPipelineSpec extends SparkSpecBase {
     assert(out.filter(col("kpi") === "q one" && col("kpi_id") =!= 1.0).count() === 0)
   }
 
+  /** Hand-scored fixture, one input row per key: (pdf_name, text,
+    * key, candidates); page = key, paragraph = "para <key>". Every
+    * candidate carries no_ans_score = key/100 and plus-boost = that − 15.
+    */
+  private val handScored: Seq[(String, String, Long, Seq[QaCandidate])] = {
+    def c(rank: Int, answer: String, score: Double, key: Long) =
+      QaCandidate(rank, answer, score, key / 100.0, key / 100.0 - 15)
+    Seq(
+      // rank-1 answers all no_answer → one no_answer row at 0.9
+      ("a.pdf", "q1", 1L, Seq(c(1, "no_answer", 0.9, 1), c(2, "x y z", 0.5, 1))),
+      ("a.pdf", "q1", 2L, Seq(c(1, "no_answer", 0.7, 2), c(2, "p q", 0.8, 2))),
+      // only empty candidate arrays → no rows
+      ("a.pdf", "q2", 10L, Nil),
+      ("a.pdf", "q2", 11L, Nil),
+      // four entries tie at 0.6: no_answer, then rank, then key
+      ("b.pdf", "q1", 21L,
+        Seq(c(1, "no_answer", 0.5, 21), c(2, "d two", 0.6, 21), c(3, "d three", 0.6, 21))),
+      ("b.pdf", "q1", 22L,
+        Seq(c(1, "no_answer", 0.6, 22), c(2, "c two", 0.6, 22), c(3, "c three", 0.2, 22))),
+      // a real rank-1 answer → no no_answer row
+      ("b.pdf", "q2", 30L, Seq(c(1, "real", 0.7, 30))),
+      ("b.pdf", "q2", 31L, Seq(c(1, "no_answer", 0.9, 31), c(2, "other", 0.3, 31))))
+  }
+
+  private def handChain(topK: Int) = {
+    import spark.implicits._
+    val rel = handScored.map { case (pdf, q, k, _) => (pdf, k, q, s"para $k", "Text", k) }
+      .toDF("pdf_name", "page", "text", "text_b", "source", "key")
+    KpiPost.kpiChain(rel, new FixedQaScorer(handScored.map(r => r._3 -> r._4).toMap),
+      Seq(("q1", 1.0), ("q2", 2.0)).toDF("question", "kpi_id"), "key", topK)
+  }
+
+  test("kpi chain edge cases on a hand-scored fixture: no-answer row, empty group, tie order, top-k") {
+    def span(pdf: String, q: String, answer: String, k: Long, score: Double) =
+      Seq(pdf, q, if (q == "q1") 1.0 else 2.0, answer, k, s"para $k", "Text", score, k / 100.0, k / 100.0 - 15)
+    def noAnswer(pdf: String, score: Double) =
+      Seq(pdf, "q1", 1.0, "no_answer", null, null, "Text", score, null, null)
+    val tieOrder = Seq(noAnswer("b.pdf", 0.6), span("b.pdf", "q1", "d two", 21, 0.6),
+      span("b.pdf", "q1", "c two", 22, 0.6), span("b.pdf", "q1", "d three", 21, 0.6))
+    val others = Seq(
+      noAnswer("a.pdf", 0.9), span("a.pdf", "q1", "p q", 2, 0.8), span("a.pdf", "q1", "x y z", 1, 0.5),
+      span("b.pdf", "q2", "real", 30, 0.7), span("b.pdf", "q2", "other", 31, 0.3))
+    val out4 = handChain(topK = 4).collect().map(_.toSeq).toSet
+    assert(out4 === (tieOrder ++ others).toSet)
+    // the tie order shows in which rows each smaller cut keeps
+    (1 to 3).foreach { k =>
+      val out = handChain(topK = k).collect().map(_.toSeq)
+        .filter(r => r.head == "b.pdf" && r(1) == "q1").toSet
+      assert(out === tieOrder.take(k).toSet, s"topK = $k")
+    }
+    (1 to 4).foreach { k =>
+      val perGroup = handChain(topK = k).groupBy("pdf_name", "kpi").count().collect().map(_.getLong(2))
+      assert(perGroup.max <= k, s"topK = $k")
+    }
+  }
+
+  test("kpi chain plan: one grouped pass — no cache, no union, one hash exchange") {
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.{SparkPlan, UnionExec}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec        => nodes(q.plan)
+      case other                    => other +: other.children.flatMap(nodes)
+    }
+    val out = handChain(topK = 4)
+    out.collect()
+    val plan = nodes(out.queryExecution.executedPlan)
+    assert(!plan.exists(_.isInstanceOf[InMemoryTableScanExec]), "kpiChain caches a stage")
+    assert(!plan.exists(_.isInstanceOf[UnionExec]), "kpiChain unions two branches")
+    val hashExchanges = plan.collect {
+      case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[HashPartitioning] => e
+    }
+    assert(hashExchanges.size === 1, s"expected one hash exchange, got:\n${out.queryExecution.executedPlan}")
+  }
+
   test("kpi chain: the scorer runs ONCE per input row despite two melted consumers") {
-    // r20 (verdict task 3): kpiChain materializes the scored stage
-    // with a lazy persist — the span branch AND the no-answer
-    // aggregation both consume it, and without the single
-    // InMemoryRelation each would re-run inference over every
-    // partition (2× model cost with a real model). The counting
-    // scorer proves the protection holds: one full action over the
-    // chain scores each relevant row exactly once.
+    // kpiChain's scored stage has exactly one consumer, the grouped
+    // pass that derives spans, the no-answer row and the top-k, so the
+    // scorer runs once per row by construction — a second consumer
+    // would re-run inference over every partition (2× model cost with
+    // a real model). The counting scorer pins it: one full action over
+    // the chain scores each relevant row exactly once.
     KpiChainCountingScorer.calls.set(0L)
     val rel = Relevance.relevantPairs(pairs, new MockRelevanceScorer, "key", 0.7)
     val nRel = rel.count()
@@ -1671,6 +1748,12 @@ class KpiChainCountingScorer(nBest: Int)
 
 object KpiChainCountingScorer {
   val calls = new java.util.concurrent.atomic.AtomicLong(0L)
+}
+
+/** QA scorer that answers each key with a fixed candidate list. */
+class FixedQaScorer(byKey: Map[Long, Seq[QaCandidate]]) extends graft.scorer.QaScorer {
+  def scoreBatch(batch: Iterator[(Long, String, String)]): Iterator[(Long, Seq[QaCandidate])] =
+    batch.map { case (k, _, _) => (k, byKey(k)) }
 }
 
 class TextAnalysisSpec extends SparkSpecBase {

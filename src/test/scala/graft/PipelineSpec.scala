@@ -60,7 +60,7 @@ class PipelineSpec extends SparkSpecBase {
     val src = GraftSession.table(spark, sf, "orders")
       .select(col("o_orderkey"), col("o_totalprice"), col("o_orderpriority"))
     val path = Files.createTempDirectory("graft-part-pub").toFile.getAbsolutePath + "/orders_part"
-    val smoke = Pipeline.publishParquetPartitionedExternal(
+    val smoke = Pipeline.publishParquetExternal(
       spark, src, path, "graft_test_part", Seq("o_orderpriority"))
     assert(smoke.count() === 5)
     // physical layout: one directory per priority value
