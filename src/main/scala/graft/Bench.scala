@@ -501,9 +501,6 @@ object Bench {
     // became the queries-map DEFAULT; the bench opts back into the
     // memo because its best-of-2 needs the second run to time the
     // probe alone, not the index write — the round-7 lesson).
-    // Unconditional: buildOnce already gives fresh=1 precedence over
-    // memo=1, so an explicit -Dgraft.gate.fresh=1 still wins, and a
-    // fresh=0 no longer silently disables the memo (round-12 advice).
     System.setProperty("graft.gate.memo", "1")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus  = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt

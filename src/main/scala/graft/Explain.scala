@@ -15,7 +15,6 @@ object Explain {
   def main(args: Array[String]): Unit = {
     // measure like Bench: persisted-index gate rows reuse the per-JVM
     // build memo so the timed window is the probe, not the build
-    // (explicit -Dgraft.gate.fresh=1 still wins — see QueriesScale)
     System.setProperty("graft.gate.memo", "1")
     val sfDir = args.head
     val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt, "graft-explain")

@@ -186,16 +186,13 @@ object QueriesScale {
     // gate artifact builds from scratch (freshGatePath wipes the dir
     // first) under ANY entry point — a harness invoking
     // `SparkEntry.queries` through its own runner, not `graft.Verify`,
-    // gets the same no-stale-state guarantee Verify used to opt into
-    // via graft.gate.fresh. Each build lambda is self-sufficient by
-    // construction (it writes the full artifact its query probes), so
-    // fresh mode only costs the rebuild. The per-JVM MEMO is now the
-    // opt-IN (`-Dgraft.gate.memo=1`, set by Bench): its best-of-2
-    // needs the second run to time the probe alone, and the gate data
-    // under a dir never changes within a JVM. graft.gate.fresh=1
-    // still forces fresh even when the memo was requested.
-    if (sys.props.get("graft.gate.memo").contains("1") &&
-        !sys.props.get("graft.gate.fresh").contains("1"))
+    // gets the same no-stale-state guarantee. Each build lambda is
+    // self-sufficient by construction (it writes the full artifact its
+    // query probes), so fresh mode only costs the rebuild. The per-JVM
+    // MEMO is the opt-IN (`-Dgraft.gate.memo=1`, set by Bench and
+    // Explain): its best-of-2 needs the second run to time the probe
+    // alone, and the gate data under a dir never changes within a JVM.
+    if (sys.props.get("graft.gate.memo").contains("1"))
       builtIndexes.computeIfAbsent(s"$tag|$dir", { _ =>
         val path = GraftSession.freshGatePath(tag, dir)
         build(path)
@@ -1773,7 +1770,7 @@ object QueriesScale {
 
     "x_ann_ivf_refined" -> ((s, dir) => {
       val e = emb(s, dir)
-      Similarity.ivfTopKRefined(e, e.filter(col("vec_id") < 5), "vec_id", "embedding",
+      Similarity.ivfTopK(e, e.filter(col("vec_id") < 5), "vec_id", "embedding",
           k = 3, nCells = 16, nProbe = 4, refineIters = 1)
         .select(col("query_id"), col("rank"), col("neighbor_id"), col("cosine"))
         .orderBy(col("query_id"), col("rank"))
@@ -1799,7 +1796,7 @@ object QueriesScale {
     // row's recall twin in PqSpec measures what refinement buys.
     "x_ann_pq_refined" -> ((s, dir) => {
       val e = emb(s, dir)
-      Similarity.pqTopKRefined(e, e.filter(col("vec_id") < 5), "vec_id", "embedding",
+      Similarity.pqTopK(e, e.filter(col("vec_id") < 5), "vec_id", "embedding",
           k = 3, nSub = 4, ks = 16, refineIters = 1)
         .select(col("query_id"), col("rank"), col("neighbor_id"), col("cos_adc"))
         .orderBy(col("query_id"), col("rank"))
@@ -1917,11 +1914,11 @@ object QueriesScale {
         // The oracle's centroid CTE computes the SAME formula from
         // count(r), so the row stays hash-gated at every sf.
         val base = e.filter(pmod(col("vec_id"), lit(7)) =!= 3)
-        // scanLayout: the join reads EVERY cell per call — few
+        // Scan layout: the join reads EVERY cell per call — few
         // range-sorted files instead of one directory per cell
         Similarity.writeIvfIndex(base, "vec_id", "embedding", p,
           nCells = Similarity.cellsForIndexJoin(base.count()),
-          scanLayout = true)
+          layout = Similarity.IvfLayout.Scan)
       }
       Similarity.annJoinWithIndex(s, path,
           e.filter(pmod(col("vec_id"), lit(7)) === 3),
@@ -2148,7 +2145,7 @@ object QueriesScale {
     // deterministic key-hash order (DetHash — "random" yet
     // replayable), flattening the topic distribution without a global
     // shuffle (the window sorts per cluster, population-bounded when
-    // k comes from cellsFor).
+    // k grows with the corpus).
     "x_sample_cluster_balanced" -> ((s, dir) =>
       Similarity.clusterBalancedSample(emb(s, dir), "vec_id", "embedding",
           k = 8, iters = 1, cap = 5)
@@ -3315,7 +3312,8 @@ object QueriesScale {
     "x_ann_index_q" -> ((s, dir) => {
       val e    = emb(s, dir)
       val path = GraftSession.freshGatePath("qivf", dir)
-      Similarity.writeIvfIndexQuantized(e, "vec_id", "embedding", path, nCells = 16)
+      Similarity.writeIvfIndex(e, "vec_id", "embedding", path, nCells = 16,
+        layout = Similarity.IvfLayout.Quantized)
       Similarity.probeIvfIndexQuantized(s, path, e.filter(col("vec_id") < 5),
           "vec_id", "embedding", k = 3, nProbe = 4)
         .select(col("query_id"), col("rank"), col("neighbor_id"), col("qcosine"))
@@ -3604,7 +3602,8 @@ object QueriesScale {
     "s9_stream_ann" -> ((s, dir) => {
       val e = emb(s, dir)
       val indexPath = buildOnce("qivfs", dir)(p =>
-        Similarity.writeIvfIndexQuantized(e, "vec_id", "embedding", p, nCells = 16))
+        Similarity.writeIvfIndex(e, "vec_id", "embedding", p, nCells = 16,
+          layout = Similarity.IvfLayout.Quantized))
       val qs = e.filter(col("vec_id") < 5).select(col("vec_id"), col("embedding"))
       val qDir = GraftSession.freshGatePath("annqstream", dir)
       qs.coalesce(1).write.mode("overwrite").parquet(qDir)

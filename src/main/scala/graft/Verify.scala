@@ -10,12 +10,9 @@ object Verify {
     // manifests) build FRESH for every query invocation — never
     // reused from a per-JVM memo — so a gate row can never fold
     // against stale or foreign state (the round-9 x_shard_append /
-    // s9_stream_shard driver-red class). Round 12: fresh-build is now
-    // the queries-map DEFAULT under any entry point (Bench opts into
-    // the memo via graft.gate.memo); the explicit property stays as
-    // documentation of intent and as a belt against a future default
-    // change.
-    System.setProperty("graft.gate.fresh", "1")
+    // s9_stream_shard stale-state failures). Fresh-build is the
+    // queries-map DEFAULT under any entry point (round 12); only
+    // graft.gate.memo, which Verify never sets, turns the memo on.
     // gate scratch lives INSIDE the driver-provided outDir
     // (per-invocation-private) — the strongest form of the round-11
     // countermeasure; entry points that never set the property get

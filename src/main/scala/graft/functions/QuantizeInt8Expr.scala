@@ -99,7 +99,8 @@ case class QuantizeInt8Expr(child: Expression) extends UnaryExpression {
   * `struct(qb: binary, scale: double)` with one signed byte per
   * component — identical quantized values (same max-abs scale, same
   * half-away rounding), 4× smaller at rest. The layout
-  * [[graft.ops.Similarity.writeIvfIndexQuantized]] persists.
+  * [[graft.ops.Similarity.writeIvfIndex]] persists under
+  * `IvfLayout.Quantized`.
   *
   * Registered as SQL function `quantize_i8b` via
   * [[graft.GraftExtensions]].

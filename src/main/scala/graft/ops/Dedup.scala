@@ -944,7 +944,7 @@ object Dedup {
     * fraction of a percent of the index): probe bands equi-join the
     * stored bands, bucket-sorted files give parquet-stat pruning
     * within each band partition. Same build-once/probe-many pattern
-    * as [[Similarity.writeIvfIndexQuantized]].
+    * as [[Similarity.writeIvfIndex]].
     */
   def writeMinhashIndexMd5(
       df: DataFrame,

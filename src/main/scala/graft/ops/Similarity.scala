@@ -1,8 +1,10 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 
 /** Approximate-nearest-neighbor search over an embedding column
   * (`array<float>`). Two tiers:
@@ -100,6 +102,15 @@ object Similarity {
     * whose id hashes into the first `nCells` slots (deterministic
     * sample), every corpus vector is assigned to its nearest centroid,
     * and each query probes the `nProbe` nearest cells.
+    *
+    * `refineIters` k-means passes ([[lloyd]]) re-center every cell on
+    * the exact decimal SUM of its members before the final assignment:
+    * cosine is scale-invariant, so the unnormalized sum IS the mean
+    * direction, and the decimal aggregation is exact and
+    * order-independent (a double mean would make the argmax
+    * partition-layout-dependent). Refined centroids track the data
+    * distribution instead of the id sample, recovering recall the
+    * arbitrary sample loses.
     */
   def ivfTopK(
       corpus: DataFrame,
@@ -108,20 +119,21 @@ object Similarity {
       vecCol: String,
       k: Int,
       nCells: Int = 16,
-      nProbe: Int = 4
+      nProbe: Int = 4,
+      refineIters: Int = 0
   ): DataFrame = {
     val c         = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"))
-    val centroids = sampleCentroids(c, nCells)
+    val centroids = lloyd(c, nCells, refineIters)
     probeTopK(ivfAssign(c, centroids), centroids, queries, idCol, vecCol, k, nProbe)
   }
 
   /** The IVF tuning curve in ONE pass: per-query top-k at EVERY probe
     * cutoff in `probes`, sharing a single corpus assignment and a
     * single candidate-scoring join. The probe selection keeps each
-    * cell's per-query rank (`cell_rn` ≤ max(probes)); candidates are
+    * cell's per-query rank (`prank` ≤ max(probes)); candidates are
     * scored once against the widest selection, then every cutoff is
     * derived by replicating only the bounded candidate rows
-    * (explode over `probes`, filter `cell_rn` ≤ cutoff) and
+    * (explode over `probes`, filter `prank` ≤ cutoff) and
     * re-windowing — corpus-scale work is paid once regardless of how
     * many cutoffs the curve sweeps. Each neighbor lives in exactly
     * one cell, so no cutoff ever sees a duplicate candidate.
@@ -143,60 +155,18 @@ object Similarity {
     require(probes.nonEmpty && probes.forall(_ >= 1), s"probe cutoffs must be ≥ 1 (got $probes)")
     val c         = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"))
     val centroids = sampleCentroids(c, nCells)
-    val q         = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
-    val wProbe = Window.partitionBy(col("query_id")).orderBy(col("qdist").desc, col("cell_id").asc)
-    val sel = q.join(centroids)
-      .withColumn("qdist", cosine(col("qv"), col("centroid")))
-      .withColumn("cell_rn", row_number().over(wProbe))
-      .filter(col("cell_rn") <= probes.max)
-      .select(col("query_id"), col("qv"), col("cell_id"), col("cell_rn"))
+    val sel = probeSelection(queries, centroids, idCol, vecCol, probes.max)
     val scored = broadcast(sel).join(ivfAssign(c, centroids), Seq("cell_id"))
       .filter(col("query_id") =!= col("neighbor_id"))
-      .select(col("query_id"), col("cell_rn"), col("neighbor_id"),
+      .select(col("query_id"), col("prank"), col("neighbor_id"),
         round(cosine(col("cv"), col("qv")), 4).as("cosine"))
     val cut = scored
       .withColumn("n_probe", explode(array(probes.map(lit(_)): _*)))
-      .filter(col("cell_rn") <= col("n_probe"))
+      .filter(col("prank") <= col("n_probe"))
     val w = Window.partitionBy(col("n_probe"), col("query_id"))
       .orderBy(col("cosine").desc, col("neighbor_id").asc)
     cut.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
       .select(col("n_probe"), col("query_id"), col("rank"), col("neighbor_id"), col("cosine"))
-  }
-
-  /** IVF with `refineIters` k-means-style refinement passes before the
-    * final assignment: each pass re-centers every cell on the exact
-    * decimal SUM of its member vectors. Cosine is scale-invariant, so
-    * the unnormalized sum IS the mean direction — no division, and the
-    * decimal aggregation is exact and order-independent (a double mean
-    * would make the argmax partition-layout-dependent). Refined
-    * centroids track the data distribution instead of the id sample,
-    * recovering recall the arbitrary sample loses.
-    */
-  def ivfTopKRefined(
-      corpus: DataFrame,
-      queries: DataFrame,
-      idCol: String,
-      vecCol: String,
-      k: Int,
-      nCells: Int = 16,
-      nProbe: Int = 4,
-      refineIters: Int = 1
-  ): DataFrame = {
-    val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"))
-    var centroids = sampleCentroids(c, nCells)
-    (1 to refineIters).foreach { _ =>
-      val refined = refineCentroids(ivfAssign(c, centroids))
-      // Materialize the k×dim result at the driver once per iteration —
-      // what every distributed Lloyd implementation does between
-      // passes. Without this the refinement subtree (full corpus
-      // assignment + dim aggregation) re-executes for EVERY downstream
-      // consumer (probe ranking and final assignment), since the two
-      // consumers' plans don't canonicalize to a reusable exchange.
-      val spark = c.sparkSession
-      centroids = broadcast(spark.createDataFrame(
-        java.util.Arrays.asList(refined.collect(): _*), refined.schema))
-    }
-    probeTopK(ivfAssign(c, centroids), centroids, queries, idCol, vecCol, k, nProbe)
   }
 
   /** Product-quantization ANN (Jégou et al., TPAMI'11): each vector is
@@ -229,9 +199,23 @@ object Similarity {
     * norm √Σₘ‖c_m‖² — exact cosine under quantization, approximate
     * cosine of the original vector.
     *
-    * A production swap-in keeps every plan shape and replaces only the
-    * codebook source with k-means-refined codewords per subspace (the
-    * [[refineCentroids]] machinery applied to subvector slices).
+    * `refineIters` k-means (Lloyd) passes over the codebook before
+    * encoding are the production swap-in: every corpus subvector is
+    * assigned to its nearest codeword (the encoder's strict-< argmin),
+    * each codeword re-centers on the exact per-component DECIMAL mean
+    * of its members (sum cast to double, divided by the count —
+    * subspace distance is L2, NOT scale-invariant, so unlike the IVF
+    * [[lloyd]] the division is real; decimal sums make it
+    * order-independent and the double division is IEEE-deterministic
+    * in every engine), and a codeword that attracted no members keeps
+    * its previous value (deterministic empty-cluster rule). Refined
+    * codewords track the subvector distribution instead of the id
+    * sample, cutting quantization error — `x_ann_recall_pq` measures
+    * the recall this buys on the gate data (spec-asserted ≥ the
+    * sampled codebook's). Each pass is ONE corpus scan into a
+    * map-side-combinable aggregation whose key space is
+    * nSub×ks×subDim — KB-scale regardless of corpus size — collected
+    * to the driver between passes ([[local]]).
     */
   def pqTopK(
       corpus: DataFrame,
@@ -240,61 +224,12 @@ object Similarity {
       vecCol: String,
       k: Int,
       nSub: Int = 4,
-      ks: Int = 16
+      ks: Int = 16,
+      refineIters: Int = 0
   ): DataFrame = {
     val c   = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"))
-    val enc = pqEncode(c, pqCollapse(pqCodebookRows(c, nSub, ks)), nSub, ks)
-    val q   = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
-    val scored = enc.crossJoin(broadcast(q))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cos_adc", pqCosAdc(nSub, ks))
-      .select(col("query_id"), col("neighbor_id"), col("cos_adc"))
-    pqRank(scored, k)
-  }
-
-  /** [[pqTopK]] with `refineIters` k-means (Lloyd) passes over the
-    * codebook before encoding — the production swap-in the id-sampled
-    * codebook documents: every corpus subvector is assigned to its
-    * nearest codeword (the same strict-< argmin the encoder uses),
-    * each codeword re-centers on the exact per-component DECIMAL mean
-    * of its members (sum cast to double, divided by the count —
-    * subspace distance is L2, NOT scale-invariant, so unlike
-    * [[refineCentroids]] the division is real; decimal sums make it
-    * order-independent and the double division is IEEE-deterministic
-    * in every engine), and a codeword that attracted no members keeps
-    * its previous value (deterministic empty-cluster rule). Refined
-    * codewords track the subvector distribution instead of the id
-    * sample, cutting quantization error — `x_ann_recall_pq` measures
-    * the recall this buys on the gate data (spec-asserted ≥ the
-    * sampled codebook's).
-    *
-    * Scale shape: each pass is ONE corpus scan (the nSub explode is
-    * per-row work) into a map-side-combinable aggregation whose key
-    * space is nSub×ks×subDim — KB-scale regardless of corpus size —
-    * followed by a driver materialization of the refined codebook
-    * (the k×dim Lloyd collect every distributed k-means pays,
-    * envelope-documented like [[ivfTopKRefined]]).
-    */
-  def pqTopKRefined(
-      corpus: DataFrame,
-      queries: DataFrame,
-      idCol: String,
-      vecCol: String,
-      k: Int,
-      nSub: Int = 4,
-      ks: Int = 16,
-      refineIters: Int = 1
-  ): DataFrame = {
-    val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"))
-    var cb = pqCodebookRows(c, nSub, ks)
-    (1 to refineIters).foreach { _ =>
-      val refined = pqRefineCodebook(c, cb, nSub, ks)
-      val spark = c.sparkSession
-      // k×dim driver materialization per pass (nSub·ks codewords) —
-      // the bounded Lloyd collect, same envelope as ivfTopKRefined
-      cb = spark.createDataFrame(
-        java.util.Arrays.asList(refined.collect(): _*), refined.schema)
-    }
+    val cb  = (1 to refineIters).foldLeft(pqCodebookRows(c, nSub, ks))((cb, _) =>
+      local(pqRefineCodebook(c, cb, nSub, ks)))
     val enc = pqEncode(c, pqCollapse(cb), nSub, ks)
     val q   = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
     val scored = enc.crossJoin(broadcast(q))
@@ -442,9 +377,9 @@ object Similarity {
     *
     * Maintenance contract: REBUILD-ONLY in this layout (codes are
     * meaningless under a changed codebook, so append/delete follow the
-    * quantized-IVF index family — use [[writeIvfIndexQuantized]] when
-    * incremental maintenance dominates; this layout wins when storage
-    * footprint does).
+    * quantized-IVF index family — use [[writeIvfIndex]] with
+    * `IvfLayout.Quantized` when incremental maintenance dominates;
+    * this layout wins when storage footprint does).
     */
   def writeIvfPqIndex(
       corpus: DataFrame,
@@ -502,13 +437,54 @@ object Similarity {
     pqRank(scored, k)
   }
 
-  /** Build and persist an IVF index: the centroid set plus the
-    * assigned corpus laid out `partitionBy(cell_id)`. Build once,
-    * probe many times — the full-corpus assignment scan is the
-    * expensive step, and the cell-partitioned layout means a probe
-    * reads ONLY the probed cells' files (partition pruning /
-    * dynamic partition pruning against the broadcast probe set)
-    * instead of rescanning 100 TB per query batch.
+  /** How [[writeIvfIndex]] lands the assigned corpus — the one layout
+    * decision of the persisted IVF family. [[appendToIvfIndex]] reads
+    * it back from the stored `assigned` schema ([[appendableLayout]]),
+    * so no later call site has to repeat it.
+    */
+  sealed trait IvfLayout
+  object IvfLayout {
+
+    /** `inc=<id>/cell_id=<c>` directories: a probe reads ONLY the
+      * probed cells' files (static partition pruning against the
+      * IN-list of [[probedCellList]]) instead of rescanning 100 TB per
+      * query batch.
+      */
+    case object Probe extends IvfLayout
+
+    /** FULL-SCAN-serving layout (r20, §6): the large-to-large join
+      * ([[annJoinWithIndex]]) reads EVERY cell per call, so the probe
+      * layout's one-directory-per-cell shape buys it nothing and
+      * charges it per-cell listing + per-file open overhead on every
+      * call — measured at the √(2n)-cells policy: ~0.5 s of pure file
+      * overhead at sf0.1 (93 dirs of ~45 rows each). This layout lands
+      * the same rows as stats-sized, cell-id-RANGE-sorted files under
+      * `inc=base` (cell_id a data column; min/max row-group stats stay
+      * selective on it), so a full scan reads few well-sized files.
+      * REBUILD-only: [[appendToIvfIndex]] refuses it before writing
+      * (IVF_APPEND_SCAN_LAYOUT) — an `inc=<id>/cell_id=<c>` increment
+      * beside a `cell_id` data column would break every later read.
+      */
+    case object Scan extends IvfLayout
+
+    /** The [[Probe]] layout with int8 byte-packed vectors at rest —
+      * the actual 100 TB layout: assignment runs on the full-precision
+      * vectors (build/append time, vectors in hand), but what lands is
+      * the `quantize_i8b` packed vector plus its per-vector scale. The
+      * vector column dominates an embedding store's storage and scan
+      * cost; packing it 127-scale int8 cuts that 4× at a ~1e-3 cosine
+      * accuracy cost (spec-measured). Centroids stay full precision —
+      * k×dim, negligible, and exact centroids keep cell selection
+      * identical to the unquantized index. Probe with
+      * [[probeIvfIndexQuantized]].
+      */
+    case object Quantized extends IvfLayout
+  }
+
+  /** Build and persist an IVF index: the centroid set (`refineIters`
+    * Lloyd passes, as in [[ivfTopK]]) plus the assigned corpus in
+    * `layout`. Build once, probe many times — the full-corpus
+    * assignment scan is the expensive step.
     */
   def writeIvfIndex(
       corpus: DataFrame,
@@ -517,129 +493,73 @@ object Similarity {
       path: String,
       nCells: Int = 16,
       refineIters: Int = 0,
-      scanLayout: Boolean = false
+      layout: IvfLayout = IvfLayout.Probe
   ): Unit = {
-    val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"))
-    var centroids = sampleCentroids(c, nCells)
-    (1 to refineIters).foreach { _ =>
-      val refined = refineCentroids(ivfAssign(c, centroids))
-      val spark   = c.sparkSession
-      centroids = broadcast(spark.createDataFrame(
-        java.util.Arrays.asList(refined.collect(): _*), refined.schema))
-    }
+    val c         = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"))
+    val centroids = lloyd(c, nCells, refineIters)
     centroids.write.mode("overwrite").parquet(s"$path/centroids")
-    if (scanLayout)
-      writeAssignedScan(ivfAssign(c, centroids), path)
-    else
-      writeAssigned(ivfAssign(c, centroids), path, inc = "base", dynamic = false)
+    writeAssigned(ivfAssign(c, centroids), path, "base", layout)
     clearIvfTombstones(corpus.sparkSession, path) // rebuild = fresh index
   }
 
-  /** FULL-SCAN-serving assigned layout (r20, §6): the large-to-large
-    * join ([[annJoinWithIndex]]) reads EVERY cell per call, so the
-    * probe layout's one-directory-per-cell shape buys it nothing and
-    * charges it per-cell listing + per-file open overhead on every
-    * call — measured at the √(2n)-cells policy: ~0.5 s of pure file
-    * overhead at sf0.1 (93 dirs of ~45 rows each). This layout lands
-    * the same rows as stats-sized, cell-id-RANGE-sorted files under
-    * `inc=base` (cell_id a data column; min/max row-group stats stay
-    * selective on it), so a full scan reads few well-sized files.
-    * Maintenance contract: a scan-layout index is REBUILD-only —
-    * [[appendToIvfIndex]]'s dynamic `cell_id=` partition overwrite
-    * cannot compose with it (mixed partition/data column) and the
-    * read below fails loudly on the schema clash rather than
-    * miscounting.
-    */
-  private def writeAssignedScan(assigned: DataFrame, path: String): Unit = {
-    val withInc = assigned.withColumn("inc", lit("base"))
-    val files = IndexLayout.appendBuckets(withInc, IndexLayout.configuredBuckets(withInc))
-    withInc
-      .repartitionByRange(files, col("cell_id"))
-      .sortWithinPartitions(col("cell_id"))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .partitionBy("inc").parquet(s"$path/assigned")
-  }
-
-  /** ONE assigned-layout writer for build AND append — the
-    * probe-after-append ≡ rebuild guarantee depends on the flavors
+  /** ONE assigned-layout writer for build AND append, every layout —
+    * the probe-after-append ≡ rebuild guarantee depends on the flavors
     * staying byte-identical.
     *
-    * Layout is `inc=<id>/cell_id=<c>`: the `inc` partition level is
-    * the idempotency unit. `dynamic = true` (appends) overwrites ONLY
-    * the `inc=<id>` partitions present in the data, so a replayed
-    * increment replaces its own files instead of duplicating its
-    * vectors — a duplicated neighbor would otherwise burn a top-k
-    * slot twice at probe time. `dynamic = false` (build) keeps static
-    * overwrite so a rebuild clears every prior increment. Probes key
-    * on `cell_id` only; the extra level changes no probe plan.
+    * The `inc` partition level is the idempotency unit. An append
+    * (`inc` ≠ base) overwrites ONLY the `inc=<id>` partitions present
+    * in the data (dynamic overwrite), so a replayed increment replaces
+    * its own files instead of duplicating its vectors — a duplicated
+    * neighbor would otherwise burn a top-k slot twice at probe time.
+    * The build keeps static overwrite so a rebuild clears every prior
+    * increment. Probes key on `cell_id` only; the extra level changes
+    * no probe plan.
     */
   private def writeAssigned(
       assigned: DataFrame,
       path: String,
       inc: String,
-      dynamic: Boolean
-  ): Unit =
-    // repartition on the partition column BEFORE partitionBy (r20,
-    // §6 — the bm25PostingsLayout discipline): without it every write
-    // task emits one file per distinct cell it holds — tasks × cells
-    // files; measured ~10⁴ small files on the sf10 √-cells layout,
-    // whose listing + per-file open cost dominated annJoinWithIndex's
-    // full-layout scan (the index flavor read SLOWER than the inline
-    // recompute). One exchange at build time, cells-many files out;
-    // identical rows, so every probe's result is unchanged.
-    assigned.withColumn("inc", lit(inc))
-      .repartition(col("cell_id"))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .option("partitionOverwriteMode", if (dynamic) "dynamic" else "static")
-      .partitionBy("inc", "cell_id").parquet(s"$path/assigned")
-
-  /** Same, quantized flavor: int8 byte-pack before landing. */
-  private def writeAssignedQuantized(
-      assigned: DataFrame,
-      path: String,
-      inc: String,
-      dynamic: Boolean
-  ): Unit =
-    assigned
-      .select(col("neighbor_id"), call_function("quantize_i8b", col("cv")).as("__qz"), col("cell_id"))
-      .select(col("neighbor_id"), col("__qz.qb").as("qb"), col("__qz.scale").as("scale"), col("cell_id"))
-      .withColumn("inc", lit(inc))
-      .repartition(col("cell_id")) // see writeAssigned (r20, §6)
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .option("partitionOverwriteMode", if (dynamic) "dynamic" else "static")
-      .partitionBy("inc", "cell_id").parquet(s"$path/assigned")
-
-  /** Build and persist the QUANTIZED IVF index — the actual 100 TB
-    * layout: assignment runs on the full-precision vectors (build
-    * time, vectors in hand), but what lands on disk is the int8
-    * byte-packed vector plus its per-vector scale
-    * (`quantize_i8b`), `partitionBy(cell_id)`. The dominant
-    * storage/scan cost of an embedding store is the vector column;
-    * packing it 127-scale int8 cuts that 4× at a ~1e-3 cosine
-    * accuracy cost (spec-measured), and probes then read only the
-    * probed cells' already-quantized bytes. Centroids stay full
-    * precision — k×dim, negligible, and keeping them exact means
-    * cell selection is identical to the unquantized index.
-    */
-  def writeIvfIndexQuantized(
-      corpus: DataFrame,
-      idCol: String,
-      vecCol: String,
-      path: String,
-      nCells: Int = 16,
-      refineIters: Int = 0
+      layout: IvfLayout
   ): Unit = {
-    val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"))
-    var centroids = sampleCentroids(c, nCells)
-    (1 to refineIters).foreach { _ =>
-      val refined = refineCentroids(ivfAssign(c, centroids))
-      val spark   = c.sparkSession
-      centroids = broadcast(spark.createDataFrame(
-        java.util.Arrays.asList(refined.collect(): _*), refined.schema))
+    val rows = (layout match {
+      case IvfLayout.Quantized => assigned
+        .select(col("neighbor_id"), call_function("quantize_i8b", col("cv")).as("__qz"), col("cell_id"))
+        .select(col("neighbor_id"), col("__qz.qb").as("qb"), col("__qz.scale").as("scale"), col("cell_id"))
+      case _ => assigned
+    }).withColumn("inc", lit(inc))
+    val out = layout match {
+      case IvfLayout.Scan => rows
+        .repartitionByRange(IndexLayout.appendBuckets(rows, IndexLayout.configuredBuckets(rows)), col("cell_id"))
+        .sortWithinPartitions(col("cell_id"))
+        .write.partitionBy("inc")
+      // repartition on the partition column BEFORE partitionBy (r20,
+      // §6 — the bm25PostingsLayout discipline): without it every write
+      // task emits one file per distinct cell it holds — tasks × cells
+      // files; measured ~10⁴ small files on the sf10 √-cells layout,
+      // whose listing + per-file open cost dominated annJoinWithIndex's
+      // full-layout scan. One exchange at build time, cells-many files
+      // out; identical rows, so every probe's result is unchanged.
+      case _ => rows.repartition(col("cell_id")).write.partitionBy("inc", "cell_id")
     }
-    centroids.write.mode("overwrite").parquet(s"$path/centroids")
-    writeAssignedQuantized(ivfAssign(c, centroids), path, inc = "base", dynamic = false)
-    clearIvfTombstones(corpus.sparkSession, path) // rebuild = fresh index
+    out.mode(org.apache.spark.sql.SaveMode.Overwrite)
+      .option("partitionOverwriteMode", if (inc == "base") "static" else "dynamic")
+      .parquet(s"$path/assigned")
+  }
+
+  /** The layout an increment folds into, read from the index's stored
+    * `assigned` schema: `cell_id` a data column ⇒ Scan, refused before
+    * anything is written (rebuild-only); packed `qb` vectors ⇒
+    * Quantized; otherwise Probe.
+    */
+  private def appendableLayout(spark: SparkSession, path: String): IvfLayout = {
+    val r = spark.read.parquet(s"$path/assigned").queryExecution.analyzed.collectFirst {
+      case l: LogicalRelation => l.relation.asInstanceOf[HadoopFsRelation]
+    }.get
+    if (!r.partitionSchema.fieldNames.contains("cell_id"))
+      throw new IllegalStateException(
+        s"IVF_APPEND_SCAN_LAYOUT: $path is a scan-layout IVF index, which is rebuild-only — " +
+          "rebuild it over base ∪ increment (writeIvfIndex), or build it with IvfLayout.Probe to append")
+    if (r.dataSchema.fieldNames.contains("qb")) IvfLayout.Quantized else IvfLayout.Probe
   }
 
   /** Pending IVF tombstones `(neighbor_id, inc, del)`, None when the
@@ -757,8 +677,7 @@ object Similarity {
       keyCol: String,
       vecCol: String,
       path: String,
-      batchId: String,
-      quantized: Boolean = false
+      batchId: String
   ): Unit = {
     require(batchId.nonEmpty, "batchId must be non-empty")
     val spark = changes.sparkSession
@@ -767,10 +686,10 @@ object Similarity {
       .select(col(keyCol))
     val after = changes.filter(col("change_type").isin("insert", "update"))
       .select(col(keyCol), col(s"new_$vecCol").as(vecCol))
+    appendableLayout(spark, path) // refuse a Scan index before the delete leg writes
     deleteFromIvfIndex(spark, before, keyCol, path, deleteId = inc,
       excludeInc = Some(inc))
-    if (quantized) appendToIvfIndexQuantized(spark, after, keyCol, vecCol, path, inc)
-    else appendToIvfIndex(spark, after, keyCol, vecCol, path, inc)
+    appendToIvfIndex(spark, after, keyCol, vecCol, path, inc)
   }
 
   /** Fold a corpus increment INTO a persisted IVF index without
@@ -779,8 +698,12 @@ object Similarity {
     * cell selection is unchanged and probe-after-append ≡ probing an
     * index built over base ∪ increment with the same centroids,
     * spec-proven) and land under their own `inc=<incrementId>`
-    * partition via dynamic partition overwrite. Each increment pays
-    * one assignment pass over ITSELF only.
+    * partition via dynamic partition overwrite, in the layout the
+    * index was built with ([[appendableLayout]]; a Quantized index packs
+    * the increment's vectors after assigning them at full precision).
+    * Each increment pays one assignment pass over ITSELF only. A Scan
+    * index is rebuild-only: the append fails with
+    * IVF_APPEND_SCAN_LAYOUT before writing anything.
     *
     * Crash-consistency contract (spec-proven,
     * `IndexMaintenanceSpec`): append(∅) ≡ id (no partition in the
@@ -809,30 +732,10 @@ object Similarity {
   ): Unit = {
     require(incrementId.nonEmpty && incrementId != "base",
       s"incrementId must be a non-empty id other than the reserved 'base' (got '$incrementId')")
+    val layout    = appendableLayout(spark, path)
     val centroids = broadcast(spark.read.parquet(s"$path/centroids"))
     val c         = increment.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"))
-    writeAssigned(ivfAssign(c, centroids), path, incrementId, dynamic = true)
-  }
-
-  /** [[appendToIvfIndex]] for the quantized layout: assignment runs on
-    * the increment's full-precision vectors (in hand at append time),
-    * what lands is the int8-packed form — same contract (including
-    * the crash-consistency laws) as [[writeIvfIndexQuantized]] /
-    * [[appendToIvfIndex]].
-    */
-  def appendToIvfIndexQuantized(
-      spark: SparkSession,
-      increment: DataFrame,
-      idCol: String,
-      vecCol: String,
-      path: String,
-      incrementId: String
-  ): Unit = {
-    require(incrementId.nonEmpty && incrementId != "base",
-      s"incrementId must be a non-empty id other than the reserved 'base' (got '$incrementId')")
-    val centroids = broadcast(spark.read.parquet(s"$path/centroids"))
-    val c         = increment.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"))
-    writeAssignedQuantized(ivfAssign(c, centroids), path, incrementId, dynamic = true)
+    writeAssigned(ivfAssign(c, centroids), path, incrementId, layout)
   }
 
   /** Probe a quantized persistent index: cells are selected exactly as
@@ -854,14 +757,8 @@ object Similarity {
       nProbe: Int = 4
   ): DataFrame = {
     val centroids = broadcast(spark.read.parquet(s"$path/centroids"))
-    val q = queries.select(
-      col(idCol).as("query_id"), col(vecCol).as("qv"),
-      call_function("quantize_i8b", col(vecCol)).getField("qb").as("qqb"))
-    val wProbe = Window.partitionBy(col("query_id")).orderBy(col("qdist").desc, col("cell_id").asc)
-    val probes = q.join(centroids)
-      .withColumn("qdist", cosine(col("qv"), col("centroid")))
-      .withColumn("prank", row_number().over(wProbe))
-      .filter(col("prank") <= nProbe)
+    val probes = probeSelection(queries, centroids, idCol, vecCol, nProbe,
+        call_function("quantize_i8b", col(vecCol)).getField("qb").as("qqb"))
       .select(col("query_id"), col("qqb"), col("cell_id"))
       // same one-materialization contract as probeIvfIndex (the
       // quantize_i8b per query would otherwise run in both jobs);
@@ -882,7 +779,7 @@ object Similarity {
   }
 
   /** Probe a persisted IVF index: identical results to running
-    * [[ivfTopK]]/[[ivfTopKRefined]] with the same centroids, but the
+    * [[ivfTopK]] with the same centroids (sampled or refined), but the
     * corpus assignment is read, not recomputed.
     */
   def probeIvfIndex(
@@ -906,55 +803,6 @@ object Similarity {
     probeTopKWith(probes, assigned, k)
   }
 
-  /** Large-to-large approximate nearest-neighbor JOIN — the
-    * corpus×corpus shape every other ANN operator here avoids by
-    * broadcasting the query side: aligning two embedding snapshots,
-    * cross-crawl near-dup candidate mining, linking a new 10⁹-row
-    * crawl against a 10¹⁰-row base. NEITHER side broadcasts: both
-    * sides IVF-assign against one shared centroid sample (drawn from
-    * `right`, the base side), `left` replicates to its `nProbe`
-    * nearest cells, and candidates come from a plain co-partitioned
-    * equi-join on `cell_id` — candidate volume ≈ |L|·nProbe·|R|/cells
-    * per the IVF pruning, never |L|·|R|. Top-k per left row with the
-    * total (cosine DESC, right_id ASC) order.
-    *
-    * The left side's probe-cell selection is a per-row FOLD over the
-    * broadcast centroid array keeping a bounded best-nProbe list
-    * (slice∘sort per step — nProbe+1 elements, inside codegen), NOT
-    * a cells-per-row explode + window: the window form shuffles
-    * |L|·nCells rows, which at 4096 cells is a 4096× blowup the fold
-    * avoids entirely. Ties follow (cosine DESC, cell ASC) via the
-    * negated-score struct sort, matching the single-cell assignment
-    * fold and the SQL replay.
-    *
-    * Scale shape: one broadcast (centroids), ONE hash Exchange per
-    * side on `cell_id`, one skinny window over candidates. Skew note:
-    * a dense region makes its cell hot on both sides — refine the
-    * centroid sample ([[refineCentroids]]) to re-balance, or raise
-    * nCells with [[graft.ops.Dedup.planesFor]]-style population
-    * targeting; AQE skew-join split covers the residual.
-    */
-  /** Population-targeting cells policy — [[graft.ops.Dedup.planesFor]]'s
-    * IVF twin: nCells ≈ n/targetCell holds the cell POPULATION at
-    * `targetCell`, so per-left-row CANDIDATE work is a constant
-    * nProbe·targetCell. What it does NOT bound — the r19 sf10 probe's
-    * lesson — is the nCells-sized work per row on BOTH sides: the
-    * centroid argmin assignment costs n·nCells = n²/targetCell and so
-    * does the left side's best-nProbe fold, which made `x_ann_join`
-    * run slope 48.8 for 10× data (1.5 s → 73 s; the n² signature).
-    * [[annJoinAuto]] therefore scales by [[cellsForSqrt]] instead;
-    * this policy remains for callers that pin population deliberately
-    * (a persisted-index layout whose probe side is tiny and whose
-    * assignment is paid once at build).
-    */
-  def cellsFor(n: Long, targetCell: Long = 64L,
-      minCells: Int = 16, maxCells: Int = 65536): Int = {
-    require(targetCell > 0 && minCells >= 1 && maxCells >= minCells,
-      s"bad cells policy bounds: target=$targetCell min=$minCells max=$maxCells")
-    val needed = math.ceil(math.max(n, 1L).toDouble / targetCell.toDouble).toInt
-    math.min(maxCells, math.max(minCells, needed))
-  }
-
   /** √-scaling cells policy for the SYMMETRIC join shape, where the
     * same corpus pays assignment AND candidate scoring per call:
     * total work ≈ n·c (assignment + probe fold) + |L|·nProbe·(n/c)
@@ -964,9 +812,9 @@ object Similarity {
     * of the population-targeting policy's n² assignment, and the
     * candidate budget per left row grows as √n (recall degrades
     * SLOWER with corpus growth than the constant-population policy,
-    * not faster). Same floor/ceiling as [[cellsFor]]: the 16-cell
-    * floor keeps every sf0.01 oracle gate at its pinned literal, the
-    * 65536 ceiling bounds the centroid broadcast.
+    * not faster). The 16-cell floor keeps every sf0.01 oracle gate at
+    * its pinned literal, the 65536 ceiling bounds the centroid
+    * broadcast.
     */
   def cellsForSqrt(n: Long,
       minCells: Int = 16, maxCells: Int = 65536): Int = {
@@ -1017,7 +865,28 @@ object Similarity {
       nCells = cellsForSqrt(baseSize.getOrElse(right.count())),
       nProbe = nProbe, excludeSameId = excludeSameId)
 
-  /** `excludeSameId` (round-10 advice): the join serves BOTH
+  /** Large-to-large approximate nearest-neighbor JOIN — the
+    * corpus×corpus shape every other ANN operator here avoids by
+    * broadcasting the query side: aligning two embedding snapshots,
+    * cross-crawl near-dup candidate mining, linking a new 10⁹-row
+    * crawl against a 10¹⁰-row base. NEITHER side broadcasts: both
+    * sides IVF-assign against one shared centroid sample (drawn from
+    * `right`, the base side), `left` replicates to its `nProbe`
+    * nearest cells ([[nearestCells]] — one score transform and one
+    * sort per row over the broadcast centroid array, NOT a
+    * cells-per-row explode + window, which would shuffle |L|·nCells
+    * rows), and candidates come from a plain co-partitioned
+    * equi-join on `cell_id` — candidate volume ≈ |L|·nProbe·|R|/cells
+    * per the IVF pruning, never |L|·|R|. Top-k per left row with the
+    * total (cosine DESC, right_id ASC) order.
+    *
+    * Scale shape: one broadcast (centroids), ONE hash Exchange per
+    * side on `cell_id`, one skinny window over candidates. Skew note:
+    * a dense region makes its cell hot on both sides — refine the
+    * centroid sample ([[lloyd]]) to re-balance, or raise nCells
+    * ([[cellsForSqrt]]); AQE skew-join split covers the residual.
+    *
+    * `excludeSameId` (round-10 advice): the join serves BOTH
     * cross-corpus alignment — two snapshots sharing an id space,
     * where the same-id pair is exactly the expected top match and
     * must survive — and self-join dedup mining, where the trivial
@@ -1072,41 +941,48 @@ object Similarity {
   private def annJoinFrom(
       l: DataFrame, centroids: DataFrame, rAssigned: DataFrame,
       k: Int, nProbe: Int, excludeSameId: Boolean): DataFrame = {
-    val centArr = broadcast(
-      centroids.withColumn("cnorm", norm(col("centroid")))
-        .agg(array_sort(collect_list(struct(
-          col("cell_id").cast("long").as("cell_id"),
-          col("centroid"), col("cnorm")))).as("cents")))
-    // top-nProbe cells = one score transform + ONE bounded sort per
-    // row (r20, guide item 4): the former running-best fold paid an
-    // array alloc + an (nProbe+1)-element sort PER CENTROID STEP —
-    // O(c) allocations per row against this shape's single c-element
-    // array and single sort. Result identical by construction: the
-    // fold kept the nProbe smallest (ns, cell) structs of a total
-    // order (negated score; NaN sorts largest under Spark's double
-    // order on both shapes), which IS slice(array_sort(all), 1,
-    // nProbe) — the oracle gates it row-for-row.
-    val lcells = l.crossJoin(centArr)
-      .withColumn("vn", norm(col("lv")))
-      .withColumn("cells", transform(
-        slice(array_sort(transform(col("cents"), ct => struct(
-          (lit(0.0) - dot(col("lv"), ct.getField("centroid")) /
-            (col("vn") * ct.getField("cnorm"))).as("ns"),
-          ct.getField("cell_id").as("cell")))), 1, nProbe),
-        x => x.getField("cell")))
-      .select(col("left_id"), col("lv"), explode(col("cells")).as("cell_id"))
     // right vectors live in exactly ONE cell and a left row probes
     // DISTINCT cells, so no pair can appear twice — no dedup stage.
     // (Index layouts: a REPLAYED append overwrites its own inc=
     // partition — the writeAssigned idempotency unit — so the stored
     // assignment is duplicate-free by construction too.)
-    val cand = lcells.join(rAssigned, Seq("cell_id"))
-    val pairs = (if (excludeSameId) cand.filter(col("left_id") =!= col("right_id")) else cand)
-      .select(col("left_id"), col("right_id"),
-        round(cosine(col("lv"), col("cv")), 4).as("cosine"))
+    val lcells = nearestCells(l, centroids, nProbe)
+      .select(col("left_id"), col("lv"), explode(col("cells")).as("cell_id"))
     val w = Window.partitionBy(col("left_id")).orderBy(col("cosine").desc, col("right_id").asc)
-    pairs.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+    scoredPairs(lcells, rAssigned, excludeSameId)
+      .withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
       .select(col("left_id"), col("rank"), col("right_id"), col("cosine"))
+  }
+
+  /** `l` (left_id, lv) plus `cells`: each row's `n` nearest cell ids in
+    * probe-rank order — one score transform + ONE sort per row over
+    * the [[centroidArray]], not a running best-n list re-sorted at
+    * every centroid (O(c) allocations per row). Ties follow
+    * (cosine DESC, cell ASC) via the negated-score struct sort (NaN
+    * sorts largest under Spark's double order), matching the
+    * single-cell assignment fold and the SQL replay, which gates it
+    * row-for-row.
+    */
+  private def nearestCells(l: DataFrame, centroids: DataFrame, n: Int): DataFrame =
+    l.crossJoin(centroidArray(centroids))
+      .withColumn("vn", norm(col("lv")))
+      .withColumn("cells", transform(
+        slice(array_sort(transform(col("cents"), ct => struct(
+          (lit(0.0) - dot(col("lv"), ct.getField("centroid")) /
+            (col("vn") * ct.getField("cnorm"))).as("ns"),
+          ct.getField("cell_id").as("cell")))), 1, n),
+        x => x.getField("cell")))
+
+  /** Candidate pairs of the pruned join: left rows (exploded to their
+    * probed `cell_id`s) equi-joined to the right assignment on the
+    * cell, scored by rounded cosine; `extra` left columns ride along.
+    */
+  private def scoredPairs(
+      lcells: DataFrame, rAssigned: DataFrame, excludeSameId: Boolean, extra: Column*): DataFrame = {
+    val cand = lcells.join(rAssigned, Seq("cell_id"))
+    (if (excludeSameId) cand.filter(col("left_id") =!= col("right_id")) else cand)
+      .select(Seq(col("left_id")) ++ extra ++ Seq(col("right_id"),
+        round(cosine(col("lv"), col("cv")), 4).as("cosine")): _*)
   }
 
   /** The annJoin tuning curve in ONE pass — [[ivfTopKCurve]]'s shape
@@ -1131,30 +1007,13 @@ object Similarity {
     val l = left.select(col(idCol).as("left_id"), col(vecCol).as("lv"))
     val centroids = sampleCentroids(r, nCells)
     val rAssigned = ivfAssign(r, centroids).withColumnRenamed("neighbor_id", "right_id")
-    val centArr = broadcast(
-      centroids.withColumn("cnorm", norm(col("centroid")))
-        .agg(array_sort(collect_list(struct(
-          col("cell_id").cast("long").as("cell_id"),
-          col("centroid"), col("cnorm")))).as("cents")))
-    val maxProbe = probes.max
-    // same transform-then-one-sort shape as annJoinFrom (r20) — the
-    // per-step fold sort was O(c) allocations per row
-    val lcells = l.crossJoin(centArr)
-      .withColumn("vn", norm(col("lv")))
-      .withColumn("cells", transform(
-        slice(array_sort(transform(col("cents"), ct => struct(
-          (lit(0.0) - dot(col("lv"), ct.getField("centroid")) /
-            (col("vn") * ct.getField("cnorm"))).as("ns"),
-          ct.getField("cell_id").as("cell")))), 1, maxProbe),
-        x => x.getField("cell")))
+    // annJoin's nearest-cells array at the widest cutoff, posexploded:
+    // array position = probe rank
+    val lcells = nearestCells(l, centroids, probes.max)
       .select(col("left_id"), col("lv"),
         posexplode(col("cells")).as(Seq("__p", "cell_id")))
-      .withColumn("cell_rn", col("__p") + 1).drop("__p")
-    val curveCand = lcells.join(rAssigned, Seq("cell_id"))
-    val scored = (if (excludeSameId) curveCand.filter(col("left_id") =!= col("right_id"))
-      else curveCand)
-      .select(col("left_id"), col("cell_rn"), col("right_id"),
-        round(cosine(col("lv"), col("cv")), 4).as("cosine"))
+      .withColumn("cell_rn", col("__p") + 1)
+    val scored = scoredPairs(lcells, rAssigned, excludeSameId, col("cell_rn"))
     val cut = scored
       .withColumn("n_probe", explode(array(probes.map(lit(_)): _*)))
       .filter(col("cell_rn") <= col("n_probe"))
@@ -1168,21 +1027,20 @@ object Similarity {
     * step under SemDeDup-style curation, cluster-balanced sampling,
     * and corpus cartography. Deterministic end to end: seeds are the
     * k smallest-id vectors ([[sampleCentroids]]), each Lloyd
-    * iteration assigns by the [[ivfAssign]] argmax fold (cosine DESC,
-    * cell ASC ties) and re-centers on exact per-(cluster, dim)
-    * DECIMAL sums ([[refineCentroids]] — no division: cosine is
+    * iteration ([[lloyd]]) assigns by the [[ivfAssign]] argmax fold
+    * (cosine DESC, cell ASC ties) and re-centers on exact
+    * per-(cluster, dim) DECIMAL sums (no division: cosine is
     * scale-invariant, so the sum IS the mean direction), which makes
     * the whole chain SQL-replayable and hash-gated.
     *
     * Scale shape: per iteration, ONE corpus pass for the assignment
     * (broadcast k×dim centroid array, per-row fold — no shuffle) and
     * one map-side-combinable (cluster, dim) aggregation whose output
-    * is k×dim rows; centroids localCheckpoint between iterations so
-    * plan lineage stays linear in `iters`, and the checkpointed frame
-    * is k rows — never corpus-sized. Empty clusters disappear (their
-    * members re-home next assignment), mirroring [[refineCentroids]].
-    * Choose k with [[cellsFor]] (population targeting) at real corpus
-    * sizes; the gates pin small k for the oracle.
+    * is k×dim rows, collected to the driver between iterations so
+    * plan lineage stays linear in `iters` and no iteration runs
+    * inside a later one's broadcast. Empty clusters disappear (their
+    * members re-home next assignment). Choose k with [[cellsForSqrt]]
+    * at real corpus sizes; the gates pin small k for the oracle.
     */
   def kmeansAssign(
       df: DataFrame, idCol: String, vecCol: String,
@@ -1197,12 +1055,8 @@ object Similarity {
       df: DataFrame, idCol: String, vecCol: String,
       k: Int, iters: Int): (DataFrame, DataFrame) = {
     require(k >= 1 && iters >= 0, s"kmeans needs k >= 1, iters >= 0; got $k/$iters")
-    val c = df.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"))
-    var cent = sampleCentroids(c, k)
-    for (_ <- 1 to iters)
-      // lazy shared (r20): no per-iteration action remains — all
-      // K refinements chain into the final consumer's job as stages
-      cent = broadcast(Scale.shared(refineCentroids(ivfAssign(c, cent))))
+    val c    = df.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"))
+    val cent = lloyd(c, k, iters)
     (ivfAssign(c, cent), cent)
   }
 
@@ -1213,7 +1067,7 @@ object Similarity {
     * near-dup operators. Clustering is what makes the quadratic
     * candidate step tractable at 100 TB: pairs form per-cluster via a
     * co-partitioned equi-join on the cluster id (population-bounded
-    * when k comes from [[cellsFor]]), never corpus×corpus. Output is
+    * when k grows with the corpus), never corpus×corpus. Output is
     * every vector with its cluster and `kept` flag (1/0) so callers
     * can filter or audit the prune rate.
     */
@@ -1277,13 +1131,9 @@ object Similarity {
     require(k >= 1 && iters >= 1,
       s"kmeans model needs k >= 1, iters >= 1 (sums come from the last Lloyd pass); got $k/$iters")
     val c = df.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"))
-    var cent = sampleCentroids(c, k)
-    var sums: DataFrame = null
-    for (_ <- 1 to iters) {
-      sums = Scale.shared(refineSums(ivfAssign(c, cent))) // lazy (r20): the sums write is the action
-      cent = broadcast(centroidsFromSums(sums))
-    }
-    sums.coalesce(1).write.mode("overwrite").parquet(s"$path/sums"): Unit
+    // the last Lloyd pass runs as the write: its sums ARE the model
+    refineSums(ivfAssign(c, lloyd(c, k, iters - 1)))
+      .coalesce(1).write.mode("overwrite").parquet(s"$path/sums"): Unit
   }
 
   /** Fold an increment into a PERSISTED k-means model
@@ -1468,9 +1318,9 @@ object Similarity {
     * near-dups are gone, but cluster populations are still Zipf-ish,
     * and capping per cluster flattens the topic distribution without
     * a global shuffle — the window partitions by cluster, so the sort
-    * is per-cluster and population-bounded when k comes from
-    * [[cellsFor]]. Output: every vector with its cluster and `kept`
-    * flag, auditable prune rate.
+    * is per-cluster and population-bounded when k grows with the
+    * corpus. Output: every vector with its cluster and `kept` flag,
+    * auditable prune rate.
     */
   def clusterBalancedSample(
       df: DataFrame, idCol: String, vecCol: String,
@@ -1493,13 +1343,33 @@ object Similarity {
       c.orderBy(col("neighbor_id")).limit(nCells)
         .select(col("neighbor_id").as("cell_id"), col("cv").as("centroid")))
 
-  /** Per-(cell, dim) exact decimal sums, reassembled dim-ordered —
-    * map-side combinable, so the shuffle carries k×dim partials per
-    * partition, never vectors. Empty cells simply disappear (their
+  /** ONE Lloyd loop for the whole IVF / k-means family: from the
+    * [[sampleCentroids]] seeds, `rounds` passes of assign
+    * ([[ivfAssign]]) → per-(cell, dim) exact decimal sums
+    * ([[refineSums]] — map-side combinable, so the shuffle carries
+    * k×dim partials per partition, never vectors) → centroids
+    * ([[centroidsFromSums]]). Empty cells simply disappear (their
     * members re-home to surviving cells on the next assignment).
+    *
+    * Each pass collects its k×dim centroids to the driver and
+    * re-broadcasts them as a local relation ([[local]]) — what every
+    * distributed Lloyd implementation does between passes. Without it
+    * the refinement subtree (full corpus assignment + dim aggregation)
+    * re-executes for EVERY downstream consumer, and a lazily chained
+    * pass would run its corpus scan inside the next pass's broadcast
+    * deadline. 0 rounds returns the seeds untouched and runs no
+    * action.
     */
-  private[graft] def refineCentroids(assigned: DataFrame): DataFrame =
-    centroidsFromSums(refineSums(assigned))
+  private def lloyd(c: DataFrame, k: Int, rounds: Int): DataFrame =
+    (1 to rounds).foldLeft(sampleCentroids(c, k))((cent, _) =>
+      broadcast(local(centroidsFromSums(refineSums(ivfAssign(c, cent))))))
+
+  /** A bounded (k×dim-sized) result collected to the driver and
+    * re-planned as a local relation: the hand-off between iterative
+    * passes.
+    */
+  private def local(df: DataFrame): DataFrame =
+    df.sparkSession.createDataFrame(java.util.Arrays.asList(df.collect(): _*), df.schema)
 
   /** The k-means model's SUFFICIENT STATISTICS: per-(cell, dim) exact
     * decimal sums of the assigned members — k×dim rows, map-side
@@ -1525,27 +1395,23 @@ object Similarity {
         .agg(transform(array_sort(collect_list(struct(col("pos"), col("s")))),
           x => x.getField("s").cast("double")).as("centroid")))
 
-  /** The probe stage shared by the sampled, refined, and persisted
-    * flavors: each query probes its nProbe nearest cells, scores only
-    * those cells' members (`assigned`: neighbor_id, cv, cell_id —
-    * freshly computed or read back from a written index), partial
-    * top-k per query.
-    */
-  /** Each query's nProbe nearest cells: (query_id, qv, cell_id) —
-    * queries × nProbe rows. One definition shared by scoring joins and
-    * the static cell-prune collect, so the two can never disagree on
-    * which cells a query probes.
+  /** Each query's nProbe nearest cells: (query_id, qv, `extra`...,
+    * cell_id, prank) — queries × nProbe rows, `prank` the cell's
+    * 1-based probe rank (cosine DESC, cell ASC). One definition shared
+    * by every broadcast-query probe, the curve's cutoffs and the
+    * static cell-prune collect, so they can never disagree on which
+    * cells a query probes.
     */
   private def probeSelection(
       queries: DataFrame, centroids: DataFrame,
-      idCol: String, vecCol: String, nProbe: Int): DataFrame = {
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
+      idCol: String, vecCol: String, nProbe: Int, extra: Column*): DataFrame = {
+    val q = queries.select(Seq(col(idCol).as("query_id"), col(vecCol).as("qv")) ++ extra: _*)
     val wProbe = Window.partitionBy(col("query_id")).orderBy(col("qdist").desc, col("cell_id").asc)
     q.join(centroids)
       .withColumn("qdist", cosine(col("qv"), col("centroid")))
       .withColumn("prank", row_number().over(wProbe))
       .filter(col("prank") <= nProbe)
-      .select(col("query_id"), col("qv"), col("cell_id"))
+      .select(q.columns.map(col) ++ Seq(col("cell_id"), col("prank")): _*)
   }
 
   /** The probed cell ids as a driver-side IN-list — envelope-sized
@@ -1564,6 +1430,11 @@ object Similarity {
   private def probedCellList(probes: DataFrame): Seq[Any] =
     probes.select(col("cell_id")).distinct().collect().map(_.get(0)).toSeq
 
+  /** The probe stage shared by the sampled and refined flavors: each
+    * query probes its nProbe nearest cells and scores only those
+    * cells' members (`assigned`: neighbor_id, cv, cell_id), partial
+    * top-k per query.
+    */
   private def probeTopK(
       assigned: DataFrame,
       centroids: DataFrame,
@@ -1604,16 +1475,8 @@ object Similarity {
     * ascending cell_id order reproduces the (cosine DESC, cell_id
     * ASC) argmax the oracle models with row_number.
     */
-  private[graft] def ivfAssign(c: DataFrame, centroids: DataFrame): DataFrame = {
-    val centArr = broadcast(
-      centroids
-        .withColumn("cnorm", norm(col("centroid")))
-        .agg(array_sort(collect_list(struct(
-          col("cell_id").cast("long").as("cell_id"),
-          col("centroid"),
-          col("cnorm")))).as("cents"))
-    )
-    c.crossJoin(centArr)
+  private[graft] def ivfAssign(c: DataFrame, centroids: DataFrame): DataFrame =
+    c.crossJoin(centroidArray(centroids))
       .withColumn("cell_id", aggregate(
         col("cents"),
         struct(lit(-2.0).as("score"), lit(Long.MaxValue).as("cell"), norm(col("cv")).as("vn")),
@@ -1626,7 +1489,20 @@ object Similarity {
         },
         acc => acc.getField("cell")))
       .select(col("neighbor_id"), col("cv"), col("cell_id"))
-  }
+
+  /** The centroid set collapsed into ONE broadcast row `cents`:
+    * (cell_id as long, centroid, cnorm) structs sorted by cell_id, the
+    * norm computed once per centroid. Shared by the assignment fold
+    * ([[ivfAssign]]) and the join's probe selection ([[nearestCells]]).
+    */
+  private def centroidArray(centroids: DataFrame): DataFrame =
+    broadcast(
+      centroids
+        .withColumn("cnorm", norm(col("centroid")))
+        .agg(array_sort(collect_list(struct(
+          col("cell_id").cast("long").as("cell_id"),
+          col("centroid"),
+          col("cnorm")))).as("cents")))
 
   /** INTEGER-EXACT PCA top direction by power iteration — the
     * dimensionality-reduction stage an embedding pipeline runs before
@@ -1672,7 +1548,7 @@ object Similarity {
       df: DataFrame, idCol: String, vecCol: String,
       scale: Long = 1000L, iters: Int = 3): DataFrame = {
     val (dir, s) = pcaTopDirection(df, idCol, vecCol, scale, iters)
-    pcaApply(df, idCol, vecCol, dir, s)
+    pcaApply(df, idCol, vecCol, Seq("proj" -> dir), s)
   }
 
   /** The fitted direction of [[pcaProject]]: (dim index → integer
@@ -1731,15 +1607,23 @@ object Similarity {
     // already iterated downstream in BigInt for the same reason.)
     val cov: Map[(Int, Int), BigInt] = (for { i <- dims; j <- dims } yield
       (i, j) -> (BigInt(n) * BigInt(s2.getOrElse((i, j), 0L)) - BigInt(s1(i)) * BigInt(s1(j)))).toMap
-    var v: Map[Int, BigInt] = dims.map(_ -> BigInt(1)).toMap
-    for (_ <- 1 to iters) {
-      val w = dims.map(i => i -> dims.map(j => cov((i, j)) * v(j)).sum).toMap
-      val m = w.values.map(_.abs).max.max(BigInt(1))
-      v = w.map { case (i, x) =>
-        i -> (if (x < 0) -((-x) * 256 / m) else x * 256 / m)
-      }
+    (cov, powerIterate(cov, dims, iters), n)
+  }
+
+  /** `iters` rounds of exact integer power iteration on `m` from the
+    * all-ones vector: w = m·v, then the fixed-point renorm
+    * v' = sign(w)·(|w|·256 ÷ max|w|) in truncating BigInt division —
+    * deterministic, no sqrt, no norm. Shared by the first direction
+    * ([[pcaFit]]) and the deflated second one ([[pcaDirections]]).
+    */
+  private def powerIterate(
+      m: Map[(Int, Int), BigInt], dims: Seq[Int], iters: Int): Seq[(Int, Long)] = {
+    val v = (1 to iters).foldLeft(dims.map(_ -> BigInt(1)).toMap) { (v, _) =>
+      val w  = dims.map(i => i -> dims.map(j => m((i, j)) * v(j)).sum).toMap
+      val mx = w.values.map(_.abs).max.max(BigInt(1))
+      w.map { case (i, x) => i -> (if (x < 0) -((-x) * 256 / mx) else x * 256 / mx) }
     }
-    (cov, dims.map(i => i -> v(i).toLong), n)
+    dims.map(i => i -> v(i).toLong)
   }
 
   /** The VARIANCE JUDGE of [[pcaProject]]: how much of the corpus
@@ -1801,16 +1685,7 @@ object Similarity {
       df: DataFrame, idCol: String, vecCol: String,
       scale: Long = 1000L, iters: Int = 3): DataFrame = {
     val (v1, v2) = pcaDirections(df, idCol, vecCol, scale, iters)
-    val spark = df.sparkSession
-    val vm2 = v2.toMap
-    val dirDf = spark.createDataFrame(
-      v1.map { case (i, a) => (i, a, vm2(i)) }).toDF("i", "v1", "v2")
-    quantized(df.select(col(idCol).as("vec_id"), col(vecCol).as("__e")), "__e", scale)
-      .join(broadcast(dirDf), Seq("i"))
-      .groupBy(col("vec_id"))
-      .agg(sum(col("q") * col("v1")).as("proj1"),
-        sum(col("q") * col("v2")).as("proj2"))
-      .orderBy(col("vec_id"))
+    pcaApply(df, idCol, vecCol, Seq("proj1" -> v1, "proj2" -> v2), scale)
   }
 
   /** The two fitted directions of [[pcaProject2]] (each renormed to
@@ -1827,31 +1702,27 @@ object Similarity {
       cov((i, j)) * vm(i) * vm(j))).sum
     val c2: Map[(Int, Int), BigInt] = (for { i <- dims; j <- dims } yield
       (i, j) -> (cov((i, j)) * vtv * vtv - lam * vm(i) * vm(j))).toMap
-    var v: Map[Int, BigInt] = dims.map(_ -> BigInt(1)).toMap
-    for (_ <- 1 to iters) {
-      val w = dims.map(i => i -> dims.map(j => c2((i, j)) * v(j)).sum).toMap
-      val m = w.values.map(_.abs).max.max(BigInt(1))
-      v = w.map { case (i, x) =>
-        i -> (if (x < 0) -((-x) * 256 / m) else x * 256 / m)
-      }
-    }
-    (v1, dims.map(i => i -> v(i).toLong))
+    (v1, powerIterate(c2, dims, iters))
   }
 
-  /** The projection tail of [[pcaProject]], shared by the one-shot
-    * operator and the persisted-model increment scorers (batch +
-    * streaming) — one definition so one oracle gates all three
-    * surfaces.
+  /** The projection tail of [[pcaProject]] and [[pcaProject2]], shared
+    * with the persisted-model increment scorers (batch + streaming) —
+    * one definition so one oracle gates every surface. Each named
+    * direction becomes one exact BIGINT output column Σ q_d · v_d.
     */
   private def pcaApply(
       df: DataFrame, idCol: String, vecCol: String,
-      direction: Seq[(Int, Long)], scale: Long): DataFrame = {
-    val spark = df.sparkSession
-    val dirDf = spark.createDataFrame(direction).toDF("i", "v")
+      directions: Seq[(String, Seq[(Int, Long)])], scale: Long): DataFrame = {
+    val comps = directions.map(_._2.toMap)
+    val dirDf = df.sparkSession.createDataFrame(
+      java.util.Arrays.asList(directions.head._2.map { case (i, _) => Row.fromSeq(i +: comps.map(_(i))) }: _*),
+      StructType(StructField("i", IntegerType, nullable = false) +:
+        directions.indices.map(d => StructField(s"v$d", LongType, nullable = false))))
+    val projs = directions.zipWithIndex.map { case ((name, _), d) => sum(col("q") * col(s"v$d")).as(name) }
     quantized(df.select(col(idCol).as("vec_id"), col(vecCol).as("__e")), "__e", scale)
       .join(broadcast(dirDf), Seq("i"))
       .groupBy(col("vec_id"))
-      .agg(sum(col("q") * col("v")).as("proj"))
+      .agg(projs.head, projs.tail: _*)
       .orderBy(col("vec_id"))
   }
 
@@ -1894,6 +1765,6 @@ object Similarity {
     val dir = TinyParquet.rows(spark, s"$path/direction")
       .map(r => r.getInt("i") -> r.getLong("v"))
     val meta = TinyParquet.row(spark, s"$path/meta")
-    pcaApply(df, idCol, vecCol, dir, meta.getLong("scale"))
+    pcaApply(df, idCol, vecCol, Seq("proj" -> dir), meta.getLong("scale"))
   }
 }

@@ -409,6 +409,9 @@ class IndexMaintenanceSpec extends SparkSpecBase {
   // IVF (full-precision + quantized) — exactly-once via inc= overwrite
   // ------------------------------------------------------------------
 
+  private def layout(quant: Boolean): Similarity.IvfLayout =
+    if (quant) Similarity.IvfLayout.Quantized else Similarity.IvfLayout.Probe
+
   test("law: IVF append(∅) ≡ id and replayed append ≡ single append (dynamic inc overwrite)") {
     val base = embAll
     val inc = base.filter(col("vec_id") < 10)
@@ -418,14 +421,12 @@ class IndexMaintenanceSpec extends SparkSpecBase {
     for (quant <- Seq(false, true)) {
       val path = tmp(s"ivf-replay-$quant")
       def append(df: DataFrame, id: String): Unit =
-        if (quant) Similarity.appendToIvfIndexQuantized(spark, df, "vec_id", "embedding", path, id)
-        else Similarity.appendToIvfIndex(spark, df, "vec_id", "embedding", path, id)
+        Similarity.appendToIvfIndex(spark, df, "vec_id", "embedding", path, id)
       def probe() = rows(
         (if (quant) Similarity.probeIvfIndexQuantized(spark, path, q, "vec_id", "embedding", k = 3)
          else Similarity.probeIvfIndex(spark, path, q, "vec_id", "embedding", k = 3))
           .select("query_id", "rank", "neighbor_id").orderBy("query_id", "rank"))
-      if (quant) Similarity.writeIvfIndexQuantized(base, "vec_id", "embedding", path, nCells = 8)
-      else Similarity.writeIvfIndex(base, "vec_id", "embedding", path, nCells = 8)
+      Similarity.writeIvfIndex(base, "vec_id", "embedding", path, nCells = 8, layout = layout(quant))
       append(inc, "inc-1")
       val once   = probe()
       val nFiles = spark.read.parquet(s"$path/assigned").count()
@@ -451,8 +452,7 @@ class IndexMaintenanceSpec extends SparkSpecBase {
         (if (quant) Similarity.probeIvfIndexQuantized(spark, p, q, "vec_id", "embedding", k = 3)
          else Similarity.probeIvfIndex(spark, p, q, "vec_id", "embedding", k = 3))
           .select("query_id", "rank", "neighbor_id").orderBy("query_id", "rank"))
-      if (quant) Similarity.writeIvfIndexQuantized(embAll, "vec_id", "embedding", path, nCells = 8)
-      else Similarity.writeIvfIndex(embAll, "vec_id", "embedding", path, nCells = 8)
+      Similarity.writeIvfIndex(embAll, "vec_id", "embedding", path, nCells = 8, layout = layout(quant))
       val before = probe(path)
       Similarity.deleteFromIvfIndex(spark, embAll.filter(col("vec_id") < 0),
         "vec_id", path, deleteId = "noop")
@@ -460,8 +460,7 @@ class IndexMaintenanceSpec extends SparkSpecBase {
       Similarity.deleteFromIvfIndex(spark, gone, "vec_id", path, deleteId = "retract-1")
       Similarity.deleteFromIvfIndex(spark, gone, "vec_id", path, deleteId = "retract-1") // replay
       val rebuilt = tmp(s"ivf-del-rebuild-$quant")
-      if (quant) Similarity.writeIvfIndexQuantized(kept, "vec_id", "embedding", rebuilt, nCells = 8)
-      else Similarity.writeIvfIndex(kept, "vec_id", "embedding", rebuilt, nCells = 8)
+      Similarity.writeIvfIndex(kept, "vec_id", "embedding", rebuilt, nCells = 8, layout = layout(quant))
       assert(probe(path) === probe(rebuilt),
         s"probe after delete diverges from rebuild on remaining (quant=$quant)")
     }
@@ -650,6 +649,39 @@ class IndexMaintenanceSpec extends SparkSpecBase {
       appended.select(col("vec_id")), "vec_id", path, deleteId = "takedown1")
     assert(idxJoin() === inline,
       "retiring the appended crawl must restore the pre-append join exactly")
+  }
+
+  test("a scan-layout IVF index refuses appends and CDC folds before writing (IVF_APPEND_SCAN_LAYOUT)") {
+    import graft.ops.ChangeCapture
+    val left = embAll.filter(pmod(col("vec_id"), lit(7)) === 3)
+    val base = embAll.filter(pmod(col("vec_id"), lit(7)) =!= 3)
+    val path = tmp("ivf-scan")
+    Similarity.writeIvfIndex(base, "vec_id", "embedding", path, nCells = 16,
+      layout = Similarity.IvfLayout.Scan)
+    def tree(): Seq[String] = {
+      val root = Paths.get(path)
+      Files.walk(root).toArray.map(p => root.relativize(p.asInstanceOf[Path]).toString).sorted.toSeq
+    }
+    def idxJoin() = rows(Similarity.annJoinWithIndex(
+      spark, path, left, "vec_id", "embedding", k = 2, nProbe = 2)
+      .orderBy(col("left_id"), col("rank")))
+    val before = (tree(), idxJoin())
+    assert(before._2.nonEmpty, "vacuous — the scan-layout join found nothing")
+    val inc = base.filter(col("vec_id") < 10)
+      .select((col("vec_id") + 500000).as("vec_id"), col("embedding"))
+    val e1 = intercept[IllegalStateException](
+      Similarity.appendToIvfIndex(spark, inc, "vec_id", "embedding", path, "crawl2"))
+    assert(e1.getMessage.startsWith("IVF_APPEND_SCAN_LAYOUT"), e1.getMessage)
+    assert((tree(), idxJoin()) === before, "a refused append still changed the index")
+    // the CDC bridge's delete leg would land tombstones before its
+    // append leg — it must refuse up front too
+    val changed = base.withColumn("embedding",
+      when(col("vec_id") === 20, transform(col("embedding"), x => x * lit(2.0f))).otherwise(col("embedding")))
+    val diff = ChangeCapture.snapshotDiff(base, changed, Seq("vec_id"), Seq("embedding"))
+    val e2 = intercept[IllegalStateException](
+      Similarity.applyCdcToIvfIndex(diff, "vec_id", "embedding", path, batchId = "b1"))
+    assert(e2.getMessage.startsWith("IVF_APPEND_SCAN_LAYOUT"), e2.getMessage)
+    assert((tree(), idxJoin()) === before, "a refused CDC fold still changed the index")
   }
 
   test("stream-static probe outliving the grace fails STALE_PINNED_LISTING, not an FNF (r18 task 5)") {

@@ -1068,12 +1068,13 @@ class DedupSpec extends SparkSpecBase {
     assert(graft.ops.Similarity.cellsForSqrt(171429) === 208)
     assert(graft.ops.Similarity.cellsForSqrt(1) === 16)
     assert(graft.ops.Similarity.cellsForSqrt(100000000000L) === 65536)
-    // the population-targeting policy stays pinned for its remaining
-    // deliberate-population callers
-    assert(graft.ops.Similarity.cellsFor(429, targetCell = 64) === 16)
-    assert(graft.ops.Similarity.cellsFor(17143, 64) === 268)
-    assert(graft.ops.Similarity.cellsFor(1, 64) === 16)
-    assert(graft.ops.Similarity.cellsFor(100000000000L, 64) === 65536)
+    // cellsForIndexJoin (the x_ann_join_index build, r20): ceil(√(2n))
+    // clamped to [16, 65536] — the clamp its oracle replays as
+    // GREATEST(16, LEAST(65536, CAST(ceil(sqrt(2 * count(*))) AS BIGINT)))
+    // over the same sf0.01 base (429 vectors → ⌈√858⌉ = 30 cells)
+    assert(graft.ops.Similarity.cellsForIndexJoin(429) === 30)
+    assert(graft.ops.Similarity.cellsForIndexJoin(1) === 16)
+    assert(graft.ops.Similarity.cellsForIndexJoin(100000000000L) === 65536)
     // the auto entry points consume the policy end-to-end
     val e = GraftSession.table(spark, sf, "embeddings")
       .select(col("vec_id"), col("embedding")).limit(100)
@@ -1230,6 +1231,36 @@ class SimilaritySpec extends SparkSpecBase {
     val plan = Similarity.kmeansAssign(e, "vec_id", "embedding", k = 8, iters = 2)
       .queryExecution.executedPlan.toString
     assert(!plan.contains("SortMergeJoin"), s"kmeans plan shuffles the model:\n$plan")
+  }
+
+  test("kmeans Lloyd rounds hand off through the driver: no lazily checkpointed frame in the plans") {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val e = GraftSession.table(spark, sf, "embeddings").select(col("vec_id"), col("embedding"))
+    // a lazily checkpointed round (Scan ExistingRDD) would run its
+    // corpus pass inside the next round's broadcast deadline; each
+    // round's k centroids arrive as a local relation instead
+    val plan = Similarity.kmeansAssign(e, "vec_id", "embedding", k = 8, iters = 2)
+      .queryExecution.executedPlan.toString
+    assert(!plan.contains("ExistingRDD"), s"kmeansAssign plan holds a lazy checkpoint:\n$plan")
+    assert(plan.contains("LocalTableScan"), s"kmeansAssign centroids are not a local relation:\n$plan")
+    val written = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, d: Long): Unit = written.add(qe.executedPlan.toString): Unit
+      def onFailure(f: String, qe: QueryExecution, ex: Exception): Unit = ()
+    }
+    val path = java.nio.file.Files.createTempDirectory("kmeans-plan").toString
+    spark.listenerManager.register(listener)
+    try {
+      Similarity.writeKmeansModel(e, "vec_id", "embedding", k = 8, iters = 2, path)
+      // listener events arrive on the bus asynchronously
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!written.toArray.exists(_.toString.contains("InsertIntoHadoopFsRelationCommand")) &&
+          System.nanoTime() < deadline) Thread.sleep(50)
+    } finally spark.listenerManager.unregister(listener)
+    val writes = written.toArray.map(_.toString).filter(_.contains("InsertIntoHadoopFsRelationCommand"))
+    assert(writes.nonEmpty, "the model write was never observed")
+    writes.foreach(w => assert(!w.contains("ExistingRDD"), s"writeKmeansModel plan holds a lazy checkpoint:\n$w"))
   }
 
   test("semdedupPrune: planted colinear duplicate drops, original survives; thr above max keeps all") {
@@ -1484,7 +1515,7 @@ class SimilaritySpec extends SparkSpecBase {
             .map(r => (r.getLong(0), r.getLong(1))).toSet).size
     val sampled = hits(Similarity.ivfTopK(e, q, "vec_id", "embedding",
       k = 3, nCells = 16, nProbe = 4))
-    val refined = hits(Similarity.ivfTopKRefined(e, q, "vec_id", "embedding",
+    val refined = hits(Similarity.ivfTopK(e, q, "vec_id", "embedding",
       k = 3, nCells = 16, nProbe = 4, refineIters = 1))
     // one Lloyd pass is not guaranteed to dominate on a given query
     // set — require high absolute recall and no collapse vs sampled
@@ -1496,7 +1527,7 @@ class SimilaritySpec extends SparkSpecBase {
     val e = GraftSession.table(spark, sf, "embeddings")
     val q = e.filter(col("vec_id") < 5)
     def rows(df: org.apache.spark.sql.DataFrame) =
-      Similarity.ivfTopKRefined(df, q, "vec_id", "embedding", k = 3, refineIters = 1)
+      Similarity.ivfTopK(df, q, "vec_id", "embedding", k = 3, refineIters = 1)
         .select(col("query_id"), col("rank"), col("neighbor_id"))
         .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).sorted.toSeq
     assert(rows(e) === rows(e.repartition(17)))
@@ -1531,7 +1562,7 @@ class IvfIndexSpec extends SparkSpecBase {
     val fromIndex2 = graft.ops.Similarity.probeIvfIndex(spark, dir2, q, "vec_id", "embedding", k = 3)
       .select("query_id", "rank", "neighbor_id", "cosine")
       .orderBy("query_id", "rank").collect().toSeq
-    val inMemory2 = graft.ops.Similarity.ivfTopKRefined(e, q, "vec_id", "embedding", k = 3, nCells = 16, refineIters = 1)
+    val inMemory2 = graft.ops.Similarity.ivfTopK(e, q, "vec_id", "embedding", k = 3, nCells = 16, refineIters = 1)
       .select("query_id", "rank", "neighbor_id", "cosine")
       .orderBy("query_id", "rank").collect().toSeq
     assert(fromIndex2 === inMemory2)

@@ -113,7 +113,7 @@ class PqSpec extends SparkSpecBase {
     def recall(df: org.apache.spark.sql.DataFrame): Long =
       df.select(col("query_id"), col("neighbor_id")).intersect(exact).count()
     val sampled = recall(Similarity.pqTopK(corpus, queries, "vec_id", "embedding", k = 10))
-    val refined = recall(Similarity.pqTopKRefined(corpus, queries, "vec_id", "embedding", k = 10))
+    val refined = recall(Similarity.pqTopK(corpus, queries, "vec_id", "embedding", k = 10, refineIters = 1))
     assert(refined >= sampled,
       s"codebook refinement LOST recall: refined $refined < sampled $sampled (of 50)")
     assert(refined >= 10, s"refined PQ recall collapsed: $refined/50")
@@ -122,9 +122,9 @@ class PqSpec extends SparkSpecBase {
   test("refined codebook with zero corpus drift beyond the seed is layout-invariant") {
     val corpus = embeddings
     val queries = embeddings.filter(col("vec_id") < 3)
-    val one = Similarity.pqTopKRefined(corpus.repartition(1), queries, "vec_id", "embedding", k = 4)
+    val one = Similarity.pqTopK(corpus.repartition(1), queries, "vec_id", "embedding", k = 4, refineIters = 1)
       .orderBy("query_id", "rank").collect().map(_.toSeq).toSeq
-    val many = Similarity.pqTopKRefined(corpus.repartition(13), queries, "vec_id", "embedding", k = 4)
+    val many = Similarity.pqTopK(corpus.repartition(13), queries, "vec_id", "embedding", k = 4, refineIters = 1)
       .orderBy("query_id", "rank").collect().map(_.toSeq).toSeq
     assert(one === many, "refined PQ ranking depends on partition layout — decimal re-centering leaked order")
   }

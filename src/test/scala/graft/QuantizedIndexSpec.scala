@@ -1,6 +1,7 @@
 package graft
 
 import graft.ops.Similarity
+import graft.ops.Similarity.IvfLayout.Quantized
 
 import java.nio.file.Files
 
@@ -25,7 +26,7 @@ class QuantizedIndexSpec extends SparkSpecBase {
   test("single-cell quantized probe == in-memory int8 brute force, exactly") {
     val q    = emb.filter(col("vec_id") < 5)
     val path = Files.createTempDirectory("graft-qivf1").toString
-    Similarity.writeIvfIndexQuantized(emb, "vec_id", "embedding", path, nCells = 1)
+    Similarity.writeIvfIndex(emb, "vec_id", "embedding", path, nCells = 1, layout = Quantized)
     val probed = Similarity
       .probeIvfIndexQuantized(spark, path, q, "vec_id", "embedding", k = 3, nProbe = 1)
       .select(col("query_id"), col("rank"), col("neighbor_id"), col("qcosine"))
@@ -44,7 +45,7 @@ class QuantizedIndexSpec extends SparkSpecBase {
     // ids (envelope-sized driver fetch); this metric assert is the
     // regression gate.
     val path = Files.createTempDirectory("graft-qivf-prune").toString
-    Similarity.writeIvfIndexQuantized(emb, "vec_id", "embedding", path, nCells = 16)
+    Similarity.writeIvfIndex(emb, "vec_id", "embedding", path, nCells = 16, layout = Quantized)
     val df = Similarity.probeIvfIndexQuantized(spark, path,
       emb.filter(col("vec_id") === 0), "vec_id", "embedding", k = 3, nProbe = 2)
     df.collect()
@@ -63,7 +64,7 @@ class QuantizedIndexSpec extends SparkSpecBase {
     // round-trip through parquet) must reproduce brute force exactly
     val q    = emb.filter(col("vec_id") < 3)
     val path = Files.createTempDirectory("graft-qivf4").toString
-    Similarity.writeIvfIndexQuantized(emb, "vec_id", "embedding", path, nCells = 4)
+    Similarity.writeIvfIndex(emb, "vec_id", "embedding", path, nCells = 4, layout = Quantized)
     val probed = Similarity
       .probeIvfIndexQuantized(spark, path, q, "vec_id", "embedding", k = 3, nProbe = 4)
       .select(col("query_id"), col("rank"), col("neighbor_id"), col("qcosine"))
@@ -101,10 +102,10 @@ class QuantizedIndexSpec extends SparkSpecBase {
 
     // quantized flavor: same contract
     val pathQA = Files.createTempDirectory("ivfq-append").toString
-    Similarity.writeIvfIndexQuantized(base, "vec_id", "embedding", pathQA, nCells = 8)
-    Similarity.appendToIvfIndexQuantized(spark, inc, "vec_id", "embedding", pathQA, incrementId = "inc1")
+    Similarity.writeIvfIndex(base, "vec_id", "embedding", pathQA, nCells = 8, layout = Quantized)
+    Similarity.appendToIvfIndex(spark, inc, "vec_id", "embedding", pathQA, incrementId = "inc1")
     val pathQR = Files.createTempDirectory("ivfq-rebuild").toString
-    Similarity.writeIvfIndexQuantized(base.unionByName(inc), "vec_id", "embedding", pathQR, nCells = 8)
+    Similarity.writeIvfIndex(base.unionByName(inc), "vec_id", "embedding", pathQR, nCells = 8, layout = Quantized)
     def probeQ(p: String) =
       Similarity.probeIvfIndexQuantized(spark, p, q, "vec_id", "embedding", k = 3)
         .select("query_id", "neighbor_id", "rank")
@@ -116,7 +117,7 @@ class QuantizedIndexSpec extends SparkSpecBase {
     val pathF = Files.createTempDirectory("graft-ivf-full").toString
     val pathQ = Files.createTempDirectory("graft-ivf-quant").toString
     Similarity.writeIvfIndex(emb, "vec_id", "embedding", pathF, nCells = 4)
-    Similarity.writeIvfIndexQuantized(emb, "vec_id", "embedding", pathQ, nCells = 4)
+    Similarity.writeIvfIndex(emb, "vec_id", "embedding", pathQ, nCells = 4, layout = Quantized)
     val full  = dirSize(s"$pathF/assigned")
     val quant = dirSize(s"$pathQ/assigned")
     // 4 bytes/component → 1 byte/component (+ one double scale per
@@ -129,7 +130,7 @@ class QuantizedIndexSpec extends SparkSpecBase {
   test("quantized probe recall: top-1 matches exact cosine top-1 on the test corpus") {
     val q    = emb.filter(col("vec_id") < 5)
     val path = Files.createTempDirectory("graft-qivf-r").toString
-    Similarity.writeIvfIndexQuantized(emb, "vec_id", "embedding", path, nCells = 1)
+    Similarity.writeIvfIndex(emb, "vec_id", "embedding", path, nCells = 1, layout = Quantized)
     val top1q = Similarity
       .probeIvfIndexQuantized(spark, path, q, "vec_id", "embedding", k = 1, nProbe = 1)
       .select(col("query_id"), col("neighbor_id"))
