@@ -51,7 +51,10 @@ object Relevance {
   /** The scorer seam shared by M1 and M2: `chunkSize`-row batches of
     * (key, a, b) per partition go to `scoreBatch`, and each input row
     * comes out with one appended `out` column holding `toCell` of its
-    * score.
+    * score. A scorer must answer each batch with one score per row, in
+    * row order and under the row's key; one that drops, adds or
+    * reorders rows fails the task with SCORER_ROW_MISMATCH instead of
+    * losing or mis-scoring rows.
     */
   private[ops] def appendScores[S](
       df: DataFrame,
@@ -71,7 +74,15 @@ object Relevance {
       rows.grouped(chunkSize).flatMap { chunk =>
         val batch  = chunk.iterator.map(r => (r.getLong(kIdx), r.getString(aIdx), r.getString(bIdx)))
         val scores = scoreBatch(batch).toArray
-        chunk.iterator.zip(scores.iterator).map { case (r, (_, s)) => Row.fromSeq(r.toSeq :+ toCell(s)) }
+        if (scores.length != chunk.length)
+          throw new IllegalStateException(
+            s"SCORER_ROW_MISMATCH: the scorer returned ${scores.length} scores for a batch of ${chunk.length} rows")
+        chunk.iterator.zip(scores.iterator).map { case (r, (k, s)) =>
+          if (k != r.getLong(kIdx))
+            throw new IllegalStateException(
+              s"SCORER_ROW_MISMATCH: the scorer returned key $k for the row keyed ${r.getLong(kIdx)}")
+          Row.fromSeq(r.toSeq :+ toCell(s))
+        }
       }
     }(Encoders.row(outSchema))
   }

@@ -20,6 +20,19 @@ import org.apache.spark.ml.feature.{HashingTF, RegexTokenizer}
   * `HashingTF.indexOf`, and the probability is the sigmoid of the
   * linear margin — bit-for-bit the binary LogisticRegressionModel path.
   *
+  * Factorized batches: the margin is a left fold — intercept, then the
+  * question's coefficients, then the text's. Where that fold splits at
+  * the question/text boundary ([[splitsAtSeparator]]), `scoreBatch`
+  * folds each distinct question and featurizes each distinct text once
+  * per call, whatever order the pairs come in, then continues the
+  * question's prefix with the text's coefficients in the same order:
+  * the same additions as [[score]], so the same bits (spec-asserted in
+  * LogisticScorerSpec). A call sees one seam batch (≤ 1000 rows), so
+  * both memos stay small. The hits do not depend on the order within a
+  * batch, only on a paragraph's pairs sharing one; the cross join emits
+  * them together (ScorerSeamSpec), so with 20 questions a paragraph is
+  * featurized once for its 20 pairs, bar those a batch boundary cuts.
+  *
   * Scale note: the closure carries the dense coefficient array
   * (numFeatures doubles, 128 KiB at the default 2^14) — small enough
   * to ship per task; wrap the scorer construction in
@@ -47,9 +60,8 @@ final class LogisticRelevanceScorer private (
     toks.filter(_.length >= minTokenLength)
   }
 
-  /** P(positive) for one (question, text) pair — the single scoring
-    * path shared by the batch iterator and [[LogisticQaScorer]]'s
-    * span ranking.
+  /** P(positive) for one (question, text) pair — the per-pair
+    * reference path the factorized batches must reproduce bit for bit.
     */
   def score(question: String, text: String): Double = {
     val toks = tokensOf(question + combineSep + text)
@@ -59,11 +71,63 @@ final class LogisticRelevanceScorer private (
     var margin = intercept
     var i      = 0
     while (i < buckets.length) { margin += coefficients(buckets(i)); i += 1 }
-    1.0 / (1.0 + math.exp(-margin))
+    sigmoid(margin)
+  }
+
+  /** Whether `tokensOf(q + combineSep + t) == tokensOf(q) ++ tokensOf(t)`
+    * for every q and t, so the margin fold splits at the boundary. It
+    * does for a whitespace-gaps split (`\s+`, non-empty tokens) over a
+    * whitespace separator: no token spans the separator, and
+    * lowercasing looks no further than the word it is in (the Greek
+    * final sigma is decided inside its word). It does not for a binary
+    * head, which de-duplicates buckets across the whole concatenation,
+    * for any other tokenizer, or for an empty or non-whitespace
+    * separator, which joins the last question token to the first text
+    * token.
+    */
+  private[scorer] val splitsAtSeparator: Boolean =
+    !binary && gaps && pattern == "\\s+" && minTokenLength >= 1 &&
+      combineSep.nonEmpty && combineSep.forall(c => " \t\n\u000B\f\r".indexOf(c) >= 0)
+
+  /** The coefficient of each token of `text`, in token order (a null
+    * text tokenizes as "null", as it does inside [[score]]'s concatenation).
+    */
+  private[scorer] def termsOf(text: String): Array[Double] = {
+    val toks  = tokensOf(String.valueOf(text))
+    val terms = new Array[Double](toks.length)
+    var i     = 0
+    while (i < toks.length) { terms(i) = coefficients(hashingTF.indexOf(toks(i): Any)); i += 1 }
+    terms
+  }
+
+  /** `margin` with `terms` added left to right. */
+  private[scorer] def fold(margin: Double, terms: Array[Double]): Double = {
+    var m = margin
+    var i = 0
+    while (i < terms.length) { m += terms(i); i += 1 }
+    m
+  }
+
+  private[scorer] def sigmoid(margin: Double): Double = 1.0 / (1.0 + math.exp(-margin))
+
+  /** A memo of the question-prefix margin (intercept, then the
+    * question's coefficients), for the life of one batch.
+    */
+  private[scorer] def prefixMargins(): String => Double = {
+    val memo = scala.collection.mutable.HashMap.empty[String, Double]
+    q => memo.getOrElseUpdate(q, fold(intercept, termsOf(q)))
   }
 
   def scoreBatch(batch: Iterator[(Long, String, String)]): Iterator[(Long, Double)] =
-    batch.map { case (key, question, paragraph) => (key, score(question, paragraph)) }
+    if (!splitsAtSeparator)
+      batch.map { case (key, question, paragraph) => (key, score(question, paragraph)) }
+    else {
+      val prefixOf = prefixMargins()
+      val termsMemo = scala.collection.mutable.HashMap.empty[String, Array[Double]]
+      batch.map { case (key, question, paragraph) =>
+        (key, sigmoid(fold(prefixOf(question), termsMemo.getOrElseUpdate(paragraph, termsOf(paragraph)))))
+      }
+    }
 }
 
 object LogisticRelevanceScorer {
