@@ -16,7 +16,8 @@ Pair i (1-based) runs seed `--first-seed + i - 1` on both trees as
 with the base first on odd pairs and the change first on even ones. For
 each end-to-end metric that BENCHMARK.json declares, it prints both
 sides' median and quartiles, and on how many pairs the change was
-better in the metric's declared direction (ties are not wins). Run it
+better in the metric's declared direction (ties are not wins). While it
+runs, it logs every end-to-end metric of both sides after each pair. Run it
 from a checkout of the repository; it reads and writes nothing in that
 checkout.
 """
@@ -69,6 +70,13 @@ def run_once(tree, workload, seed):
         return None
 
 
+def side_value(metrics, name):
+    """One side's value of one metric for the progress line."""
+    if metrics is None:
+        return "failed"
+    return "%.4g" % metrics[name] if name in metrics else "-"
+
+
 def quartiles(xs):
     if len(xs) < 2:
         return (xs[0], xs[0]) if xs else (float("nan"), float("nan"))
@@ -105,10 +113,10 @@ def main():
             pair = {}
             for side in order:
                 pair[side] = run_once(trees[side], a.workload, seed)
-            log("pair %d/%d seed %d: base %s, change %s" % (
-                i + 1, a.pairs, seed,
-                "failed" if pair["base"] is None else "%.0f ms" % pair["base"].get("op_p50_ms", float("nan")),
-                "failed" if pair["change"] is None else "%.0f ms" % pair["change"].get("op_p50_ms", float("nan"))))
+            log("pair %d/%d seed %d (base -> change): %s" % (
+                i + 1, a.pairs, seed, ", ".join("%s %s -> %s" % (
+                    m["name"], side_value(pair["base"], m["name"]), side_value(pair["change"], m["name"]))
+                    for m in end_to_end)))
             runs.append(pair)
 
         ok = [r for r in runs if r["base"] is not None and r["change"] is not None]

@@ -118,8 +118,7 @@ object Dedup {
     IndexLayout.write(
       inc.select(md5(canonText(col(textCol))).as("h"), col(idCol).cast("long").as("__id"))
         .groupBy(col("h")).agg(min(col("__id")).as("keep_id")),
-      s"$path/canon", org.apache.spark.sql.SaveMode.Append, Seq(col("h")),
-      sizeByStats = true)
+      s"$path/canon", org.apache.spark.sql.SaveMode.Append, Seq(col("h")))
 
   /** COMPACT the canon-index ledger: fold every
     * [[appendToCanonIndex]] row set back into one bucketed base —
@@ -184,7 +183,8 @@ object Dedup {
     val folded = Scale.readLive(spark, s"$path/canon")
       .groupBy(col("h")).agg(min(col("keep_id")).as("keep_id"))
       .localCheckpoint()
-    // the compacted base IS a base rebuild: full configured fan-out
+    // the compacted base IS a base rebuild, sized by its data like
+    // every IndexLayout write
     IndexLayout.write(folded, s"$path/canon",
       org.apache.spark.sql.SaveMode.Append, Seq(col("h")))
     // (grace-defer) doom the folded-over files instead of deleting:

@@ -18,29 +18,24 @@ import org.apache.spark.sql.{Column, DataFrame, SaveMode}
   * fold locality) — and readers are untouched: same schema, same
   * directory, fold-on-read already absorbs multi-file layouts.
   *
-  * The bucket count is a WRITE-parallelism knob, not a semantic one:
-  * the default 64 matches the BM25 postings layout and is plenty at
-  * test scale; a 1000-executor build raises it WITHOUT a code change
-  * via `spark.graft.index.buckets` (read per write, so one session
-  * can build a 4096-way base index and leave probe-side scratch
-  * tables at the default).
-  *
-  * APPEND sizing (r15 advice): a base build wants the full fan-out,
-  * but an append-mode ledger write adds its own file set on EVERY
-  * increment — 64 files for a 100-row daily increment inflates
-  * file-listing and scan cost on the index side of every probe for
-  * no parallelism gain. Append-shaped callers therefore pass
-  * `sizeByStats = true`: the bucket count is ⌈Catalyst optimized-plan
-  * size / `spark.graft.index.append.bytesPerBucket` (64 MiB)⌉ capped
-  * at the configured fan-out — a daily increment lands as ONE file, a
-  * month-scale crawl fold still fans out. Catalyst overestimates
+  * The bucket count is a WRITE-parallelism knob, not a semantic one,
+  * and every write sizes it by its data: ⌈Catalyst optimized-plan size
+  * / `spark.graft.index.append.bytesPerBucket` (64 MiB)⌉, capped at
+  * the configured fan-out (default 64, matching the BM25 postings
+  * layout; a 1000-executor build raises it WITHOUT a code change via
+  * `spark.graft.index.buckets`, read per write). A small base build
+  * or a daily increment lands as one file instead of 64 near-empty
+  * ones whose listing and opening every probe pays; a month-scale
+  * crawl fold or a corpus-sized base still fans out. The byte-target
+  * key keeps its historical `append` name. Catalyst overestimates
   * post-aggregation frames, which errs CONSERVATIVE here (more write
   * tasks than strictly needed, never a single-task funnel).
   *
   * Single-task writes remain correct — and required — for one-row
   * meta tables; only corpus-sized artifacts route through here
   * (asserted by `IndexLayoutSpec`, which fails any listed builder
-  * that writes its corpus-sized table as a single file).
+  * that writes its corpus-sized table as a single file once the
+  * byte target says the table is large).
   */
 object IndexLayout {
 
@@ -49,8 +44,8 @@ object IndexLayout {
     */
   val DefaultBuckets: Int = 64
 
-  /** Target bytes of (Catalyst-estimated) data per bucket file for
-    * stats-sized append writes. Overridden per session by
+  /** Target bytes of (Catalyst-estimated) data per bucket file.
+    * Overridden per session by
     * `spark.graft.index.append.bytesPerBucket`.
     */
   val DefaultAppendBytesPerBucket: Long = 64L << 20
@@ -82,24 +77,19 @@ object IndexLayout {
     v
   }
 
-  /** Stats-sized bucket count for an append: one bucket per
-    * `bytesPerBucket` of Catalyst's optimized-plan size estimate,
-    * in [1, maxBuckets]. Costs no Spark job (plan stats only).
+  /** Stats-sized bucket count: one bucket per `bytesPerBucket` of
+    * Catalyst's optimized-plan size estimate, in [1, maxBuckets].
+    * Costs no Spark job (plan stats only).
     */
-  def appendBuckets(df: DataFrame, maxBuckets: Int): Int = {
+  def statsBuckets(df: DataFrame, maxBuckets: Int): Int = {
     val est = df.queryExecution.optimizedPlan.stats.sizeInBytes
     val per = BigInt(configuredBytesPerBucket(df))
     val n   = (est + per - 1) / per
     n.min(BigInt(maxBuckets)).max(BigInt(1)).toInt
   }
 
-  /** Write `df` hash-bucketed by `keys` through parallel tasks.
-    *
-    * `buckets` ≤ 0 (the default) resolves to the session-configured
-    * fan-out ([[configuredBuckets]]); an explicit positive value wins.
-    * `sizeByStats = true` (append-shaped ledger writes) additionally
-    * caps the fan-out by the plan-size heuristic ([[appendBuckets]])
-    * so small increments don't shard into 64 near-empty files.
+  /** Write `df` hash-bucketed by `keys` through [[statsBuckets]]
+    * parallel tasks, capped at [[configuredBuckets]].
     * `partitionCols` threads through to `DataFrameWriter.partitionBy`
     * for `inc=`-ledger layouts (the caller sets
     * `partitionOverwriteMode` via `options`).
@@ -110,13 +100,11 @@ object IndexLayout {
     */
   def write(
       df: DataFrame, dir: String, mode: SaveMode, keys: Seq[Column],
-      buckets: Int = 0, partitionCols: Seq[String] = Nil,
-      sizeByStats: Boolean = false,
+      partitionCols: Seq[String] = Nil,
       options: Map[String, String] = Map.empty): Unit = {
     require(keys.nonEmpty, "IndexLayout.write needs at least one bucketing key")
-    val maxB = if (buckets > 0) buckets else configuredBuckets(df)
-    val b    = if (sizeByStats) appendBuckets(df, maxB) else maxB
-    val w = df.repartition(b, keys: _*).write.mode(mode).options(options)
+    val w = df.repartition(statsBuckets(df, configuredBuckets(df)), keys: _*)
+      .write.mode(mode).options(options)
     (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
       .parquet(dir)
   }

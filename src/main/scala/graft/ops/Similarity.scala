@@ -529,7 +529,7 @@ object Similarity {
     }).withColumn("inc", lit(inc))
     val out = layout match {
       case IvfLayout.Scan => rows
-        .repartitionByRange(IndexLayout.appendBuckets(rows, IndexLayout.configuredBuckets(rows)), col("cell_id"))
+        .repartitionByRange(IndexLayout.statsBuckets(rows, IndexLayout.configuredBuckets(rows)), col("cell_id"))
         .sortWithinPartitions(col("cell_id"))
         .write.partitionBy("inc")
       // repartition on the partition column BEFORE partitionBy (r20,

@@ -1214,7 +1214,7 @@ object TextAnalysis {
         .groupBy(col("w")).agg(count(lit(1)).as("cr"))
         .withColumn("inc", lit(incrementId)),
       s"$path/parts", org.apache.spark.sql.SaveMode.Overwrite, Seq(col("w")),
-      partitionCols = Seq("inc"), sizeByStats = true,
+      partitionCols = Seq("inc"),
       options = Map("partitionOverwriteMode" -> "dynamic"))
   }
 

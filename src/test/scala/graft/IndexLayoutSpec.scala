@@ -6,11 +6,14 @@ import graft.ops.{CorpusOps, Dedup, TextAnalysis}
 /** Layout tripwire for the r14 verdict's one scale finding: persisted
   * CORPUS-SIZED index/model base builds must not funnel through a
   * single write task (`coalesce(1)`). Every builder below writes its
-  * corpus-sized table via [[graft.ops.IndexLayout]] (hash-bucketed,
-  * 64 parallel tasks); this spec builds each one on a synthetic
-  * corpus with thousands of distinct keys and fails if the artifact
-  * landed as ONE part file — the single-task signature. One-row meta
-  * tables are exempt by design (and are NOT checked here).
+  * corpus-sized table via [[graft.ops.IndexLayout]], which sizes each
+  * write's bucket count by Catalyst's plan-size estimate. Each fan-out
+  * check therefore runs under a 1 KiB byte target ([[asLarge]]), which
+  * makes the 3000-doc synthetic corpus count as large: a bucketed
+  * builder then writes many part files, and a `coalesce(1)` builder
+  * still writes ONE, the single-task signature this spec fails on.
+  * Under the default target the same build stays small. One-row meta
+  * tables are exempt by design.
   *
   * The behavioral contracts (probe-after-append ≡ rebuild, fold-on-
   * read, union law) are pinned by the existing Dedup/IndexMaintenance
@@ -51,9 +54,18 @@ class IndexLayoutSpec extends SparkSpecBase {
 
   private val docs = corpus(3000).localCheckpoint()
 
+  /** Run `body` under a 1 KiB per-bucket byte target, so every write
+    * of the 3000-doc corpus counts as large and must fan out.
+    */
+  private def asLarge[T](body: => T): T = {
+    spark.conf.set("spark.graft.index.append.bytesPerBucket", "1024")
+    try body
+    finally spark.conf.unset("spark.graft.index.append.bytesPerBucket")
+  }
+
   test("canon index base build fans out; appends are stats-sized") {
     val p = tmp("canon")
-    Dedup.writeCanonIndex(docs, "doc_id", "text", p)
+    asLarge(Dedup.writeCanonIndex(docs, "doc_id", "text", p))
     val base = partFiles(s"$p/canon")
     assert(base > 8, s"canon base build wrote $base part files — single-task signature")
     // r15 advice: a SMALL append must NOT shard into 64 near-empty
@@ -65,22 +77,26 @@ class IndexLayoutSpec extends SparkSpecBase {
     assert(afterSmall > base, "canon append did not add a file set of its own")
     assert(afterSmall - base < 16,
       s"small canon append added ${afterSmall - base} files — append sizing not applied")
-    // a CORPUS-SIZED append must still fan out: shrink the per-bucket
-    // byte target so this 3000-doc increment counts as "large"
-    spark.conf.set("spark.graft.index.append.bytesPerBucket", "1024")
-    try {
+    // a CORPUS-SIZED append must still fan out
+    asLarge {
       Dedup.appendToCanonIndex(docs.withColumn("doc_id", col("doc_id") + 200000L),
         "doc_id", "text", p)
       assert(partFiles(s"$p/canon") > afterSmall + 8,
         "large canon append did not fan out — single-task append signature")
-    } finally spark.conf.unset("spark.graft.index.append.bytesPerBucket")
+    }
+    // under the default byte target the same 3000-doc base build is
+    // small, and is sized like the small append
+    val pd = tmp("canondefault")
+    Dedup.writeCanonIndex(docs, "doc_id", "text", pd)
+    assert(partFiles(s"$pd/canon") < 16,
+      s"small canon base build wrote ${partFiles(s"$pd/canon")} files — write sizing not applied")
   }
 
   test("bucket fan-out follows spark.graft.index.buckets") {
     val p = tmp("canonconf")
     spark.conf.set("spark.graft.index.buckets", "8")
     try {
-      Dedup.writeCanonIndex(docs, "doc_id", "text", p)
+      asLarge(Dedup.writeCanonIndex(docs, "doc_id", "text", p))
       val n = partFiles(s"$p/canon")
       assert(n > 1 && n <= 8,
         s"configured 8 buckets but canon base build wrote $n part files")
@@ -97,17 +113,16 @@ class IndexLayoutSpec extends SparkSpecBase {
 
   test("drift-ref base build + append write term counts through many tasks") {
     val p = tmp("driftref")
-    TextAnalysis.writeDriftRef(docs, "text", p)
+    asLarge(TextAnalysis.writeDriftRef(docs, "text", p))
     assert(partFiles(s"$p/counts") > 8,
       s"drift-ref base build wrote ${partFiles(s"$p/counts")} part files — single-task signature")
-    // month-scale fold must fan out (tiny byte target makes this
-    // increment "large"); the ledger partition dir carries the files
-    spark.conf.set("spark.graft.index.append.bytesPerBucket", "1024")
-    try {
+    // month-scale fold must fan out; the ledger partition dir carries
+    // the files
+    asLarge {
       TextAnalysis.appendToDriftRef(spark, p, docs, "text", "m1")
       assert(partFiles(s"$p/parts/inc=m1") > 8,
         s"drift-ref fold wrote ${partFiles(s"$p/parts/inc=m1")} part files — single-task signature")
-    } finally spark.conf.unset("spark.graft.index.append.bytesPerBucket")
+    }
     // a small daily increment stays small
     TextAnalysis.appendToDriftRef(spark, p, docs.limit(50), "text", "d1")
     assert(partFiles(s"$p/parts/inc=d1") < 16,
@@ -116,21 +131,21 @@ class IndexLayoutSpec extends SparkSpecBase {
 
   test("span index base build writes through many tasks") {
     val p = tmp("span")
-    Dedup.writeSpanIndex(docs, "doc_id", "text", p)
+    asLarge(Dedup.writeSpanIndex(docs, "doc_id", "text", p))
     assert(partFiles(s"$p/spans") > 8,
       s"span index wrote ${partFiles(s"$p/spans")} part files — single-task signature")
   }
 
   test("winnow print index base build writes through many tasks") {
     val p = tmp("winnow")
-    TextAnalysis.writeWinnowIndex(docs, "doc_id", "text", p)
+    asLarge(TextAnalysis.writeWinnowIndex(docs, "doc_id", "text", p))
     assert(partFiles(s"$p/prints") > 8,
       s"winnow index wrote ${partFiles(s"$p/prints")} part files — single-task signature")
   }
 
   test("contamination shingle index base build writes through many tasks") {
     val p = tmp("contam")
-    CorpusOps.writeContaminationIndex(docs, "doc_id", "text", p)
+    asLarge(CorpusOps.writeContaminationIndex(docs, "doc_id", "text", p))
     assert(partFiles(s"$p/sh") > 8,
       s"contamination index wrote ${partFiles(s"$p/sh")} part files — single-task signature")
     // meta is a one-row scalar: single file is the CORRECT layout there
@@ -139,23 +154,23 @@ class IndexLayoutSpec extends SparkSpecBase {
 
   test("n-gram model base builds write count tables through many tasks") {
     val pb = tmp("bigram")
-    TextAnalysis.writeBigramCounts(docs, "text", pb, minCount = 1L)
+    asLarge(TextAnalysis.writeBigramCounts(docs, "text", pb, minCount = 1L))
     assert(partFiles(s"$pb/counts") > 8, "bigram counts: single-task signature")
     assert(partFiles(s"$pb/meta") == 1)
 
     val pk = tmp("backoff")
-    TextAnalysis.writeBackoffModel(docs, "text", pk, minCount = 1L)
+    asLarge(TextAnalysis.writeBackoffModel(docs, "text", pk, minCount = 1L))
     assert(partFiles(s"$pk/uni") > 8, "backoff uni: single-task signature")
     assert(partFiles(s"$pk/bigram") > 8, "backoff bigram: single-task signature")
 
     val pn = tmp("nb")
-    TextAnalysis.writeNbModel(
+    asLarge(TextAnalysis.writeNbModel(
       docs.withColumn("pos", pmod(col("doc_id"), lit(2)) === 0),
-      "text", "pos", pn, minCount = 1L)
+      "text", "pos", pn, minCount = 1L))
     assert(partFiles(s"$pn/vocab") > 8, "nb vocab: single-task signature")
 
     val pq = tmp("kn")
-    TextAnalysis.writeKnModel(docs, "text", pq, minCount = 1L)
+    asLarge(TextAnalysis.writeKnModel(docs, "text", pq, minCount = 1L))
     assert(partFiles(s"$pq/bigram") > 8, "kn bigram: single-task signature")
     assert(partFiles(s"$pq/ctx") > 8, "kn ctx: single-task signature")
     assert(partFiles(s"$pq/cont") > 8, "kn cont: single-task signature")

@@ -2,6 +2,11 @@ package graft
 
 import graft.ops.MlPipelines
 
+import org.apache.spark.ListenerBusSync
+import org.apache.spark.ml.PipelineModel
+import org.apache.spark.ml.classification.LogisticRegressionModel
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 class MlPipelinesSpec extends SparkSpecBase {
@@ -18,6 +23,86 @@ class MlPipelinesSpec extends SparkSpecBase {
       .select(avg((col("prediction") === col("label")).cast("double")))
       .head().getDouble(0)
     assert(acc > 0.95)
+  }
+
+  private val Topics = 12
+
+  /** Relevance rows shaped like the benchmark's, topic by topic: the
+    * topic's question joined to 12 paragraphs that carry the topic's
+    * own marker (label 1), then to 12 that carry another topic's
+    * negative marker (label 0), around random filler words. Every
+    * signal word belongs to one topic, so a shard that never sees a
+    * topic learns nothing about it.
+    */
+  private def topicRows(seed: Long): Seq[(String, Double)] = {
+    val r = new scala.util.Random(seed)
+    def filler() = Seq.fill(2)(s"w${r.nextInt(300)}").mkString(" ")
+    (0 until Topics).flatMap { k =>
+      val q = s"what is the total kpi$k reported"
+      Seq.fill(12)((s"$q ${filler()} unit$k ${filler()}", 1.0)) ++
+        Seq.fill(12) {
+          val j = (k + 1 + r.nextInt(Topics - 1)) % Topics
+          (s"$q ${filler()} note$j ${filler()}", 0.0)
+        }
+    }
+  }
+
+  private def coefficientBits(m: PipelineModel): Seq[Long] = {
+    val lr = m.stages.collectFirst { case l: LogisticRegressionModel => l }.get
+    (lr.coefficients.toArray :+ lr.intercept).map(java.lang.Double.doubleToRawLongBits).toSeq
+  }
+
+  private def assertSameBits(m: PipelineModel, bits: Seq[Long], what: String): Unit = {
+    val differ = coefficientBits(m).zip(bits).count { case (a, b) => a != b }
+    assert(differ == 0, s"$what: $differ of ${bits.length} coefficients differ")
+  }
+
+  private def perClassAccuracy(m: PipelineModel, df: DataFrame): Map[Double, Double] =
+    m.transform(df).groupBy("label")
+      .agg(avg((col("prediction") === col("label")).cast("double")))
+      .collect().map(r => r.getDouble(0) -> r.getDouble(1)).toMap
+
+  test("relevance fit learns topic-grouped rows and is bit-reproducible over any partitioning") {
+    import spark.implicits._
+    // the rows arrive grouped by topic, one topic per input partition,
+    // as a frame built topic by topic does; maxIter as the benchmark's
+    val grouped = spark.sparkContext.parallelize(topicRows(1L), Topics).toDF("text", "label")
+    def fit(df: DataFrame) = MlPipelines.trainRelevanceClassifier(df, maxIter = 5)
+    val model = fit(grouped)
+    val acc = perClassAccuracy(model, topicRows(2L).toDF("text", "label"))
+    assert(acc.keySet === Set(0.0, 1.0))
+    acc.foreach { case (label, a) => assert(a >= 0.95, s"held-out accuracy of class $label: $a") }
+    val bits = coefficientBits(model)
+    assertSameBits(fit(grouped), bits, "a second fit")
+    assertSameBits(fit(grouped.repartition(1)), bits, "repartition(1)")
+    assertSameBits(fit(grouped.repartition(4)), bits, "repartition(4)")
+  }
+
+  test("a relevance fit runs FitRounds Spark jobs whatever maxIter is") {
+    import spark.implicits._
+    val train = topicRows(3L).toDF("text", "label")
+    def jobsOf(maxIter: Int): Int = {
+      val sc    = spark.sparkContext
+      val group = s"fit-budget-$maxIter"
+      val n     = new java.util.concurrent.atomic.AtomicInteger
+      val listener = new SparkListener {
+        override def onJobStart(j: SparkListenerJobStart): Unit =
+          if (j.properties != null && j.properties.getProperty("spark.jobGroup.id") == group) n.incrementAndGet(): Unit
+      }
+      sc.addSparkListener(listener)
+      sc.setJobGroup(group, "relevance fit")
+      try {
+        MlPipelines.trainRelevanceClassifier(train, maxIter = maxIter)
+        ListenerBusSync.drain(sc)
+      } finally {
+        sc.clearJobGroup()
+        sc.removeSparkListener(listener)
+      }
+      n.get
+    }
+    assert(jobsOf(5) === MlPipelines.FitRounds)
+    assert(jobsOf(20) === MlPipelines.FitRounds)
+    assert(MlPipelines.FitRounds === 2)
   }
 
   test("cross-validated regParam selection rejects the crippling value and beats it held-out") {
