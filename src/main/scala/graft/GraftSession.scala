@@ -29,8 +29,9 @@ object GraftSession {
       // timestamp is needed — see GraftSession.nanosToTs).
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       // the persistent-index probes pin envelope-sized IN-lists on
-      // sorted index columns (Dedup.probeMinhashIndexMd5Plan,
-      // probeSignPlaneIndexPlan); above the default threshold of 10
+      // index columns (Dedup.probeMinhashIndexMd5Plan, and
+      // Dedup.probeSignPlaneIndexPlan for either SignPlaneLayout);
+      // above the default threshold of 10
       // Spark collapses the parquet In predicate to a [min,max] range,
       // which is vacuous for hash-valued cells — keep the point
       // checks so row-group stats on bucket-sorted files actually

@@ -1584,8 +1584,8 @@ object QueriesScale {
     // A driver change to the sf0.01 corpus size would surface as a
     // loud hash mismatch here, which LedgerCrossCheckSpec watches.
     "x_neardup_cosine_banded" -> ((s, dir) =>
-      Dedup.embeddingNearDupPairsBandedAuto(plantedEmb(s, dir), "vec_id", "embedding", 0.99,
-          bands = 3, targetBucket = 64)
+      Dedup.embeddingNearDupPairsAuto(plantedEmb(s, dir), "vec_id", "embedding", 0.99,
+          targetBucket = 64, layout = Dedup.SignPlaneLayout.Banded(3))
         .orderBy(col("id_a"), col("id_b"))),
 
     // ---- INCREMENTAL dedup against a persistent LSH index: the base
@@ -1605,7 +1605,7 @@ object QueriesScale {
     // ---- the LSH index probe over an APPENDED-then-COMPACTED
     // layout: base corpus indexed, a second crawl appended
     // (`appendToMinhashIndex`), the accumulated file sets folded by
-    // `compactMinhashIndex` (r17 — previously a doc-only "low-traffic
+    // `Scale.compactIndex` (r17 — previously a doc-only "low-traffic
     // window" procedure), then the fresh increment probes it. The
     // oracle replays the banded join over base ∪ appended — the
     // probe-after-compaction ≡ probe-after-append ≡ rebuild law,
@@ -1620,7 +1620,7 @@ object QueriesScale {
         Dedup.writeMinhashIndexMd5(base, "id", "text", p)
         Dedup.appendToMinhashIndex(appended, "id", "text", p)
         // tiny target so the gate actually exercises the fold
-        Dedup.compactMinhashIndex(s, p): Unit
+        graft.ops.Scale.compactIndex(s, p): Unit
       }
       Dedup.probeMinhashIndexMd5(s, path, fresh, "id", "text")
         .orderBy(col("id_a"), col("id_b"))
@@ -1665,7 +1665,7 @@ object QueriesScale {
     // ---- the sign-plane probe over an APPENDED-then-COMPACTED
     // layout (r17): a second embedding crawl (colinear ×3 copies of
     // sources 0-9, +200000) appends into the index, the accumulated
-    // file sets fold via compactSignPlaneIndex, then the colinear ×2
+    // file sets fold via Scale.compactIndex, then the colinear ×2
     // increment probes it — appended rows must pair with their fresh
     // twins exactly as a rebuild would (cosine 1.0), pinned by the
     // union-replay oracle. The embedding twin of x_dedup_inc_compact.
@@ -1680,7 +1680,7 @@ object QueriesScale {
       val path = buildOnce("spcidx", dir) { p =>
         Dedup.writeSignPlaneIndex(base, "vec_id", "embedding", p)
         Dedup.appendToSignPlaneIndex(appended, "vec_id", "embedding", p)
-        Dedup.compactSignPlaneIndex(s, p): Unit
+        graft.ops.Scale.compactIndex(s, p): Unit
       }
       Dedup.probeSignPlaneIndex(s, path, fresh, "vec_id", "embedding", 0.99)
         .orderBy(col("id_a"), col("id_b"))
@@ -1693,9 +1693,10 @@ object QueriesScale {
       val fresh = base.filter(col("vec_id") < 20)
         .select((col("vec_id") + 100000).as("vec_id"),
           transform(col("embedding"), x => (x * lit(2.0f)).cast("float")).as("embedding"))
+      val banded = Dedup.SignPlaneLayout.Banded(3)
       val path = buildOnce("spbidx", dir)(p =>
-        Dedup.writeSignPlaneIndexBanded(base, "vec_id", "embedding", p))
-      Dedup.probeSignPlaneIndexBanded(s, path, fresh, "vec_id", "embedding", 0.99)
+        Dedup.writeSignPlaneIndex(base, "vec_id", "embedding", p, layout = banded))
+      Dedup.probeSignPlaneIndex(s, path, fresh, "vec_id", "embedding", 0.99, layout = banded)
         .orderBy(col("id_a"), col("id_b"))
     }),
 
@@ -2608,7 +2609,7 @@ object QueriesScale {
     // ---- the substring probe over an APPENDED-then-COMPACTED index
     // (r17): a second crawl whose text IS the increment's gibberish
     // tail appends its fingerprints, the file sets fold via
-    // compactSubstringIndex, then the standard increment probes it —
+    // Scale.compactIndex, then the standard increment probes it —
     // the tail windows are now duplicated passages and must be cut
     // on top of the lifted-prefix cut, which only happens if the
     // appended rows survived compaction (union-replay oracle).
@@ -2620,7 +2621,7 @@ object QueriesScale {
       val path = buildOnce("subcidx", dir) { p =>
         CorpusOps.writeSubstringIndex(base, "id", "text", p, window = 8)
         CorpusOps.appendToSubstringIndex(crawl, "id", "text", p, window = 8)
-        CorpusOps.compactSubstringIndex(s, p): Unit
+        graft.ops.Scale.compactIndex(s, p): Unit
       }
       CorpusOps.probeSubstringIndex(s, path, substringIncrement(s, dir), "id", "text", window = 8)
         .orderBy(col("id"))

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 /** One-shot scale-pricing instrument (r18 verdict task 3): rebuild the
   * exact persistent-index layout `x_dedup_inc_compact` benches —
   * base corpus indexed, a second crawl appended, file sets folded by
-  * `compactMinhashIndex` — then price BOTH halves of the decade-up
+  * `Scale.compactIndex` — then price BOTH halves of the decade-up
   * cost with the audits built for it:
   *
   *   - `Dedup.lshCandidateStats` over the index CONTENT (base ∪
@@ -36,7 +36,7 @@ object ScaleAudit {
     val path = java.nio.file.Files.createTempDirectory("scale-audit-lsh").toString + "/idx"
     graft.ops.Dedup.writeMinhashIndexMd5(base, "id", "text", path)
     graft.ops.Dedup.appendToMinhashIndex(appended, "id", "text", path)
-    graft.ops.Dedup.compactMinhashIndex(spark, path): Unit
+    graft.ops.Scale.compactIndex(spark, path): Unit
     val idx = graft.ops.Dedup
       .lshCandidateStats(base.unionByName(appended), "id", "text", w = 3, numHashes = 12, bands = 4)
       .head()

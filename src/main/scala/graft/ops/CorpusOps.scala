@@ -1113,7 +1113,7 @@ object CorpusOps {
     * Appends may duplicate a fingerprint already present (the index
     * is semantically a SET and the probe's covered-position collect_set
     * absorbs duplicates — spec-proven probe-after-append ≡ rebuilt);
-    * [[compactSubstringIndex]] reclaims the accumulated append file
+    * [[Scale.compactIndex]] reclaims the accumulated append file
     * sets, safe to run next to live probes.
     *
     * Crash-consistency contract (spec-proven,
@@ -1131,22 +1131,6 @@ object CorpusOps {
   ): Unit =
     substringIndexLayout(df, idCol, textCol, path, window,
       org.apache.spark.sql.SaveMode.Append)
-
-  /** COMPACT the substring index's accumulated append file sets —
-    * same contract as `Dedup.compactMinhashIndex`: the index is a SET
-    * of (fp, pfx) rows and the probe's covered-position collect_set
-    * absorbs duplicates, so [[graft.ops.Scale.compact]]'s
-    * rename-in-then-grace-defer swap is probe-invisible at every
-    * state; probes read grace-aware (`Scale.readLive`, manifest-
-    * doomed files excluded up front) with a bounded missing-file
-    * retry — no maintenance window. Replaces the former doc-only
-    * "periodic per-partition distinct-rewrite" procedure.
-    */
-  def compactSubstringIndex(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      targetBytes: Long = 128L << 20,
-      graceMs: Long = Scale.DefaultGraceMs): Seq[Scale.CompactStats] =
-    Scale.compact(spark, path, targetBytes, deferDeletes = true, graceMs = graceMs)
 
   /** ONE layout pipeline for build AND append (see
     * `Dedup.minhashIndexLayout` — the flavors must not drift).
@@ -1196,7 +1180,7 @@ object CorpusOps {
       // inference would throw where the correct semantics is
       // "no history → pass the increment through uncut". Grace-aware
       // read (Scale.readLive): manifest-doomed files are excluded up
-      // front, so the probe cannot race compactSubstringIndex.
+      // front, so the probe cannot race Scale.compactIndex.
       val index0 = Scale.readLive(spark, path,
         Some(org.apache.spark.sql.types.StructType(Seq(
           org.apache.spark.sql.types.StructField("__fp", org.apache.spark.sql.types.StringType),

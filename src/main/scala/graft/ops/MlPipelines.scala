@@ -7,7 +7,7 @@ import org.apache.spark.HashPartitioner
 import org.apache.spark.ml.{GraftModels, Pipeline => MlPipeline, PipelineModel}
 import org.apache.spark.ml.classification.{LogisticRegression, LogisticRegressionModel}
 import org.apache.spark.ml.evaluation.BinaryClassificationEvaluator
-import org.apache.spark.ml.feature.{HashingTF, MinHashLSH, MinHashLSHModel, RegexTokenizer}
+import org.apache.spark.ml.feature.{HashingTF, RegexTokenizer}
 import org.apache.spark.ml.linalg.{Vector, Vectors}
 import org.apache.spark.ml.tuning.{CrossValidator, CrossValidatorModel, ParamGridBuilder}
 import org.apache.spark.rdd.RDD
@@ -30,9 +30,6 @@ import org.apache.spark.sql.functions._
   *   - [[crossValidateRelevance]]: MLlib's `CrossValidator` over
   *     MLlib's `LogisticRegression`, which it keeps because it selects
   *     over regParam and elastic-net values.
-  *   - [[minhashLshJoin]]: MLlib's MinHashLSH `approxSimilarityJoin`
-  *     as the library-native alternative to [[Dedup.minhashLshPairs]]
-  *     (SURVEY §7.2 step 7).
   */
 object MlPipelines {
 
@@ -253,38 +250,5 @@ object MlPipelines {
     val bestReg = model.bestModel.asInstanceOf[PipelineModel]
       .stages.last.asInstanceOf[LogisticRegressionModel].getRegParam
     (model, bestReg)
-  }
-
-  /** Near-dup candidate pairs via MLlib MinHashLSH over hashed binary
-    * token vectors. Returns (id_a, id_b, jaccard_distance) with
-    * id_a < id_b, distance below `maxDistance` (jaccard similarity
-    * >= 1 - maxDistance).
-    */
-  def minhashLshJoin(
-      df: DataFrame,
-      idCol: String,
-      textCol: String,
-      numHashTables: Int = 8,
-      maxDistance: Double = 0.5,
-      numFeatures: Int = 1 << 16
-  ): DataFrame = {
-    val tok = new RegexTokenizer()
-      .setInputCol(textCol).setOutputCol("__tokens").setPattern("\\s+")
-    val tf = new HashingTF()
-      .setInputCol("__tokens").setOutputCol("__features")
-      .setNumFeatures(numFeatures).setBinary(true)
-    val prepared = tf.transform(tok.transform(df.select(col(idCol).as("id"), col(textCol))))
-      .select(col("id"), col("__features"))
-    val lsh = new MinHashLSH()
-      .setInputCol("__features").setOutputCol("__hashes")
-      .setNumHashTables(numHashTables).setSeed(42L)
-    val model: MinHashLSHModel = lsh.fit(prepared)
-    model
-      .approxSimilarityJoin(prepared, prepared, maxDistance, "jaccard_distance")
-      .select(
-        col("datasetA.id").as("id_a"),
-        col("datasetB.id").as("id_b"),
-        round(col("jaccard_distance"), 4).as("jaccard_distance"))
-      .filter(col("id_a") < col("id_b"))
   }
 }

@@ -581,6 +581,36 @@ object Scale {
     } finally pool.shutdown()
   }
 
+  /** COMPACT a set-semantics index's accumulated append files — the
+    * one compaction call of the persisted dedup indexes: the minhash
+    * band index, the sign-plane index (either layout) and the
+    * substring fingerprint index. A year of nightly appends otherwise
+    * leaves one small file set per crawl per partition, and the
+    * listing cost rides on every probe.
+    *
+    * Each of these indexes is semantically a SET of keyed rows and its
+    * probe collapses duplicates (`dropDuplicates` on the pair, or the
+    * substring probe's covered-position `collect_set`), so every state
+    * of [[compact]]'s rename-in-then-delete swap is probe-identical:
+    * new files rename in BEFORE originals go, so the window holds
+    * transient DUPLICATES and never a loss, and a crashed pass leaves
+    * originals plus a partial compacted set, both live, same answers.
+    * Concurrent compactions converge the same way, so no lease.
+    * Reclamation is GRACE-DEFERRED (`deferDeletes = true`): a pass
+    * deletes only files an earlier pass doomed at least `graceMs` ago,
+    * probes exclude doomed files up front ([[readLive]]), and the
+    * probes' missing-file retry absorbs the only residue (a probe
+    * outliving a whole grace) — no maintenance window. Per-partition
+    * `coalesce` merge toward 128 MiB files, no shuffle, cost
+    * proportional to the fragmented tail only. A sibling tree such as
+    * the sign-plane `_deletes` tombstones is a separate root and is
+    * never touched.
+    */
+  def compactIndex(
+      spark: SparkSession, path: String,
+      graceMs: Long = DefaultGraceMs): Seq[CompactStats] =
+    compact(spark, path, 128L << 20, deferDeletes = true, graceMs = graceMs)
+
   def saltedJoin(
       skewed: DataFrame,
       dim: DataFrame,

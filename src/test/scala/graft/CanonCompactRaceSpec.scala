@@ -100,7 +100,7 @@ class CanonCompactRaceSpec extends SparkSpecBase {
         var cycles = 0
         while (!stop.get() && cycles < 10) {
           Dedup.appendToMinhashIndex(appended, "id", "text", path)
-          Dedup.compactMinhashIndex(spark, path)
+          graft.ops.Scale.compactIndex(spark, path)
           cycles += 1
         }
       } catch { case e: Throwable => errs.add(e) } finally stop.set(true)
@@ -123,8 +123,8 @@ class CanonCompactRaceSpec extends SparkSpecBase {
     // gone, and the probe still matches.
     assert(new java.io.File(path, "_GARBAGE").exists(),
       "churn under the default grace must defer, not delete")
-    Dedup.compactMinhashIndex(spark, path, graceMs = 0L)
-    Dedup.compactMinhashIndex(spark, path, graceMs = 0L)
+    graft.ops.Scale.compactIndex(spark, path, graceMs = 0L)
+    graft.ops.Scale.compactIndex(spark, path, graceMs = 0L)
     val bandDirs = new java.io.File(path).listFiles().filter(_.getName.startsWith("band="))
     assert(bandDirs.nonEmpty)
     bandDirs.foreach { d =>
@@ -159,7 +159,7 @@ class CanonCompactRaceSpec extends SparkSpecBase {
         var cycles = 0
         while (!stop.get() && cycles < 10) {
           Dedup.appendToSignPlaneIndex(appended, "vec_id", "embedding", path)
-          Dedup.compactSignPlaneIndex(spark, path)
+          graft.ops.Scale.compactIndex(spark, path)
           cycles += 1
         }
       } catch { case e: Throwable => errs.add(e) } finally stop.set(true)
@@ -202,7 +202,7 @@ class CanonCompactRaceSpec extends SparkSpecBase {
         var cycles = 0
         while (!stop.get() && cycles < 10) {
           CorpusOps.appendToSubstringIndex(crawl, "id", "text", path, window = 8)
-          CorpusOps.compactSubstringIndex(spark, path)
+          graft.ops.Scale.compactIndex(spark, path)
           cycles += 1
         }
       } catch { case e: Throwable => errs.add(e) } finally stop.set(true)

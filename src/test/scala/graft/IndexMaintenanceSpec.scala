@@ -706,7 +706,7 @@ class IndexMaintenanceSpec extends SparkSpecBase {
       val probe = Dedup.probeSignPlaneIndex(spark, idx, stream, "vec_id", "embedding", 0.99)
       // a compaction pass runs while the stream-static plan holds its
       // pinned listing, and the listing ages past the grace
-      Dedup.compactSignPlaneIndex(spark, idx, graceMs = 200)
+      graft.ops.Scale.compactIndex(spark, idx, graceMs = 200)
       Thread.sleep(500)
       val q = probe.writeStream.format("memory").queryName("staleguard")
         .outputMode("append")

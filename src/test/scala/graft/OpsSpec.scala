@@ -273,9 +273,13 @@ class DedupSpec extends SparkSpecBase {
     val path = java.nio.file.Files.createTempDirectory("spb-idx").toString
     // build from one half, append the other — probe must equal a
     // rebuilt-index probe, i.e. batch banded pairs restricted cross-side
-    Dedup.writeSignPlaneIndexBanded(base.filter(col("vec_id") % 2 === 0), "vec_id", "embedding", path)
-    Dedup.appendToSignPlaneIndexBanded(base.filter(col("vec_id") % 2 === 1), "vec_id", "embedding", path)
-    val probeDf = Dedup.probeSignPlaneIndexBandedPlan(spark, path, fresh, "vec_id", "embedding", 0.99)
+    val banded = Dedup.SignPlaneLayout.Banded(3)
+    Dedup.writeSignPlaneIndex(base.filter(col("vec_id") % 2 === 0), "vec_id", "embedding", path,
+      layout = banded)
+    Dedup.appendToSignPlaneIndex(base.filter(col("vec_id") % 2 === 1), "vec_id", "embedding", path,
+      layout = banded)
+    val probeDf = Dedup.probeSignPlaneIndexPlan(spark, path, fresh, "vec_id", "embedding", 0.99,
+      layout = banded)
     val probed = probeDf.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     // metric-proven cell pruning (populated by the execution above)
     val partitioned = fileScans(probeDf.queryExecution.executedPlan)
@@ -285,8 +289,12 @@ class DedupSpec extends SparkSpecBase {
     val cellsTotal = partitioned.head.relation.location.listFiles(Nil, Nil).size
     assert(cellsRead > 0 && cellsRead < cellsTotal,
       s"probe read $cellsRead of $cellsTotal (band, bucket) cells — static cell pruning lost")
-    val batch = Dedup.embeddingNearDupPairsBanded(
-        base.unionByName(fresh), "vec_id", "embedding", 0.99)
+    // index layout: band=<k> directories, each holding bucket=<b> ones
+    val bandDirs = new java.io.File(path).listFiles().filter(_.isDirectory).toSeq
+    assert(bandDirs.nonEmpty && bandDirs.forall(_.getName.startsWith("band=")))
+    assert(bandDirs.forall(_.listFiles().filter(_.isDirectory).forall(_.getName.startsWith("bucket="))))
+    val batch = Dedup.embeddingNearDupPairs(
+        base.unionByName(fresh), "vec_id", "embedding", 0.99, layout = banded)
       .filter(col("id_a") < 100000 && col("id_b") >= 100000)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     assert(probed === batch)
@@ -301,8 +309,8 @@ class DedupSpec extends SparkSpecBase {
     def pairs(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     val single = pairs(Dedup.embeddingNearDupPairs(planted, "vec_id", "embedding", 0.99, planes = 4))
-    val banded = pairs(Dedup.embeddingNearDupPairsBanded(planted, "vec_id", "embedding", 0.99,
-      planes = 4, bands = 3))
+    val banded = pairs(Dedup.embeddingNearDupPairs(planted, "vec_id", "embedding", 0.99,
+      planes = 4, layout = Dedup.SignPlaneLayout.Banded(3)))
     // band 0 IS the single-band blocking → OR-amplification can only add
     assert(single.subsetOf(banded),
       s"banded lost single-band pairs: ${single.diff(banded).take(3)}")
@@ -321,10 +329,56 @@ class DedupSpec extends SparkSpecBase {
     val short = Seq((1L, Array(1.0f, -1.0f, 1.0f, 1.0f, 2.0f, 2.0f, 2.0f, 2.0f)),
         (2L, Array(2.0f, -2.0f, 2.0f, 2.0f, 4.0f, 4.0f, 4.0f, 4.0f)))
       .toDF("vec_id", "embedding")
-    val shortPairs = Dedup.embeddingNearDupPairsBanded(short, "vec_id", "embedding", 0.99,
-        planes = 4, bands = 3)
+    val shortPairs = Dedup.embeddingNearDupPairs(short, "vec_id", "embedding", 0.99,
+        planes = 4, layout = Dedup.SignPlaneLayout.Banded(3))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(shortPairs === Set((1L, 2L)), "8-dim colinear pair must survive 4×3 banding")
+  }
+
+  test("flat sign-plane layout reads short vectors as sign 0: miner and write+probe find the pair") {
+    // 2-component vectors at planes = 4: components 3 and 4 do not
+    // exist. ANSI element_at throws INVALID_ARRAY_INDEX_IN_ELEMENT_AT
+    // there; the projection must read them as sign 0 instead, as the
+    // banded layout and the DuckDB oracle do
+    val short = Seq((1L, Array(1.0f, -2.0f)), (2L, Array(2.0f, -4.0f)), (3L, Array(-1.0f, 1.0f)))
+      .toDF("vec_id", "embedding")
+    def pairs(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(pairs(Dedup.embeddingNearDupPairs(short, "vec_id", "embedding", 0.99, planes = 4)) ===
+      Set((1L, 2L)))
+    val path = java.nio.file.Files.createTempDirectory("sp-short").toString + "/idx"
+    Dedup.writeSignPlaneIndex(short.filter(col("vec_id") === 1L), "vec_id", "embedding", path, planes = 4)
+    assert(pairs(Dedup.probeSignPlaneIndex(spark, path, short.filter(col("vec_id") =!= 1L),
+      "vec_id", "embedding", 0.99, planes = 4)) === Set((1L, 2L)))
+  }
+
+  test("sign-plane append and probe refuse a layout the index was not written with") {
+    val e = GraftSession.table(spark, sf, "embeddings")
+      .select(col("vec_id"), col("embedding")).filter(col("vec_id") < 50)
+    val banded = Dedup.SignPlaneLayout.Banded(3)
+    val flatPath = java.nio.file.Files.createTempDirectory("sp-flat").toString + "/idx"
+    val bandedPath = java.nio.file.Files.createTempDirectory("sp-banded").toString + "/idx"
+    Dedup.writeSignPlaneIndex(e, "vec_id", "embedding", flatPath)
+    Dedup.writeSignPlaneIndex(e, "vec_id", "embedding", bandedPath, layout = banded)
+    def refused(body: => Any): Unit = {
+      val err = intercept[IllegalStateException](body)
+      assert(err.getMessage.contains("SIGNPLANE_LAYOUT_MISMATCH"), err.getMessage)
+    }
+    // a flat index, called banded
+    refused(Dedup.appendToSignPlaneIndex(e, "vec_id", "embedding", flatPath, layout = banded))
+    refused(Dedup.probeSignPlaneIndex(spark, flatPath, e, "vec_id", "embedding", 0.99, layout = banded))
+    // a banded index, called flat
+    refused(Dedup.appendToSignPlaneIndex(e, "vec_id", "embedding", bandedPath))
+    refused(Dedup.probeSignPlaneIndex(spark, bandedPath, e, "vec_id", "embedding", 0.99))
+    // refused before writing: each root still holds only its own layout
+    def tops(p: String) = new java.io.File(p).listFiles().filter(_.isDirectory)
+      .map(_.getName.takeWhile(_ != '=')).toSet
+    assert(tops(flatPath) === Set("bucket"))
+    assert(tops(bandedPath) === Set("band"))
+    // the matching layout still probes: every vector finds itself
+    val self = Dedup.probeSignPlaneIndex(spark, bandedPath, e, "vec_id", "embedding", 0.99, layout = banded)
+      .filter(col("id_a") === col("id_b"))
+    assert(self.count() === e.count())
   }
 
   test("zipfSurprisal: rank magnitudes exact, OOV bucket total, fluent < gibberish") {
@@ -1094,7 +1148,8 @@ class DedupSpec extends SparkSpecBase {
   }
 
   test("simhash32: exact dup at hamming 0, near-dup close, unrelated far") {
-    val sims = docs.select(col("id"), Dedup.simhash32Md5(Dedup.tokens(col("text"))).as("s"))
+    val sims = docs.select(col("id"),
+        Dedup.simhash32OfMd5(transform(Dedup.tokens(col("text")), t => md5(t))).as("s"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(sims(1L) === sims(4L))
     def ham(a: Long, b: Long) = java.lang.Long.bitCount(a ^ b)

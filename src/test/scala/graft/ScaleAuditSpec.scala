@@ -147,7 +147,7 @@ class ScaleAuditSpec extends SparkSpecBase {
     val path = java.nio.file.Files.createTempDirectory("probe-audit").toString + "/idx"
     Dedup.writeMinhashIndexMd5(base, "id", "text", path)
     Dedup.appendToMinhashIndex(appended, "id", "text", path)
-    Dedup.compactMinhashIndex(spark, path): Unit
+    graft.ops.Scale.compactIndex(spark, path): Unit
     val r = Dedup.probeCandidateStats(spark, path, fresh, "id", "text").collect()(0)
     // truth reads the LIVE file set, as the probe does — a raw
     // directory read would resurrect the compaction-doomed duplicates
