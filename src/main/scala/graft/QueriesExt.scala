@@ -19,7 +19,6 @@ object QueriesExt {
 
   private def li(s: SparkSession, dir: String)   = table(s, dir, "lineitem")
   private def ord(s: SparkSession, dir: String)  = table(s, dir, "orders")
-  private def cust(s: SparkSession, dir: String) = table(s, dir, "customer")
   private def supp(s: SparkSession, dir: String) = table(s, dir, "supplier")
   private def nat(s: SparkSession, dir: String)  = table(s, dir, "nation")
   private def prt(s: SparkSession, dir: String)  = table(s, dir, "part")

@@ -4,11 +4,13 @@ import graft.GraftSession.table
 import graft.functions.{AnswerStart, DetHash}
 import graft.ops.{CorpusOps, Dedup, Multimodal, Similarity, TextAnalysis}
 import graft.streaming.EventsStream
+import graft.streaming.EventsStream.Sink
 
 import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
 
 /** Scale-extension queries: the training-data-pipeline operator family
@@ -38,7 +40,7 @@ object QueriesScale {
     * per gate — negligible next to the gate's own corpus pass.
     */
   private def canonOff(s: SparkSession, dir: String): Long =
-    docs(s, dir).agg(max(col("doc_id"))).head.getLong(0) + 1L
+    docs(s, dir).agg(max(col("doc_id"))).head().getLong(0) + 1L
 
   /** Plant for the canonical-dedup gates: every doc gets a composed
     * accent suffix (U+00E9); every %7=3 doc ALSO spawns an EVASIVE
@@ -207,13 +209,13 @@ object QueriesScale {
   /** One gate row's increment stream: [[EventsStream.ingest]] of the
     * staged `incDir` into a fresh `<tag>out` sink under a fresh
     * `<tag>ckpt` checkpoint, run to termination, then the sink read
-    * back without its `inc` key. Staging `incDir` (fresh or
-    * [[buildOnce]]) stays the caller's choice, so the timed window is
-    * the caller's too. `readSchema` (the op's output columns) pins the
-    * read-back for ops that can emit zero rows in every batch: the
-    * sink then holds no parquet file, and a schema-less read would die
-    * on inference instead of handing the oracle an empty frame to
-    * fail cleanly on (r18).
+    * back without its `inc` key. Staging `incDir` ([[stageFresh]],
+    * or [[stageFile]] under [[buildOnce]]) stays the caller's choice,
+    * so the timed window is the caller's too. `readSchema` (the op's
+    * output columns) pins the read-back for ops that can emit zero
+    * rows in every batch: the sink then holds no parquet file, and a
+    * schema-less read would die on inference instead of handing the
+    * oracle an empty frame to fail cleanly on (r18).
     */
   private[graft] def streamTwin(
       s: SparkSession, dir: String, tag: String, incDir: String, schema: StructType,
@@ -223,6 +225,36 @@ object QueriesScale {
     val ckpt   = GraftSession.freshGatePath(s"${tag}ckpt", dir)
     EventsStream.ingest(s, incDir, schema, outDir, ckpt)(op).awaitTermination()
     readSchema.fold(s.read)(s.read.schema).parquet(outDir).drop("inc")
+  }
+
+  /** THE staging write of a gate increment: `inc` lands under `p` as
+    * ONE parquet file, so a stream over `p` delivers it as ONE
+    * micro-batch — the rule the union-batch oracles rest on
+    * (`s9_stream_ingest`, `s9_stream_canon`). Memoized staging passes
+    * it to [[buildOnce]]; fresh staging is [[stageFresh]].
+    */
+  private def stageFile(inc: DataFrame)(p: String): Unit =
+    inc.coalesce(1).write.mode("overwrite").parquet(p)
+
+  /** [[stageFile]] into the fresh gate path `tag` under `dir`, inside
+    * the caller's timed window; returns the path.
+    */
+  private[graft] def stageFresh(inc: DataFrame, tag: String, dir: String): String = {
+    val p = GraftSession.freshGatePath(tag, dir)
+    stageFile(inc)(p)
+    p
+  }
+
+  /** One memory-sink gate row over `dir`'s `table`: `start` gets the
+    * table's schema and a query name unique in the JVM, the stream
+    * runs to termination, and its memory table is the row's output.
+    */
+  private def memoryStream(s: SparkSession, dir: String, tag: String, table: String = "events")(
+      start: (StructType, String) => StreamingQuery): DataFrame = {
+    val schema = s.read.parquet(s"$dir/$table.parquet").schema
+    val name   = s"stream_${tag}_${streamN.incrementAndGet()}"
+    start(schema, name).awaitTermination()
+    s.table(name)
   }
 
   /** The five retrieval gate queries — ONE definition for the four
@@ -1637,8 +1669,7 @@ object QueriesScale {
       val fresh = base.filter(col("id") < 25)
         .select((col("id") + 10000).as("id"), concat(col("text"), lit(" zz yy")).as("text"))
       val indexPath = buildOnce("lshsidx", dir)(p => Dedup.writeMinhashIndexMd5(base, "id", "text", p))
-      val freshDir = GraftSession.freshGatePath("lshstream", dir)
-      fresh.coalesce(1).write.mode("overwrite").parquet(freshDir)
+      val freshDir = stageFresh(fresh, "lshstream", dir)
       val pairs = new StructType().add("id_a", fresh.schema("id").dataType)
         .add("id_b", fresh.schema("id").dataType).add("est_jaccard", "double")
       streamTwin(s, dir, "lshstream", freshDir, fresh.schema, Some(pairs)) { (b, _) =>
@@ -1734,8 +1765,7 @@ object QueriesScale {
         .select((col("vec_id") + 100000).as("vec_id"),
           transform(col("embedding"), x => (x * lit(2.0f)).cast("float")).as("embedding"))
       val indexPath = buildOnce("spsidx", dir)(p => Dedup.writeSignPlaneIndex(base, "vec_id", "embedding", p))
-      val freshDir = GraftSession.freshGatePath("spstream", dir)
-      fresh.coalesce(1).write.mode("overwrite").parquet(freshDir)
+      val freshDir = stageFresh(fresh, "spstream", dir)
       val pairs = new StructType().add("id_a", fresh.schema("vec_id").dataType)
         .add("id_b", fresh.schema("vec_id").dataType).add("cosine", "double")
       streamTwin(s, dir, "spstream", freshDir, fresh.schema, Some(pairs)) { (b, _) =>
@@ -1953,8 +1983,7 @@ object QueriesScale {
       // s9_stream_ingest precedent): it is a pure function of the
       // input data and read-only during the stream, so the timed
       // window is the stream, not the staging write
-      val incDir = buildOnce("annjstreaminc", dir)(p =>
-        inc.coalesce(1).write.mode("overwrite").parquet(p))
+      val incDir = buildOnce("annjstreaminc", dir)(stageFile(inc))
       // the base side is STATIC across every micro-batch: size it once
       // at stream setup and hand annJoinAuto the hint — without this
       // every batch paid a full base-corpus count just to re-derive the
@@ -2043,8 +2072,7 @@ object QueriesScale {
       val fresh = e.filter(col("vec_id") < 20)
         .select((col("vec_id") + lit(100000L)).as("vec_id"),
           expr("transform(embedding, x -> cast(x * 2 as float))").as("embedding"))
-      val incDir = GraftSession.freshGatePath("kmstream", dir)
-      fresh.coalesce(1).write.mode("overwrite").parquet(incDir)
+      val incDir = stageFresh(fresh, "kmstream", dir)
       streamTwin(s, dir, "km", incDir, fresh.schema) { (b, _) =>
         Similarity.assignWithCentroids(s, path, b, "vec_id", "embedding")
       }
@@ -2084,8 +2112,7 @@ object QueriesScale {
       val fresh = e.filter(col("vec_id") < 20)
         .select((col("vec_id") + lit(100000L)).as("vec_id"),
           expr("transform(embedding, x -> cast(x * 2 as float))").as("embedding"))
-      val incDir = GraftSession.freshGatePath("kmrecinc", dir)
-      fresh.coalesce(1).write.mode("overwrite").parquet(incDir)
+      val incDir = stageFresh(fresh, "kmrecinc", dir)
       streamTwin(s, dir, "kmrec", incDir, fresh.schema) { (b, _) =>
         Similarity.recenterWithIncrement(s, path, b, "vec_id", "embedding")
       }
@@ -2128,8 +2155,7 @@ object QueriesScale {
       // read-only staged increment -> memoizable (r19); the MODEL
       // path stays fresh per invocation because the stream retrains
       // (mutates) it
-      val incDir = buildOnce("kmretinc", dir)(p =>
-        fresh.coalesce(1).write.mode("overwrite").parquet(p))
+      val incDir = buildOnce("kmretinc", dir)(stageFile(fresh))
       // the model is versioned by batch id with a commit-marker-last
       // publish, so a replayed batch folds against the model state it
       // saw the first time and rewrites only its own version
@@ -2498,8 +2524,7 @@ object QueriesScale {
       // micro-batch, as the union-batch oracle requires); built once
       // like the index so the timed window is the stream, not the
       // serialized staging write of a corpus-fraction increment
-      val incDir = buildOnce("ingeststreaminc", dir)(p =>
-        inc.coalesce(1).write.mode("overwrite").parquet(p))
+      val incDir = buildOnce("ingeststreaminc", dir)(stageFile(inc))
       streamTwin(s, dir, "ingest", incDir, inc.schema) { (b, bid) =>
         CorpusOps.ingestGateWithState(s, path, b, "doc_id", "text", s"b$bid")
       }
@@ -2516,8 +2541,7 @@ object QueriesScale {
         .select(col("doc_id"), col("text"))
       // read-only staged increment -> memoizable (r19, the
       // s9_stream_ingest precedent)
-      val incDir = buildOnce("qpipestreaminc", dir)(p =>
-        inc.coalesce(1).write.mode("overwrite").parquet(p))
+      val incDir = buildOnce("qpipestreaminc", dir)(stageFile(inc))
       streamTwin(s, dir, "qpipe", incDir, inc.schema) { (b, _) =>
         TextAnalysis.qualityPipelineWithModels(s,
           s"$path/span", s"$path/nb", s"$path/kn", b, "doc_id", "text")
@@ -2556,8 +2580,7 @@ object QueriesScale {
         Dedup.writeSpanIndex(
           planted.filter(pmod(col("doc_id"), lit(3)) === 0), "doc_id", "text", p))
       val inc = planted.filter(pmod(col("doc_id"), lit(9)) === 4)
-      val incDir = GraftSession.freshGatePath("spanstream", dir)
-      inc.coalesce(1).write.mode("overwrite").parquet(incDir)
+      val incDir = stageFresh(inc, "spanstream", dir)
       streamTwin(s, dir, "span", incDir, inc.schema) { (b, _) =>
         Dedup.spanDedupWithIndex(s, path, b, "doc_id", "text")
       }.orderBy(col("doc_id"))
@@ -2638,8 +2661,7 @@ object QueriesScale {
       val indexPath = buildOnce("subsidx", dir)(p =>
         CorpusOps.writeSubstringIndex(base, "id", "text", p, window = 8))
       val fresh    = substringIncrement(s, dir)
-      val freshDir = GraftSession.freshGatePath("substream", dir)
-      fresh.coalesce(1).write.mode("overwrite").parquet(freshDir)
+      val freshDir = stageFresh(fresh, "substream", dir)
       streamTwin(s, dir, "sub", freshDir, fresh.schema) { (b, _) =>
         CorpusOps.probeSubstringIndex(s, indexPath, b, "id", "text", window = 8)
       }.orderBy(col("id"))
@@ -2719,40 +2741,27 @@ object QueriesScale {
     }),
 
     // ---- §2.9 Structured Streaming (batch query IS the oracle) ------------
-    "s9_stream_window" -> ((s, dir) => {
-      val schema = s.read.parquet(s"$dir/events.parquet").schema
-      val name   = s"stream_win_${streamN.incrementAndGet()}"
-      val q = EventsStream.streamWindowedCounts(s, dir, schema, name,
-        prep = GraftSession.tsAsTimestamp,
-        globFilter = Some("events.parquet"))
-      q.awaitTermination()
-      s.table(name).orderBy(col("window_start"), col("event_type"))
-    }),
+    "s9_stream_window" -> ((s, dir) =>
+      memoryStream(s, dir, "win") { (schema, name) =>
+        EventsStream.streamWindowedCounts(s, dir, schema, Sink.Memory(name),
+          prep = GraftSession.tsAsTimestamp, globFilter = Some("events.parquet"))
+      }.orderBy(col("window_start"), col("event_type"))),
     // ---- SKETCHES on the stream: the kmv_quantile synopsis is a
     // TypedImperativeAggregate, so the state store carries its ≤16-
     // entry buffer per open window — constant-size windowed medians
     // at any rate; the oracle replays the estimator per window group
-    "s9_stream_sketch" -> ((s, dir) => {
-      val schema = s.read.parquet(s"$dir/events.parquet").schema
-      val name   = s"stream_sketch_${streamN.incrementAndGet()}"
-      val q = EventsStream.streamWindowedQuantiles(s, dir, schema, name,
-        prep = GraftSession.tsAsTimestamp,
-        globFilter = Some("events.parquet"))
-      q.awaitTermination()
-      s.table(name).orderBy(col("window_start"), col("event_type"))
-    }),
+    "s9_stream_sketch" -> ((s, dir) =>
+      memoryStream(s, dir, "sketch") { (schema, name) =>
+        EventsStream.streamWindowedQuantiles(s, dir, schema, name,
+          prep = GraftSession.tsAsTimestamp, globFilter = Some("events.parquet"))
+      }.orderBy(col("window_start"), col("event_type"))),
 
-    "s9_stream_dedup" -> ((s, dir) => {
-      val schema = s.read.parquet(s"$dir/events.parquet").schema
-      val name   = s"stream_dedup_${streamN.incrementAndGet()}"
-      val q = EventsStream.streamDedup(s, dir, schema, name,
-        prep = GraftSession.tsAsTimestamp,
-        globFilter = Some("events.parquet"))
-      q.awaitTermination()
-      s.table(name)
-        .select(col("user_id"), col("event_type"), col("value"))
-        .orderBy(col("user_id"), col("event_type"), col("value"))
-    }),
+    "s9_stream_dedup" -> ((s, dir) =>
+      memoryStream(s, dir, "dedup") { (schema, name) =>
+        EventsStream.streamDedup(s, dir, schema, name,
+          prep = GraftSession.tsAsTimestamp, globFilter = Some("events.parquet"))
+      }.select(col("user_id"), col("event_type"), col("value"))
+        .orderBy(col("user_id"), col("event_type"), col("value"))),
 
     // ---- M6 deterministic negative sampling -------------------------------
     "m6_negative_sampling" -> ((s, dir) => {
@@ -2789,43 +2798,32 @@ object QueriesScale {
         .orderBy(col("doc_id"))
     }),
 
-    "s9_stream_sessions" -> ((s, dir) => {
-      val schema = s.read.parquet(s"$dir/events.parquet").schema
-      val name   = s"stream_sessions_${streamN.incrementAndGet()}"
-      val q = EventsStream.streamSessionCounts(s, dir, schema, name,
-        prep = GraftSession.tsAsTimestamp,
-        globFilter = Some("events.parquet"))
-      q.awaitTermination()
-      s.table(name).orderBy(col("user_id"), col("session_start_us"))
-    }),
+    "s9_stream_sessions" -> ((s, dir) =>
+      memoryStream(s, dir, "sessions") { (schema, name) =>
+        EventsStream.streamSessionCounts(s, dir, schema, Sink.Memory(name),
+          prep = GraftSession.tsAsTimestamp, globFilter = Some("events.parquet"))
+      }.orderBy(col("user_id"), col("session_start_us"))),
 
-    "s9_stream_stateful" -> ((s, dir) => {
-      val schema = s.read.parquet(s"$dir/events.parquet").schema
-      val name   = s"stream_stateful_${streamN.incrementAndGet()}"
-      val q = EventsStream.streamUserStats(s, dir, schema, name,
-        globFilter = Some("events.parquet"))
-      q.awaitTermination()
-      s.table(name).orderBy(col("user_id"))
-    }),
+    "s9_stream_stateful" -> ((s, dir) =>
+      memoryStream(s, dir, "stateful") { (schema, name) =>
+        EventsStream.streamUserStats(s, dir, schema, Sink.Memory(name),
+          globFilter = Some("events.parquet"))
+      }.orderBy(col("user_id"))),
 
     // ---- streaming funnel: the batch earliest-chain state machine
     // carried as constant-size per-user stream state; gated by the
     // SAME min-chain SQL as x_funnel_steps (an AvailableNow run's
     // final state equals the batch operator). Depth is monotone, so
     // max() collapses multi-batch update rows safely.
-    "s9_stream_funnel" -> ((s, dir) => {
-      val schema = s.read.parquet(s"$dir/events.parquet").schema
-      val name   = s"stream_funnel_${streamN.incrementAndGet()}"
-      val q = EventsStream.streamFunnelDepth(s, dir, schema, name,
-        Seq("view", "click", "purchase"), windowUs = 3L * 86400L * 1000000L,
-        globFilter = Some("events.parquet"))
-      q.awaitTermination()
-      s.table(name)
-        .groupBy(col("user_id")).agg(max(col("funnel_depth")).as("funnel_depth"))
+    "s9_stream_funnel" -> ((s, dir) =>
+      memoryStream(s, dir, "funnel") { (schema, name) =>
+        EventsStream.streamFunnelDepth(s, dir, schema, name,
+          Seq("view", "click", "purchase"), windowUs = 3L * 86400L * 1000000L,
+          globFilter = Some("events.parquet"))
+      }.groupBy(col("user_id")).agg(max(col("funnel_depth")).as("funnel_depth"))
         .filter(col("funnel_depth") >= 1)
         .groupBy(col("funnel_depth")).agg(count(lit(1)).as("n_users"))
-        .orderBy(col("funnel_depth"))
-    }),
+        .orderBy(col("funnel_depth"))),
 
     // ---- multimodal plumbing (stub codec, real schema/batching) -----------
     // ---- corpus curation: quality filter, mixture sampling, sessions ------
@@ -2881,8 +2879,7 @@ object QueriesScale {
           d.filter(pmod(col("doc_id"), lit(3)) === 0), "text", p, topV = 256))
       val inc = d.filter(pmod(col("doc_id"), lit(9)) === 4)
         .select(col("doc_id"), col("text"))
-      val incDir = GraftSession.freshGatePath("zipfstream", dir)
-      inc.coalesce(1).write.mode("overwrite").parquet(incDir)
+      val incDir = stageFresh(inc, "zipfstream", dir)
       streamTwin(s, dir, "zipf", incDir, inc.schema) { (b, _) =>
         TextAnalysis.scoreWithZipfRanks(s, ranksPath, b, "doc_id", "text")
       }.orderBy(col("doc_id"))
@@ -2931,8 +2928,7 @@ object QueriesScale {
           oovBits = 16, minCount = 2L))
       val inc = d.filter(pmod(col("doc_id"), lit(9)) === 4)
         .select(col("doc_id"), col("text"))
-      val incDir = GraftSession.freshGatePath("bigramstream", dir)
-      inc.coalesce(1).write.mode("overwrite").parquet(incDir)
+      val incDir = stageFresh(inc, "bigramstream", dir)
       streamTwin(s, dir, "bigram", incDir, inc.schema) { (b, _) =>
         TextAnalysis.scoreWithBigramCounts(s, countsPath, b, "doc_id", "text")
       }.orderBy(col("doc_id"))
@@ -2983,8 +2979,7 @@ object QueriesScale {
           oovBits = 16, minCount = 2L, backoffBits = 2))
       val inc = d.filter(pmod(col("doc_id"), lit(9)) === 4)
         .select(col("doc_id"), col("text"))
-      val incDir = GraftSession.freshGatePath("backoffstream", dir)
-      inc.coalesce(1).write.mode("overwrite").parquet(incDir)
+      val incDir = stageFresh(inc, "backoffstream", dir)
       streamTwin(s, dir, "backoff", incDir, inc.schema) { (b, _) =>
         TextAnalysis.scoreWithBackoffModel(s, path, b, "doc_id", "text")
       }.orderBy(col("doc_id"))
@@ -3037,8 +3032,7 @@ object QueriesScale {
           "text", "__is_en", p, oovBits = 16, minCount = 2L))
       val inc = d.filter(pmod(col("doc_id"), lit(9)) === 4)
         .select(col("doc_id"), col("text"))
-      val incDir = GraftSession.freshGatePath("nbstream", dir)
-      inc.coalesce(1).write.mode("overwrite").parquet(incDir)
+      val incDir = stageFresh(inc, "nbstream", dir)
       streamTwin(s, dir, "nb", incDir, inc.schema) { (b, _) =>
         TextAnalysis.scoreWithNbModel(s, path, b, "doc_id", "text")
       }.orderBy(col("doc_id"))
@@ -3093,8 +3087,7 @@ object QueriesScale {
           "text", "__is_en", p, oovBits = 16, minCount = 2L))
       val inc = d.filter(pmod(col("doc_id"), lit(9)) === 4)
         .select(col("doc_id"), col("text"), (col("lang") === "en").as("pos"))
-      val incDir = GraftSession.freshGatePath("nbevalstream", dir)
-      inc.coalesce(1).write.mode("overwrite").parquet(incDir)
+      val incDir = stageFresh(inc, "nbevalstream", dir)
       streamTwin(s, dir, "nbeval", incDir, inc.schema) { (b, _) =>
         TextAnalysis.evalWithNbModel(s, path, b, "doc_id", "text", "pos")
       }
@@ -3145,8 +3138,7 @@ object QueriesScale {
           oovBits = 16, minCount = 2L))
       val inc = d.filter(pmod(col("doc_id"), lit(9)) === 4)
         .select(col("doc_id"), col("text"))
-      val incDir = GraftSession.freshGatePath("knstream", dir)
-      inc.coalesce(1).write.mode("overwrite").parquet(incDir)
+      val incDir = stageFresh(inc, "knstream", dir)
       streamTwin(s, dir, "kn", incDir, inc.schema) { (b, _) =>
         TextAnalysis.scoreWithKnModel(s, path, b, "doc_id", "text")
       }.orderBy(col("doc_id"))
@@ -3210,8 +3202,7 @@ object QueriesScale {
         .select(col("doc_id"), col("text"))
       // read-only staged increment -> memoizable (r19); the REF path
       // stays fresh per invocation because the stream folds into it
-      val incDir = buildOnce("driftfoldinc", dir)(p =>
-        inc.coalesce(1).write.mode("overwrite").parquet(p))
+      val incDir = buildOnce("driftfoldinc", dir)(stageFile(inc))
       val ckpt = GraftSession.freshGatePath("driftfoldckpt", dir)
       // the ledger IS the sink: each batch folds as its own
       // inc=b<batchId> partition, so a replay rewrites only its own
@@ -3233,8 +3224,7 @@ object QueriesScale {
           d.filter(pmod(col("doc_id"), lit(3)) === 0), "text", p))
       val inc = d.filter(pmod(col("doc_id"), lit(9)) === 4)
         .select(col("doc_id"), col("text"))
-      val incDir = GraftSession.freshGatePath("driftstream", dir)
-      inc.coalesce(1).write.mode("overwrite").parquet(incDir)
+      val incDir = stageFresh(inc, "driftstream", dir)
       streamTwin(s, dir, "drift", incDir, inc.schema) { (b, _) =>
         TextAnalysis.driftWithRef(s, path, b, "text")
       }
@@ -3287,8 +3277,7 @@ object QueriesScale {
         Similarity.writePcaModel(e, "vec_id", "embedding", p, scale = 1000L, iters = 3))
       val inc = e.filter(pmod(col("vec_id"), lit(9)) === 4)
         .select(col("vec_id"), col("embedding"))
-      val incDir = GraftSession.freshGatePath("pcastream", dir)
-      inc.coalesce(1).write.mode("overwrite").parquet(incDir)
+      val incDir = stageFresh(inc, "pcastream", dir)
       streamTwin(s, dir, "pca", incDir, inc.schema) { (b, _) =>
         Similarity.projectWithPcaModel(s, path, b, "vec_id", "embedding")
       }.orderBy(col("vec_id"))
@@ -3408,8 +3397,7 @@ object QueriesScale {
       val qs = retrievalQueries(s)
       val indexPath = buildOnce("bm25sidx", dir)(p =>
         TextAnalysis.writeBm25Index(d, "doc_id", "text", p))
-      val qDir = GraftSession.freshGatePath("prfqstream", dir)
-      qs.coalesce(1).write.mode("overwrite").parquet(qDir)
+      val qDir = stageFresh(qs, "prfqstream", dir)
       streamTwin(s, dir, "prf", qDir, qs.schema) { (b, _) =>
         TextAnalysis.probeBm25IndexPrf(s, indexPath, b, "query_id", "qtext",
           d, "doc_id", "text", k = 5)
@@ -3494,8 +3482,7 @@ object QueriesScale {
             .select((col("doc_id") + 50000).as("doc_id"),
               concat(col("text"), lit(" fresh addendum")).as("text")))
         val diff = ChangeCapture.snapshotDiff(old, newSnap, Seq("doc_id"), Seq("text"))
-        val chDir = GraftSession.freshGatePath("cdcchanges", dir)
-        diff.coalesce(1).write.mode("overwrite").parquet(chDir)
+        val chDir = stageFresh(diff, "cdcchanges", dir)
         val ckpt = GraftSession.freshGatePath("cdcckpt", dir)
         EventsStream.foreachIncrement(s, chDir, diff.schema, ckpt) { (b, bid) =>
           TextAnalysis.applyCdcToBm25Index(b, "doc_id", "text", p, batchId = s"sb$bid")
@@ -3560,8 +3547,7 @@ object QueriesScale {
           d, "doc_id", "text", d.filter(col("lang") === "de"), "text", p))
       val inc = d.filter(pmod(col("doc_id"), lit(9)) === 4)
         .select(col("doc_id"), col("text"))
-      val incDir = GraftSession.freshGatePath("dsirstream", dir)
-      inc.coalesce(1).write.mode("overwrite").parquet(incDir)
+      val incDir = stageFresh(inc, "dsirstream", dir)
       streamTwin(s, dir, "dsir", incDir, inc.schema) { (b, _) =>
         TextAnalysis.scoreWithAffinityWeights(s, wPath, b, "doc_id", "text")
       }.orderBy(col("doc_id"))
@@ -3588,8 +3574,7 @@ object QueriesScale {
       val qs = retrievalQueries(s)
       val indexPath = buildOnce("bm25sidx", dir)(p =>
         TextAnalysis.writeBm25Index(docs(s, dir), "doc_id", "text", p))
-      val qDir = GraftSession.freshGatePath("bm25qstream", dir)
-      qs.coalesce(1).write.mode("overwrite").parquet(qDir)
+      val qDir = stageFresh(qs, "bm25qstream", dir)
       streamTwin(s, dir, "bm25", qDir, qs.schema) { (b, _) =>
         TextAnalysis.probeBm25Index(s, indexPath, b, "query_id", "qtext", k = 5)
       }.orderBy(col("query_id"), col("rank"))
@@ -3606,8 +3591,7 @@ object QueriesScale {
         Similarity.writeIvfIndex(e, "vec_id", "embedding", p, nCells = 16,
           layout = Similarity.IvfLayout.Quantized))
       val qs = e.filter(col("vec_id") < 5).select(col("vec_id"), col("embedding"))
-      val qDir = GraftSession.freshGatePath("annqstream", dir)
-      qs.coalesce(1).write.mode("overwrite").parquet(qDir)
+      val qDir = stageFresh(qs, "annqstream", dir)
       streamTwin(s, dir, "ann", qDir, qs.schema) { (b, _) =>
         Similarity.probeIvfIndexQuantized(s, indexPath, b, "vec_id", "embedding", k = 3, nProbe = 4)
       }
@@ -3715,8 +3699,7 @@ object QueriesScale {
         TextAnalysis.writeBm25Index(d, "doc_id", "text", p))
       val ivfPath = buildOnce("ivfbase", dir)(p =>
         Similarity.writeIvfIndex(e, "vec_id", "embedding", p, nCells = 16))
-      val qDir = GraftSession.freshGatePath("fusionqstream", dir)
-      qs.coalesce(1).write.mode("overwrite").parquet(qDir)
+      val qDir = stageFresh(qs, "fusionqstream", dir)
       streamTwin(s, dir, "fusion", qDir, qs.schema) { (b, _) =>
         val lex = TextAnalysis.probeBm25Index(s, bmPath, b, "query_id", "qtext", k = 20)
           .select(col("query_id"), col("doc_id"), col("rank").as("lex_rank"))
@@ -3762,8 +3745,7 @@ object QueriesScale {
       val qs = retrievalQueries(s)
       val indexPath = buildOnce("bm25sidx", dir)(p =>
         TextAnalysis.writeBm25Index(d, "doc_id", "text", p))
-      val qDir = GraftSession.freshGatePath("bm25mstream", dir)
-      qs.coalesce(1).write.mode("overwrite").parquet(qDir)
+      val qDir = stageFresh(qs, "bm25mstream", dir)
       streamTwin(s, dir, "bm25m", qDir, qs.schema) { (b, _) =>
         val top = TextAnalysis.probeBm25Index(s, indexPath, b, "query_id", "qtext", k = 10)
           .select(col("query_id"), col("doc_id"), col("rank"))
@@ -3905,8 +3887,7 @@ object QueriesScale {
         .select(col("doc_id"), col("text"))
       // read-only staged increment -> memoizable (r19, the
       // s9_stream_ingest precedent)
-      val incDir = buildOnce("contamstreaminc", dir)(p =>
-        inc.coalesce(1).write.mode("overwrite").parquet(p))
+      val incDir = buildOnce("contamstreaminc", dir)(stageFile(inc))
       streamTwin(s, dir, "contam", incDir, inc.schema) { (b, _) =>
         CorpusOps.contaminationProbe(s, path, b, "doc_id", "text", minShared = 8)
       }.orderBy(col("id"), col("bench_id"))
@@ -4032,8 +4013,7 @@ object QueriesScale {
         TextAnalysis.writeBpeMerges(d, "text", p, nMerges = 10))
       val inc = d.filter(pmod(col("doc_id"), lit(9)) === 4)
         .select(col("doc_id"), col("text"))
-      val incDir = GraftSession.freshGatePath("bpestream", dir)
-      inc.coalesce(1).write.mode("overwrite").parquet(incDir)
+      val incDir = stageFresh(inc, "bpestream", dir)
       streamTwin(s, dir, "bpe", incDir, inc.schema) { (b, _) =>
         TextAnalysis.encodeWithBpeMerges(s, mergesPath, b, "doc_id", "text")
       }.orderBy(col("doc_id"))
@@ -4147,8 +4127,7 @@ object QueriesScale {
         .select(col("doc_id"), col("text"))
       val mPath = buildOnce("currmanstream", dir)(p =>
         CorpusOps.writeCurriculumManifest(base, "doc_id", "text", shards = 4, p))
-      val incDir = GraftSession.freshGatePath("currstream", dir)
-      inc.coalesce(1).write.mode("overwrite").parquet(incDir)
+      val incDir = stageFresh(inc, "currstream", dir)
       streamTwin(s, dir, "curr", incDir, inc.schema) { (b, bid) =>
         CorpusOps.appendToCurriculum(s, mPath, b, "doc_id", "text", s"b$bid")
       }
@@ -4264,8 +4243,7 @@ object QueriesScale {
         .select(col("doc_id"), col("text"))
       val mPath = buildOnce("shardmanstream", dir)(p =>
         CorpusOps.writeShardManifest(base, "doc_id", "text", shards = 8, p))
-      val incDir = GraftSession.freshGatePath("shardstream", dir)
-      inc.coalesce(1).write.mode("overwrite").parquet(incDir)
+      val incDir = stageFresh(inc, "shardstream", dir)
       val outDir = GraftSession.freshGatePath("shardout", dir)
       val ckpt   = GraftSession.freshGatePath("shardckpt", dir)
       // read back directly, not through streamTwin: the diagnostic
@@ -4407,8 +4385,7 @@ object QueriesScale {
       // out of the timed window exactly like the index build; the
       // checkpoint and sink stay fresh per run, so every measured run
       // still starts a stream and processes the full batch.
-      val incDir = buildOnce("canonstreaminc", dir)(p =>
-        inc.coalesce(1).write.mode("overwrite").parquet(p))
+      val incDir = buildOnce("canonstreaminc", dir)(stageFile(inc))
       streamTwin(s, dir, "canon", incDir, inc.schema) { (b, _) =>
         Dedup.canonDedupWithIndex(s, path, b, "doc_id", "text")
       }.orderBy(col("doc_id"))
@@ -4501,8 +4478,7 @@ object QueriesScale {
           d.filter(pmod(col("doc_id"), lit(3)) === 0), "doc_id", "text", p))
       val inc = d.filter(pmod(col("doc_id"), lit(9)) === 4)
         .select(col("doc_id"), col("text"))
-      val incDir = GraftSession.freshGatePath("winnowstream", dir)
-      inc.coalesce(1).write.mode("overwrite").parquet(incDir)
+      val incDir = stageFresh(inc, "winnowstream", dir)
       streamTwin(s, dir, "winnow", incDir, inc.schema) { (b, _) =>
         TextAnalysis.winnowOverlapWithIndex(s, path, b, "doc_id", "text")
       }.orderBy(col("doc_ref"), col("doc_inc"))
@@ -4657,47 +4633,34 @@ object QueriesScale {
 
     // ---- stream-static dim enrichment (broadcast dim inside the
     // micro-batch; oracle = the equivalent batch join+rollup)
-    "s9_stream_enrich" -> ((s, dir) => {
-      val schema = s.read.parquet(s"$dir/events.parquet").schema
-      val name   = s"stream_enrich_${streamN.incrementAndGet()}"
-      val q = EventsStream.streamEnrichedCounts(s, dir, schema, name, nat(s, dir),
-        globFilter = Some("events.parquet"))
-      q.awaitTermination()
-      s.table(name).orderBy(col("n_name"))
-    }),
+    "s9_stream_enrich" -> ((s, dir) =>
+      memoryStream(s, dir, "enrich") { (schema, name) =>
+        EventsStream.streamEnrichedCounts(s, dir, schema, name, nat(s, dir),
+          globFilter = Some("events.parquet"))
+      }.orderBy(col("n_name"))),
 
     // ---- the corpus curation ops are STREAM-READY unchanged: the
     // same gopherFilter transform (pure stateless column algebra)
     // runs over a document stream in append mode — batch output IS
     // the oracle. What makes this free is the design rule that the
     // quality/profile family is per-row algebra with no shuffle.
-    "s9_stream_quality" -> ((s, dir) => {
-      import org.apache.spark.sql.streaming.Trigger
-      val schema = s.read.parquet(s"$dir/documents.parquet").schema
-      val name   = s"stream_quality_${streamN.incrementAndGet()}"
-      val src = s.readStream.schema(schema)
-        .option("pathGlobFilter", "documents.parquet").parquet(dir)
-      val q = CorpusOps.gopherFilter(src, "text",
-          minTokens = 20, maxTokens = 80, minStopwordHits = 1)
-        .select(col("doc_id"), col("keep").cast("int").as("keep"), col("drop_reason"))
-        .writeStream.outputMode("append").format("memory").queryName(name)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      s.table(name).orderBy(col("doc_id"))
-    }),
+    "s9_stream_quality" -> ((s, dir) =>
+      memoryStream(s, dir, "quality", "documents") { (schema, name) =>
+        val src = EventsStream.source(s, dir, schema, globFilter = Some("documents.parquet"))
+        EventsStream.run(CorpusOps.gopherFilter(src, "text",
+            minTokens = 20, maxTokens = 80, minStopwordHits = 1)
+          .select(col("doc_id"), col("keep").cast("int").as("keep"), col("drop_reason")),
+          "append", Sink.Memory(name))
+      }.orderBy(col("doc_id"))),
 
     // ---- stream-stream time-bounded join (watermarks both sides +
     // event-time bound in the condition → evictable state; inner
     // append emits exactly the batch join, which IS the oracle)
-    "s9_stream_join" -> ((s, dir) => {
-      val schema = s.read.parquet(s"$dir/events.parquet").schema
-      val name   = s"stream_join_${streamN.incrementAndGet()}"
-      val q = EventsStream.streamViewPurchaseJoin(s, dir, schema, name,
-        prep = GraftSession.tsAsTimestamp,
-        globFilter = Some("events.parquet"))
-      q.awaitTermination()
-      s.table(name).orderBy(col("view_id"), col("pts_us"))
-    }),
+    "s9_stream_join" -> ((s, dir) =>
+      memoryStream(s, dir, "join") { (schema, name) =>
+        EventsStream.streamViewPurchaseJoin(s, dir, schema, name,
+          prep = GraftSession.tsAsTimestamp, globFilter = Some("events.parquet"))
+      }.orderBy(col("view_id"), col("pts_us"))),
 
     "x_media_features" -> ((s, dir) => {
       // payloadLen 64 = one sha2 hex exactly (the oracle models 64 bytes)

@@ -156,7 +156,7 @@ object EventAnalytics {
       usCol: String,
       steps: Seq[String],
       windowUs: Long,
-      maxEventsPerKey: Int = DefaultMaxEventsPerKey
+      maxEventsPerKey: Int
   ): DataFrame = {
     require(steps.nonEmpty, "funnel needs at least one step")
     val nSteps = steps.length

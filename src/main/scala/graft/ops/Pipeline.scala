@@ -211,7 +211,7 @@ object Pipeline {
       partitionCols: Seq[String] = Nil
   ): DataFrame = {
     import graft.functions.TextFns
-    val renamed = TextFns.snakifyColumns(df.columns).foldLeft(df) {
+    val renamed = TextFns.snakifyColumns(df.columns.toIndexedSeq).foldLeft(df) {
       case (d, (from, to)) => if (from == to) d else d.withColumnRenamed(from, to)
     }
     renamed.write.mode("overwrite").partitionBy(partitionCols: _*).parquet(path)

@@ -1411,7 +1411,7 @@ object Similarity {
       .withColumn("qdist", cosine(col("qv"), col("centroid")))
       .withColumn("prank", row_number().over(wProbe))
       .filter(col("prank") <= nProbe)
-      .select(q.columns.map(col) ++ Seq(col("cell_id"), col("prank")): _*)
+      .select(q.columns.toSeq.map(col) ++ Seq(col("cell_id"), col("prank")): _*)
   }
 
   /** The probed cell ids as a driver-side IN-list — envelope-sized
@@ -1730,7 +1730,7 @@ object Similarity {
     * 0-indexed dimension, exact in both engines (floor of a
     * correctly-rounded IEEE product).
     */
-  private def quantized(df: DataFrame, vecCol: String, scale: Long = 1000L): DataFrame =
+  private def quantized(df: DataFrame, vecCol: String, scale: Long): DataFrame =
     df.select(col("vec_id"), posexplode(col(vecCol)).as(Seq("i", "__x")))
       .select(col("vec_id"), col("i"),
         floor(col("__x").cast("double") * lit(scale.toDouble)).cast("long").as("q"))

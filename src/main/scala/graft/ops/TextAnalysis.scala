@@ -644,12 +644,6 @@ object TextAnalysis {
       tot.getLong(0), tot.getLong(1), oovBits)
   }
 
-  /** The (w, cpos, cneg) vocabulary table of [[nbQualityScore]],
-    * pruned on total class count for broadcast boundedness.
-    */
-  private def nbVocab(rt: DataFrame, minCount: Long): DataFrame =
-    nbVocabAll(rt).filter(col("cpos") + col("cneg") >= minCount)
-
   /** The UNPRUNED per-word class counts — the one corpus-scale
     * aggregation of the NB family; totals and the pruned vocabulary
     * both derive from it (r19).

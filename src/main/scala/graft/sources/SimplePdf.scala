@@ -658,7 +658,7 @@ object SimplePdfExtractor {
     * substring match would feed un-85-decoded text to the LZW table
     * and emit mojibake.
     */
-  private def decodedStream(o: PdfObj, byNum: Map[Int, PdfObj] = Map.empty): Option[String] =
+  private def decodedStream(o: PdfObj, byNum: Map[Int, PdfObj]): Option[String] =
     o.stream.flatMap { data =>
       filterNamesOf(o.dict) match {
         case Some(Vector()) => Some(new String(data, ISO_8859_1))

@@ -30,8 +30,78 @@ case class UserFunnel(user_id: Long, funnel_depth: Int)
   * memoization). The engine runs the same tumbling-window aggregation
   * in batch and streaming — identical frames, so the batch query IS
   * the oracle for the stream.
+  *
+  * Every stream here is one [[source]] read, the batch operator, and
+  * one [[run]] into a [[Sink]].
   */
 object EventsStream {
+
+  /** Where a stream's rows go.
+    *
+    * [[Sink.Memory]] is the synchronous local harness: an in-memory
+    * table named `queryName` that gates and specs read back. It holds
+    * the result on the driver, and in complete mode re-materializes
+    * the whole table every trigger — a driver bottleneck the moment
+    * the key cardinality grows.
+    *
+    * [[Sink.Files]] is the production path: parquet under `outDir`,
+    * exactly-once through the commit log under `checkpointDir` (a
+    * re-run with the same checkpoint writes nothing twice), and the
+    * result never passes through the driver. A file sink only appends,
+    * so a windowed stream writes a window once the watermark passes its
+    * end; windows still open at end-of-stream stay in state until a
+    * later run's data advances the watermark — that is the exactly-once
+    * contract, not data loss.
+    *
+    * Each stream that takes a `Sink` picks its output mode per sink.
+    */
+  sealed trait Sink
+  object Sink {
+    final case class Memory(queryName: String) extends Sink
+    final case class Files(outDir: String, checkpointDir: String) extends Sink
+    /** `foreachBatch` under `checkpointDir`: each micro-batch reaches
+      * `fold` as a static frame with its batch id. Built only here, by
+      * [[foreachIncrement]] and the user-stats file sink.
+      */
+    private[streaming] final case class Batches(
+        checkpointDir: String, fold: (DataFrame, Long) => Unit) extends Sink
+  }
+
+  /** THE stream source: the parquet files under `dir` with a fixed
+    * `schema` (a file stream cannot infer one), only names matching
+    * `globFilter` if given, at most `maxFilesPerTrigger` files per
+    * micro-batch (`None` takes every pending file in one batch), and
+    * `prep` adapting raw columns (e.g. epoch-nanos long → timestamp)
+    * before any watermark is applied.
+    */
+  private[graft] def source(
+      spark: SparkSession,
+      dir: String,
+      schema: StructType,
+      prep: DataFrame => DataFrame = identity,
+      globFilter: Option[String] = None,
+      maxFilesPerTrigger: Option[Int] = None
+  ): DataFrame = {
+    val reader0 = spark.readStream.schema(schema)
+    val reader1 = globFilter.fold(reader0)(g => reader0.option("pathGlobFilter", g))
+    val reader  = maxFilesPerTrigger.fold(reader1)(n => reader1.option("maxFilesPerTrigger", n.toLong))
+    prep(reader.parquet(dir))
+  }
+
+  /** THE sink step: `rows` in output `mode` into `sink`, as one
+    * `AvailableNow` run that drains what is pending and stops.
+    */
+  private[graft] def run(rows: DataFrame, mode: String, sink: Sink): StreamingQuery = {
+    val writer = rows.writeStream.outputMode(mode)
+    (sink match {
+      case Sink.Memory(queryName) => writer.format("memory").queryName(queryName)
+      case Sink.Files(outDir, checkpointDir) =>
+        writer.format("parquet").option("path", outDir)
+          .option("checkpointLocation", checkpointDir)
+      case Sink.Batches(checkpointDir, fold) =>
+        writer.foreachBatch(fold).option("checkpointLocation", checkpointDir)
+    }).trigger(Trigger.AvailableNow()).start()
+  }
 
   /** Tumbling-window event rollup (batch form, oracle-checkable).
     * value sums go through decimal so the partial-agg sum is exact
@@ -65,9 +135,7 @@ object EventsStream {
 
   /** The same enrichment as a file-source stream (stream-static inner
     * join, supported without watermark state: the static side is
-    * fixed per batch). Complete-mode memory sink for the local
-    * harness; production form is the same query over a parquet/
-    * foreachBatch sink like the other rollups.
+    * fixed per batch), complete mode into a memory sink.
     */
   def streamEnrichedCounts(
       spark: SparkSession,
@@ -78,33 +146,8 @@ object EventsStream {
       prep: DataFrame => DataFrame = identity,
       globFilter: Option[String] = None
   ): StreamingQuery =
-    completeToMemory(spark, dir, schema, queryName, prep, globFilter)(
-      src => enrichedCounts(src, dim))
-
-  /** The file-reader → complete-mode memory-sink scaffold every
-    * "batch form IS the oracle" windowed stream shares — ONE
-    * definition of the reader options and sink/trigger contract.
-    */
-  private def completeToMemory(
-      spark: SparkSession,
-      dir: String,
-      schema: StructType,
-      queryName: String,
-      prep: DataFrame => DataFrame,
-      globFilter: Option[String],
-      maxFilesPerTrigger: Option[Int] = None
-  )(body: DataFrame => DataFrame): StreamingQuery = {
-    val reader0 = spark.readStream.schema(schema)
-    val reader1 = globFilter.fold(reader0)(g => reader0.option("pathGlobFilter", g))
-    val reader  = maxFilesPerTrigger.fold(reader1)(n => reader1.option("maxFilesPerTrigger", n))
-    body(prep(reader.parquet(dir)))
-      .writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(queryName)
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
+    run(enrichedCounts(source(spark, dir, schema, prep, globFilter), dim),
+      "complete", Sink.Memory(queryName))
 
   /** THE increment stream: graft's one Structured Streaming form of
     * the reference pipeline's incremental contract, "skip the files
@@ -148,17 +191,9 @@ object EventsStream {
       schema: StructType,
       checkpointDir: String,
       maxFilesPerTrigger: Option[Int] = None
-  )(fold: (DataFrame, Long) => Unit): StreamingQuery = {
-    val reader = spark.readStream.schema(schema)
-    maxFilesPerTrigger.fold(reader)(n => reader.option("maxFilesPerTrigger", n.toLong))
-      .parquet(dir)
-      .writeStream
-      .outputMode("append")
-      .foreachBatch(fold)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
+  )(fold: (DataFrame, Long) => Unit): StreamingQuery =
+    run(source(spark, dir, schema, maxFilesPerTrigger = maxFilesPerTrigger),
+      "append", Sink.Batches(checkpointDir, fold))
 
   /** [[foreachIncrement]] plus the one increment sink: `op`'s rows for
     * batch `bid` land under `outDir/inc=b<bid>` by dynamic partition
@@ -217,42 +252,33 @@ object EventsStream {
       prep: DataFrame => DataFrame = identity,
       globFilter: Option[String] = None
   ): StreamingQuery = {
-    def src: DataFrame = {
-      val reader0 = spark.readStream.schema(schema)
-      val reader  = globFilter.fold(reader0)(g => reader0.option("pathGlobFilter", g))
-      prep(reader.parquet(dir))
-    }
+    def src: DataFrame = source(spark, dir, schema, prep, globFilter)
     val views = src.filter(col("event_type") === "view")
       .select(col("event_id").as("view_id"), col("user_id").as("v_user"), col("ts").as("vts"))
       .withWatermark("vts", "2 hours")
     val purchases = src.filter(col("event_type") === "purchase")
       .select(col("user_id").as("p_user"), col("ts").as("pts"), col("value"))
       .withWatermark("pts", "2 hours")
-    views.join(purchases,
+    run(views.join(purchases,
         col("v_user") === col("p_user") &&
           col("pts") >= col("vts") - expr("interval 1 hour") &&
           col("pts") <= col("vts"))
       .select(col("view_id"), col("v_user").as("user_id"),
         unix_micros(col("vts")).as("vts_us"),
-        unix_micros(col("pts")).as("pts_us"), col("value"))
-      .writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(queryName)
-      .trigger(Trigger.AvailableNow())
-      .start()
+        unix_micros(col("pts")).as("pts_us"), col("value")),
+      "append", Sink.Memory(queryName))
   }
 
   /** Same rollup as a file-source stream with a watermark for late
-    * data; memory sink for synchronous local verification. `prep`
-    * adapts raw columns (e.g. epoch-nanos long → timestamp) before
-    * the event-time watermark is applied.
+    * data. [[Sink.Memory]] runs in complete mode and reports every
+    * window, open ones included; [[Sink.Files]] runs in append mode and
+    * writes each window once the watermark finalizes it.
     */
   def streamWindowedCounts(
       spark: SparkSession,
       dir: String,
       schema: StructType,
-      queryName: String,
+      sink: Sink,
       windowExpr: String = "1 hour",
       watermark: String = "2 hours",
       prep: DataFrame => DataFrame = identity,
@@ -260,8 +286,12 @@ object EventsStream {
   ): StreamingQuery =
     // the batch form IS the oracle — share the aggregation body so the
     // two can't desynchronize
-    completeToMemory(spark, dir, schema, queryName, prep, globFilter)(
-      src => windowedCounts(src.withWatermark("ts", watermark), windowExpr))
+    run(windowedCounts(source(spark, dir, schema, prep, globFilter)
+        .withWatermark("ts", watermark), windowExpr),
+      sink match {
+        case _: Sink.Memory => "complete"
+        case _              => "append"
+      }, sink)
 
   /** Windowed quantile SKETCH on the stream (batch form): per
     * (hour, event_type) median of the value in integer cents via the
@@ -293,8 +323,9 @@ object EventsStream {
       globFilter: Option[String] = None,
       maxFilesPerTrigger: Option[Int] = None // spec hook: multi-batch state restore
   ): StreamingQuery =
-    completeToMemory(spark, dir, schema, queryName, prep, globFilter, maxFilesPerTrigger)(
-      src => windowedQuantiles(src.withWatermark("ts", watermark)))
+    run(windowedQuantiles(source(spark, dir, schema, prep, globFilter, maxFilesPerTrigger)
+        .withWatermark("ts", watermark)),
+      "complete", Sink.Memory(queryName))
 
   /** Session-window rollup (batch form): per-user events within `gap`
     * of each other coalesce into one session
@@ -315,69 +346,28 @@ object EventsStream {
         unix_micros(col("w.end")).as("session_end_us"),
         col("n_events"), col("sum_value"))
 
-  /** Session windows as a stream: append mode (session windows do not
-    * support complete), so the sink receives exactly the sessions the
-    * advanced watermark finalized — sessions whose end is at or before
-    * max(event time) − `watermark` when the source is exhausted
-    * (AvailableNow). The trailing per-user sessions stay in state; a
-    * longer-running stream emits them when later data advances the
-    * watermark. The oracle replicates the finalization cut.
+  /** Session windows as a stream: append mode into either sink
+    * (session windows do not support complete), so the sink receives
+    * exactly the sessions the advanced watermark finalized — sessions
+    * whose end is at or before max(event time) − `watermark` when the
+    * source is exhausted (AvailableNow). The trailing per-user sessions
+    * stay in state; a longer-running stream emits them when later data
+    * advances the watermark. The oracle replicates the finalization
+    * cut.
     */
   def streamSessionCounts(
       spark: SparkSession,
       dir: String,
       schema: StructType,
-      queryName: String,
+      sink: Sink,
       gap: String = "1 hour",
       watermark: String = "2 hours",
       prep: DataFrame => DataFrame = identity,
       globFilter: Option[String] = None
-  ): StreamingQuery = {
-    val reader0 = spark.readStream.schema(schema)
-    val reader  = globFilter.fold(reader0)(g => reader0.option("pathGlobFilter", g))
-    val src     = prep(reader.parquet(dir))
-    sessionCounts(src.withWatermark("ts", watermark), gap)
-      .writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(queryName)
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
-
-  /** The mapGroupsWithState body shared by the memory-sink harness and
-    * the foreachBatch file sink — one definition so the two can't
-    * desynchronize.
-    */
-  private def userStatsStream(
-      spark: SparkSession,
-      dir: String,
-      schema: StructType,
-      globFilter: Option[String]) = {
-    import spark.implicits._
-    val reader0 = spark.readStream.schema(schema)
-    val reader  = globFilter.fold(reader0)(g => reader0.option("pathGlobFilter", g))
-    // EventRow.ts is epoch-nanos Long; the driver's events layout may
-    // carry ts as a µs timestamp instead (round-7 regeneration), so
-    // normalize at the stream boundary — identity on the long layout
-    graft.GraftSession.tsToNanos(reader.parquet(dir))
-      .as[EventRow]
-      .groupByKey(_.user_id)
-      .mapGroupsWithState[UserStats, UserStats](GroupStateTimeout.NoTimeout) {
-        (uid: Long, rows: Iterator[EventRow], state: GroupState[UserStats]) =>
-          val init = state.getOption.getOrElse(
-            UserStats(uid, 0L, 0L, Long.MaxValue, Long.MinValue))
-          val s = rows.foldLeft(init) { (acc, e) =>
-            UserStats(uid,
-              acc.n_events + 1,
-              acc.sum_cents + math.round(e.value * 100),
-              math.min(acc.first_ts_us, e.ts / 1000),
-              math.max(acc.last_ts_us, e.ts / 1000))
-          }
-          state.update(s)
-          s
-      }
-  }
+  ): StreamingQuery =
+    run(sessionCounts(source(spark, dir, schema, prep, globFilter)
+        .withWatermark("ts", watermark), gap),
+      "append", sink)
 
   /** Streaming funnel: the per-user earliest-chain state machine of
     * [[graft.ops.EventAnalytics.funnelDepth]] carried as stream state
@@ -405,12 +395,11 @@ object EventsStream {
   ): StreamingQuery = {
     import spark.implicits._
     val stepIdx = steps.zipWithIndex.toMap
-    val reader0 = spark.readStream.schema(schema)
-    val reader1 = globFilter.fold(reader0)(g => reader0.option("pathGlobFilter", g))
-    val reader  = maxFilesPerTrigger.fold(reader1)(n => reader1.option("maxFilesPerTrigger", n))
-    // same ts-layout normalization as userStatsStream: EventRow needs
-    // epoch-nanos Long, the source may carry a µs timestamp
-    graft.GraftSession.tsToNanos(reader.parquet(dir))
+    // EventRow needs epoch-nanos Long; the driver's events layout may
+    // carry ts as a µs timestamp instead (round-7 regeneration), so
+    // normalize at the stream boundary — identity on the long layout
+    val funnels = source(spark, dir, schema, graft.GraftSession.tsToNanos, globFilter,
+        maxFilesPerTrigger)
       .as[EventRow]
       .groupByKey(_.user_id)
       .mapGroupsWithState[FunnelState, UserFunnel](GroupStateTimeout.NoTimeout) {
@@ -429,12 +418,7 @@ object EventsStream {
           state.update(s)
           UserFunnel(uid, s.depth)
       }
-      .writeStream
-      .outputMode("update")
-      .format("memory")
-      .queryName(queryName)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    run(funnels.toDF(), "update", Sink.Memory(queryName))
   }
 
   /** Custom-state streaming: per-user running stats via
@@ -442,120 +426,52 @@ object EventsStream {
     * engine — arbitrary state the built-in aggs can't express).
     * With an AvailableNow run the final state per key equals the batch
     * group-by, which is the oracle.
+    *
+    * Update mode into either sink. [[Sink.Files]] appends each
+    * micro-batch's updated rows tagged with its `batch_id`: the sink
+    * is append-only (a retried batch writes the same rows under the
+    * same batch_id again, never corrupting earlier output), and
+    * [[latestUserStats]] resolves each user to their highest-batch
+    * row, making the pair idempotent at read time without a
+    * transactional store.
     */
   def streamUserStats(
       spark: SparkSession,
       dir: String,
       schema: StructType,
-      queryName: String,
-      globFilter: Option[String] = None
-  ): StreamingQuery =
-    userStatsStream(spark, dir, schema, globFilter)
-      .writeStream
-      .outputMode("update")
-      .format("memory")
-      .queryName(queryName)
-      .trigger(Trigger.AvailableNow())
-      .start()
-
-  /** PRODUCTION SCALE PATH for the windowed rollup: parquet file sink
-    * in APPEND mode. The memory-sink `streamWindowedCounts` above is
-    * the local verification harness only — complete mode
-    * re-materializes the whole result table on the driver every
-    * trigger, which is a driver bottleneck the moment the window
-    * cardinality grows. The file sink streams each finalized window
-    * out exactly once (the sink commit log makes re-runs idempotent)
-    * and never holds the result on the driver. Append-mode semantics:
-    * a window is emitted only once the watermark passes its end, so
-    * windows still open at end-of-stream stay in state until a later
-    * run's data advances the watermark — that is the exactly-once
-    * contract, not data loss.
-    */
-  def streamWindowedCountsToParquet(
-      spark: SparkSession,
-      dir: String,
-      schema: StructType,
-      outDir: String,
-      checkpointDir: String,
-      windowExpr: String = "1 hour",
-      watermark: String = "2 hours",
-      prep: DataFrame => DataFrame = identity,
+      sink: Sink,
       globFilter: Option[String] = None
   ): StreamingQuery = {
-    val reader0 = spark.readStream.schema(schema)
-    val reader  = globFilter.fold(reader0)(g => reader0.option("pathGlobFilter", g))
-    val src     = prep(reader.parquet(dir))
-    windowedCounts(src.withWatermark("ts", watermark), windowExpr)
-      .writeStream
-      .outputMode("append")
-      .format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
-
-  /** PRODUCTION SCALE PATH for session windows: append-mode parquet
-    * with the sink commit log for exactly-once — identical semantics
-    * to [[streamSessionCounts]]'s memory-sink harness (only
-    * watermark-finalized sessions are ever written; open trailing
-    * sessions stay in state until later data closes them).
-    */
-  def streamSessionCountsToParquet(
-      spark: SparkSession,
-      dir: String,
-      schema: StructType,
-      outDir: String,
-      checkpointDir: String,
-      gap: String = "1 hour",
-      watermark: String = "2 hours",
-      prep: DataFrame => DataFrame = identity,
-      globFilter: Option[String] = None
-  ): StreamingQuery = {
-    val reader0 = spark.readStream.schema(schema)
-    val reader  = globFilter.fold(reader0)(g => reader0.option("pathGlobFilter", g))
-    val src     = prep(reader.parquet(dir))
-    sessionCounts(src.withWatermark("ts", watermark), gap)
-      .writeStream
-      .outputMode("append")
-      .format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
-
-  /** PRODUCTION SCALE PATH for the custom-state stats: `foreachBatch`
-    * appends each micro-batch's updated rows tagged with the batch id.
-    * The sink is append-only (a retried batch writes the same rows
-    * under the same batch_id again, never corrupting earlier output);
-    * `latestUserStats` resolves each user to their highest-batch row,
-    * making the pair idempotent at read time without a transactional
-    * store.
-    */
-  def streamUserStatsToParquet(
-      spark: SparkSession,
-      dir: String,
-      schema: StructType,
-      outDir: String,
-      checkpointDir: String,
-      globFilter: Option[String] = None
-  ): StreamingQuery =
-    userStatsStream(spark, dir, schema, globFilter)
-      .writeStream
-      .outputMode("update")
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[UserStats], batchId: Long) =>
-        batch.withColumn("batch_id", lit(batchId))
-          .write.mode("append").parquet(outDir)
-        ()
+    import spark.implicits._
+    // same ts-layout normalization as streamFunnelDepth
+    val stats = source(spark, dir, schema, graft.GraftSession.tsToNanos, globFilter)
+      .as[EventRow]
+      .groupByKey(_.user_id)
+      .mapGroupsWithState[UserStats, UserStats](GroupStateTimeout.NoTimeout) {
+        (uid: Long, rows: Iterator[EventRow], state: GroupState[UserStats]) =>
+          val init = state.getOption.getOrElse(
+            UserStats(uid, 0L, 0L, Long.MaxValue, Long.MinValue))
+          val s = rows.foldLeft(init) { (acc, e) =>
+            UserStats(uid,
+              acc.n_events + 1,
+              acc.sum_cents + math.round(e.value * 100),
+              math.min(acc.first_ts_us, e.ts / 1000),
+              math.max(acc.last_ts_us, e.ts / 1000))
+          }
+          state.update(s)
+          s
       }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    run(stats.toDF(), "update", sink match {
+      case Sink.Files(outDir, checkpointDir) =>
+        Sink.Batches(checkpointDir, (batch, batchId) =>
+          batch.withColumn("batch_id", lit(batchId)).write.mode("append").parquet(outDir))
+      case other => other
+    })
+  }
 
-  /** Resolve the foreachBatch sink to the latest state per user:
-    * within a batch each user appears at most once, so the highest
-    * batch_id row IS the final state.
+  /** Resolve the [[streamUserStats]] file sink to the latest state per
+    * user: within a batch each user appears at most once, so the
+    * highest batch_id row IS the final state.
     */
   def latestUserStats(spark: SparkSession, outDir: String): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
@@ -577,17 +493,9 @@ object EventsStream {
       watermark: String = "2 hours",
       prep: DataFrame => DataFrame = identity,
       globFilter: Option[String] = None
-  ): StreamingQuery = {
-    val reader0 = spark.readStream.schema(schema)
-    val reader  = globFilter.fold(reader0)(g => reader0.option("pathGlobFilter", g))
-    prep(reader.parquet(dir))
-      .withWatermark("ts", watermark)
-      .dropDuplicatesWithinWatermark("user_id", "event_type", "value")
-      .writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(queryName)
-      .trigger(Trigger.AvailableNow())
-      .start()
-}
+  ): StreamingQuery =
+    run(source(spark, dir, schema, prep, globFilter)
+        .withWatermark("ts", watermark)
+        .dropDuplicatesWithinWatermark("user_id", "event_type", "value"),
+      "append", Sink.Memory(queryName))
 }

@@ -1,6 +1,7 @@
 package graft
 
 import graft.streaming.{EventRow, EventsStream}
+import graft.streaming.EventsStream.Sink
 
 import java.nio.file.Files
 
@@ -31,8 +32,8 @@ class StreamFileSinkSpec extends SparkSpecBase {
     val ckp = Files.createTempDirectory("evckp").toString
     writeEvents(src)
     val schema = spark.read.parquet(src).schema
-    val q = EventsStream.streamWindowedCountsToParquet(
-      spark, src, schema, out, ckp, windowExpr = "1 hour", watermark = "1 hour",
+    val q = EventsStream.streamWindowedCounts(
+      spark, src, schema, Sink.Files(out, ckp), windowExpr = "1 hour", watermark = "1 hour",
       prep = df => df.withColumn("ts", GraftSession.nanosToTs(col("ts"))))
     q.awaitTermination()
 
@@ -65,8 +66,8 @@ class StreamFileSinkSpec extends SparkSpecBase {
     }.toDF().write.mode("overwrite").parquet(src)
     val schema = spark.read.parquet(src).schema
     def run(): Unit = {
-      val q = EventsStream.streamWindowedCountsToParquet(
-        spark, src, schema, out, ckp, windowExpr = "1 hour", watermark = "1 hour",
+      val q = EventsStream.streamWindowedCounts(
+        spark, src, schema, Sink.Files(out, ckp), windowExpr = "1 hour", watermark = "1 hour",
         prep = df => df.withColumn("ts", GraftSession.nanosToTs(col("ts"))))
       q.awaitTermination()
     }
@@ -99,13 +100,62 @@ class StreamFileSinkSpec extends SparkSpecBase {
     assert(rows(got) === rows(expected))
   }
 
+  test("windowed counts per sink: Memory reports every window, Files only the finalized ones") {
+    val src = Files.createTempDirectory("evsrc4").toString
+    val out = Files.createTempDirectory("evout4").toString
+    val ckp = Files.createTempDirectory("evckp4").toString
+    writeEvents(src)
+    val schema = spark.read.parquet(src).schema
+    val prep = (df: org.apache.spark.sql.DataFrame) =>
+      df.withColumn("ts", GraftSession.nanosToTs(col("ts")))
+    for (sink <- Seq(Sink.Memory("win_per_sink"), Sink.Files(out, ckp)))
+      EventsStream.streamWindowedCounts(spark, src, schema, sink,
+        watermark = "1 hour", prep = prep).awaitTermination()
+
+    val maxMs = (BaseNs + (N - 1).toLong * StepNs) / 1000000L
+    val wmMs  = maxMs - HourMs
+    val batch = EventsStream.windowedCounts(prep(spark.read.parquet(src)))
+      .withColumn("end_ms",
+        (unix_timestamp(to_timestamp(col("window_start"))) * 1000 + HourMs))
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("window_start", "event_type", "n_events", "sum_value")
+        .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2), r.getDouble(3)))
+        .sortBy(t => (t._1, t._2)).toSeq
+    val all       = rows(batch)
+    val finalized = rows(batch.filter(col("end_ms") <= wmMs))
+    assert(finalized.nonEmpty && finalized.length < all.length,
+      "fixture must hold both finalized and open windows")
+    assert(rows(spark.table("win_per_sink")) === all)
+    assert(rows(spark.read.parquet(out)) === finalized)
+  }
+
+  test("stageFresh stages one file, which streamTwin delivers as one micro-batch") {
+    // the rule the union-batch oracles rest on (s9_stream_ingest,
+    // s9_stream_canon): a many-partition increment lands as ONE
+    // parquet file and reaches the sink as batch 0 alone
+    val dir = Files.createTempDirectory("stagedir").toString
+    val inc = spark.range(0L, 64L, 1L, 4).toDF("id")
+    assert(inc.rdd.getNumPartitions >= 4)
+    val staged = QueriesScale.stageFresh(inc, "stagespec", dir)
+    val parts = new java.io.File(staged).list()
+      .filter(n => n.startsWith("part-") && n.endsWith(".parquet"))
+    assert(parts.length === 1, parts.mkString(", "))
+    val got = QueriesScale.streamTwin(spark, dir, "stagespec", staged, inc.schema) {
+      (b, _) => b
+    }
+    assert(got.count() === 64L)
+    val incs = new java.io.File(GraftSession.gatePath("stagespecout", dir)).list()
+      .filter(_.startsWith("inc="))
+    assert(incs.toSeq === Seq("inc=b0"))
+  }
+
   test("foreachBatch sink + latestUserStats equals the batch per-user aggregation") {
     val src = Files.createTempDirectory("evsrc2").toString
     val out = Files.createTempDirectory("evout2").toString
     val ckp = Files.createTempDirectory("evckp2").toString
     writeEvents(src)
     val schema = spark.read.parquet(src).schema
-    val q = EventsStream.streamUserStatsToParquet(spark, src, schema, out, ckp)
+    val q = EventsStream.streamUserStats(spark, src, schema, Sink.Files(out, ckp))
     q.awaitTermination()
 
     val got = EventsStream.latestUserStats(spark, out)
@@ -218,15 +268,15 @@ class StreamSessionSinkSpec extends SparkSpecBase {
     val schema = spark.read.parquet(s"$dir/events.parquet").schema
     val out  = java.nio.file.Files.createTempDirectory("sess-sink").toString
     val ckpt = java.nio.file.Files.createTempDirectory("sess-ckpt").toString
-    val q = graft.streaming.EventsStream.streamSessionCountsToParquet(
-      spark, dir, schema, out, ckpt,
+    val q = graft.streaming.EventsStream.streamSessionCounts(
+      spark, dir, schema, Sink.Files(out, ckpt),
       prep = GraftSession.tsAsTimestamp,
       globFilter = Some("events.parquet"))
     q.awaitTermination()
     val fromSink = spark.read.parquet(out)
       .orderBy("user_id", "session_start_us").collect().toSeq
     val qm = graft.streaming.EventsStream.streamSessionCounts(
-      spark, dir, schema, "sess_sink_ref",
+      spark, dir, schema, Sink.Memory("sess_sink_ref"),
       prep = GraftSession.tsAsTimestamp,
       globFilter = Some("events.parquet"))
     qm.awaitTermination()
@@ -244,7 +294,7 @@ class StreamSessionSpec extends SparkSpecBase {
     val dir    = sf
     val schema = spark.read.parquet(s"$dir/events.parquet").schema
     val q = graft.streaming.EventsStream.streamSessionCounts(
-      spark, dir, schema, "sess_spec",
+      spark, dir, schema, Sink.Memory("sess_spec"),
       prep = GraftSession.tsAsTimestamp,
       globFilter = Some("events.parquet"))
     q.awaitTermination()

@@ -17,7 +17,7 @@ object StreamSessionBench {
     val schema = spark.read.parquet(s"$dir/events.parquet").schema
 
     val t0 = System.nanoTime()
-    val q = EventsStream.streamSessionCounts(spark, dir, schema, "sess_bench",
+    val q = EventsStream.streamSessionCounts(spark, dir, schema, EventsStream.Sink.Memory("sess_bench"),
       prep = GraftSession.tsAsTimestamp,
       globFilter = Some("events.parquet"))
     q.awaitTermination()
